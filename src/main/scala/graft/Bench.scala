@@ -1,6 +1,11 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+
+import graft.streaming.CurationStream
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line for the driver (BENCH_r{N}.json).
@@ -15,12 +20,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session configs (incl. the r21 preferSortMergeJoin=false posture)
-    // live in BenchSession — ONE builder for Bench/BenchOne/PlanDump
+    // live in BenchSession — ONE builder for every bench main and probe
     val spark = BenchSession.build()
-
-    def force(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
 
     val names = SparkEntry.headline.filter(SparkEntry.queries.contains)
 
@@ -32,7 +33,7 @@ object Bench {
     // self-inflicted a ~90 s wait on an idle machine).
     def loadAvg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
 
     // EXTERNAL busy CPUs, self-discounting: (total busy jiffies − this
     // process's jiffies) over a 1 s window, in units of "cpus busy with
@@ -57,7 +58,7 @@ object Bench {
         Thread.sleep(sampleMs)
         val (t1, o1) = (totalBusyJiffies(), ownJiffies())
         ((t1 - t0) - (o1 - o0)).toDouble / 100.0 / (sampleMs / 1000.0)
-      } catch { case _: Throwable => -1.0 }
+      } catch { case NonFatal(_) => -1.0 }
 
     // Load DISCIPLINE (VERDICT r6 item 3, hardened r9 per VERDICT r8
     // wrong#1): wait (bounded) for the machine to be externally idle
@@ -82,8 +83,8 @@ object Bench {
     // Warm-up: JVM + codegen + file listing, untimed. Same failure policy
     // as the timed loop — a broken first query must not abort the whole
     // benchmark before any JSON is emitted (its own timed run records -1).
-    try force(names.head) catch {
-      case e: Throwable => System.err.println(s"[bench] warmup: ${e.getMessage}")
+    try force(spark, sfDir, names.head) catch {
+      case NonFatal(e) => System.err.println(s"[bench] warmup: ${e.getMessage}")
     }
     // Three timed reps per query, INTERLEAVED (three full passes over the
     // query list) and min-taken: single-shot numbers swing ±30% with
@@ -93,21 +94,13 @@ object Bench {
     // r3 §wrong#4). Interleaving separates a query's reps by a full pass
     // (~seconds to minutes), so min-of-3 sees three independent load
     // samples; every rep does all the work, so the min is honest.
-    def timeOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { force(name); true } catch {
-        case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}"); false
-      }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-
     val loadBefore = loadAvg()
     val passExt = new scala.collection.mutable.ArrayBuffer[Double]
     val passes = (1 to 3).map { p =>
       // between-pass gate: shorter bound than the entry gate (a genuinely
       // busy machine should still produce an artifact, just a labeled one)
       passExt += (if (p == 1) externalBusyCpus() else waitForIdle(120))
-      names.map(n => n -> timeOnce(n)).toMap
+      names.map(n => n -> timeOnce(spark, sfDir, n)).toMap
     }
     val loadAfter = loadAvg()
     val loaded = passExt.exists(_ > idleThreshold)
@@ -123,7 +116,6 @@ object Bench {
     // ANN recall@10 vs the exact brute-force ranking, per round: a
     // recall regression in the approximate paths is a quality bug the
     // wall-times cannot see. Computed on the SAME sf dir the timings ran.
-    import org.apache.spark.sql.functions.col
     val annRecalls: Seq[(String, Double)] =
       try {
         val brute = SparkEntry.queries("q33_ann_brute")(spark, sfDir)
@@ -137,7 +129,7 @@ object Bench {
             .join(brute, Seq("query_id", "neighbor_id")).count()
           n -> hits / bruteN
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] recall: ${e.getMessage}"); Seq.empty
       }
     // Pair recall for the embedding near-dup LSH paths (q36b/q36c) vs
@@ -167,7 +159,7 @@ object Bench {
         }
         corpus.unpersist()
         out
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] pair recall: ${e.getMessage}"); Seq.empty
       }
     // Pruned-set recall for blocked semantic dedup (q101b) vs the exact
@@ -207,7 +199,7 @@ object Bench {
             (if (nExact > 0) hits / nExact else -1.0),
           "q101c_semantic_dedup_index" ->
             (if (nExact > 0) hitsServed / nExact else -1.0))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] semantic recall: ${e.getMessage}")
         Seq.empty
       }
@@ -226,33 +218,7 @@ object Bench {
     // query immediately before batch 0 and the banded median
     // normalizes by THIS control, so the band is self-contained in its
     // own load window.
-    var sinkControlSec: Double = -1.0
-    val sinkStats: Seq[graft.streaming.CurationStream.BatchStat] =
-      try {
-        val e = graft.core.Tables.load(spark, sfDir, "embeddings")
-        val seed = e.filter(col("vec_id") % 5 =!= 0)
-        val inc = e.filter(col("vec_id") % 5 === 0)
-        val cents = graft.ops.Similarity.servedCentroids(
-          spark, e, "embedding", "vec_id", k = 8, iters = 2,
-          table = "default.semdedup_centroids").localCheckpoint(true)
-        val keptSeed = seed.join(
-          graft.ops.Dedup.semanticDedupBlocked(seed, "embedding", "vec_id",
-            0.45, cents, probes = 2)
-            .filter(col("kept")).select(col("id")),
-          seed("vec_id") === col("id"))
-          .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
-        val table = "default.semdedup_corpus_bench"
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        graft.core.TableStore.overwriteTable(spark, table, keptSeed)
-        val staged = graft.streaming.CurationStream.stageEmbeddings(inc, parts = 3)
-        sinkControlSec = timeOnce("q12_fact_join")
-        val out = graft.streaming.CurationStream.runSemanticDedupSinkWithStats(
-          spark, staged, table, cents, threshold = 0.45, probes = 2)
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        out
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sink stats: ${e.getMessage}"); Seq.empty
-      }
+    val (sinkControlSec, sinkStats) = sinkSection(spark, sfDir, "default.semdedup_corpus_bench")
     val sinkJson = sinkStats.map(s =>
         f"""{"batch":${s.batchId},"rows":${s.batchRows},"kept":${s.keptRows},"vet_sec":${s.vetSec}%.3f}""")
       .mkString("[", ",", "]")
@@ -299,7 +265,7 @@ object Bench {
         val nodes = e.select(col("vec_id").as("node"),
           when(col("vec_id") % 5 === 0, col("label")).as("seed_label"))
         graft.ops.Graph.labelPropagationWithStats(nodes, edges, iters = 3)._2
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] propagation: ${e.getMessage}")
         Seq.empty
       }
@@ -323,7 +289,7 @@ object Bench {
           p.linearCandidates.toDouble / p.zorderCandidates else -1.0,
          if (p.hilbertCandidates > 0)
           p.linearCandidates.toDouble / p.hilbertCandidates else -1.0)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] zorder: ${e.getMessage}"); (-1.0, -1.0)
       }
 
@@ -421,7 +387,8 @@ object Bench {
       .take(6).map(_._1) ++
       (if (controlsDisagree) Seq(control2Name) else Nil)).distinct
     val adjudications = toAdjudicate.map { q =>
-      val reps = (1 to 3).map(_ => (timeOnce(q), timeOnce(controlName)))
+      val reps = (1 to 3).map(_ =>
+        (timeOnce(spark, sfDir, q), timeOnce(spark, sfDir, controlName)))
       val tMin = reps.map(_._1).filter(_ >= 0)
         .minOption.getOrElse(-1.0)
       val cMin = reps.map(_._2).filter(_ >= 0)
@@ -454,5 +421,57 @@ object Bench {
     val extJson = passExt.map(v => f"$v%.2f").mkString("[", ",", "]")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"ext_cpu_passes":$extJson,"loaded":$loaded,"control":"$controlName","control_sec":$controlSec%.3f,"control_band_mid":$controlBandMid%.2f,"control_ratio":$controlRatio%.3f,"control2":"$control2Name","control2_sec":$control2Sec%.3f,"control2_band_mid":$control2BandMid%.2f,"control2_ratio":$control2Ratio%.3f,"band_flags":$bandFlagsJson,"adjudication":$adjudicationJson,"recall":$recallJson,"sink_batches":$sinkJson,"sink_control_sec":$sinkControlSec%.3f,"sink_vet_median_norm":${sinkVetMedianNorm(controlSec)}%.3f,"propagation_rounds":$propJson,"zorder_skip_ratio":$zratio%.2f,"hilbert_skip_ratio":$hratio%.2f}""")
     spark.stop()
+  }
+
+  private def force(spark: SparkSession, sfDir: String, name: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+
+  /** One forced run of a registered query, in seconds; -1 (logged) when
+    * it fails, so one broken query never aborts the artifact. */
+  private def timeOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    val ok = try { force(spark, sfDir, name); true } catch {
+      case NonFatal(e) => System.err.println(s"[bench] $name: ${e.getMessage}"); false
+    }
+    if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+  }
+
+  /** The streaming semantic-dedup sink section (the q101g loop), shared
+    * with [[BenchSink]] so its drill-down runs exactly this code: 4/5 of
+    * the embeddings, blocked-deduplicated through the served centroid
+    * index, seed `table`; the other 1/5 arrives in 3 staged micro-batches.
+    * The q12 control is timed right before batch 0, in the sink's own
+    * load window. Returns (control seconds, per-batch stats); a failure
+    * is logged and yields no stats (and control -1 if not yet timed). */
+  def sinkSection(spark: SparkSession, sfDir: String,
+      table: String): (Double, Seq[CurationStream.BatchStat]) = {
+    var controlSec = -1.0
+    val stats =
+      try {
+        val e = graft.core.Tables.load(spark, sfDir, "embeddings")
+        val seed = e.filter(col("vec_id") % 5 =!= 0)
+        val inc = e.filter(col("vec_id") % 5 === 0)
+        val cents = graft.ops.Similarity.servedCentroids(
+          spark, e, "embedding", "vec_id", k = 8, iters = 2,
+          table = "default.semdedup_centroids").localCheckpoint(true)
+        val keptSeed = seed.join(
+          graft.ops.Dedup.semanticDedupBlocked(seed, "embedding", "vec_id",
+            0.45, cents, probes = 2)
+            .filter(col("kept")).select(col("id")),
+          seed("vec_id") === col("id"))
+          .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        graft.core.TableStore.overwriteTable(spark, table, keptSeed)
+        val staged = CurationStream.stageEmbeddings(inc, parts = 3)
+        controlSec = timeOnce(spark, sfDir, "q12_fact_join")
+        val out = CurationStream.runSemanticDedupSinkWithStats(
+          spark, staged, table, cents, threshold = 0.45, probes = 2)
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        out
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] sink stats: ${e.getMessage}"); Seq.empty
+      }
+    (controlSec, stats)
   }
 }

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE bench-session builder, shared by [[Bench]], [[BenchOne]] and
-  * [[PlanDump]] (ADVICE r21): each main used to hand-copy the same six
-  * settings, and any future drift would silently invalidate PlanDump's
-  * documented guarantee that "the captured plan is the timed plan".
+/** The ONE bench-session builder, shared by [[Bench]], [[BenchOne]],
+  * [[BenchSink]], [[PlanDump]] and the probes under `graft.tools`
+  * (ADVICE r21): each main used to hand-copy the same six settings, and
+  * any drift silently invalidates a drill-down — PlanDump's guarantee
+  * that "the captured plan is the timed plan", BenchSink's that it
+  * reproduces Bench's sink section.
   *
   * Master/parallelism honor `$SPARK_GRAFT_CPUS` (the driver re-runs the
   * bench at a lower core count to measure scaling — a hard-coded master

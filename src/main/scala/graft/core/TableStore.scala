@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Thrown when a versioned publish loses its compare-and-set check:
@@ -339,7 +341,7 @@ object TableStore {
         case _: org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException =>
           // another writer holds this number — take the next one
           next += 1; fsRetries = 0
-        case e: Throwable if e.getMessage != null &&
+        case NonFatal(e) if e.getMessage != null &&
             e.getMessage.contains("LOCATION_ALREADY_EXISTS") =>
           // an abandoned run's orphan DIRECTORY under an unregistered
           // number: reclaim it and retry the SAME number (bounded — a

@@ -245,8 +245,11 @@ object DedupCluster {
     * IS its component minimum, so `m(a) = root` on both sides and each
     * round re-emits the same (root, member) edges). A canonical edge
     * set (u < v, distinct) is a star forest iff no node appears both as
-    * a parent `u` and a child `v`, which one role-bitmask aggregate per
-    * materialization tests exactly — the same single action that
+    * a parent `u` and a child `v` AND no child `v` appears in two or
+    * more edges — with only the first condition, {(1,3),(2,3)} passes
+    * while node 3 has two parents and the loop would stop with 1 and 2
+    * split. One per-node aggregate (role bitmask plus child count) per
+    * materialization tests both — the same single action that
     * materializes the lazy checkpoint. Versus the previous two-tier
     * (count, xor-hash) signature + `except` confirm, the structural
     * test needs no collision argument AND detects convergence one full
@@ -268,23 +271,19 @@ object DedupCluster {
   // contraction roughly halves diameter per round, so 30 rounds cover
   // diameters far beyond any near-dup cluster seen in practice.
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val trace = sys.env.contains("GRAFT_CC_TRACE")
-    def traced[T](label: String)(f: => T): T =
-      if (!trace) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
     // Star-forest test on a canonical (u < v, distinct) edge set: no
-    // node in both the parent (u) and child (v) role. One exchange by
-    // node (partial bit_or per partition first), then take(1) — and the
-    // action doubles as the checkpoint materialization.
+    // node in both the parent (u) and child (v) role, and no child with
+    // two parents. One exchange by node (partial aggregate per partition
+    // first), then take(1) — and the action doubles as the checkpoint
+    // materialization.
     def isStarForest(df: DataFrame): Boolean =
       df.select(explode(array(
           struct(col("u").as("n"), lit(1).as("r")),
           struct(col("v").as("n"), lit(2).as("r")))).as("p"))
         .groupBy(col("p.n"))
-        .agg(expr("bit_or(p.r)").as("roles"))
-        .filter(col("roles") === 3)
+        .agg(expr("bit_or(p.r)").as("roles"),
+          sum(when(col("p.r") === 2, 1).otherwise(0)).as("kids"))
+        .filter(col("roles") === 3 || col("kids") >= 2)
         .isEmpty
     var e = edges
       .select(least(col("u"), col("v")).as("u"),
@@ -292,7 +291,7 @@ object DedupCluster {
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint(eager = false)
-    var converged = traced("init-check") { isStarForest(e) }
+    var converged = isStarForest(e)
     var i = 0
     // One large∘small PAIR per check (r22): each pair is lazily
     // checkpointed so the analyzed plan stays constant-size (composing
@@ -308,7 +307,7 @@ object DedupCluster {
     // had.
     while (!converged && i < 2 * maxIter) {
       e = smallStar(largeStar(e)).localCheckpoint(eager = false)
-      converged = traced(s"pair$i-check") { isStarForest(e) }
+      converged = isStarForest(e)
       i += 1
     }
     require(converged,

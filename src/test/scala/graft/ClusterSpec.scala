@@ -28,9 +28,15 @@ class ClusterSpec extends SparkTestBase {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  private def ccMap(edges: Seq[(Long, Long)]): Map[Long, Long] =
-    DedupCluster.connectedComponents(edges.toDF("u", "v"))
-      .as[(Long, Long)].collect().toMap
+  /** Components as node -> root; fails if any node gets more than one
+    * row (a node with two roots would otherwise vanish into `.toMap`). */
+  private def ccMap(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val rows = DedupCluster.connectedComponents(edges.toDF("u", "v"))
+      .as[(Long, Long)].collect().toSeq
+    val multi = rows.groupBy(_._1).filter(_._2.size > 1)
+    assert(multi.isEmpty, s"nodes with more than one row: $multi")
+    rows.toMap
+  }
 
   test("a shuffled long chain collapses to one component rooted at the min") {
     // ids are permuted so the minimum sits mid-chain — forces label
@@ -49,6 +55,15 @@ class ClusterSpec extends SparkTestBase {
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 30L, 32L -> 30L))
+  }
+
+  test("children shared by several parents join them into one component") {
+    // canonical edges where no node is both parent and child, yet a child
+    // has two parents: a star-forest test that only checks roles
+    // certifies these as converged and splits the parents apart
+    assert(ccMap(Seq((1L, 3L), (2L, 3L))) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(ccMap(Seq((2L, 6L), (5L, 6L), (3L, 7L), (5L, 7L))) === Map(
+      2L -> 2L, 3L -> 2L, 5L -> 2L, 6L -> 2L, 7L -> 2L))
   }
 
   test("random graphs match a driver-side union-find") {

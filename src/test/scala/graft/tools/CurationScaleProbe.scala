@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,27 +27,12 @@ import graft.ops.{Classifier, TextAnalysis}
 object CurationScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    val copies = 10
-    val inflated = (0 until copies).map { c =>
-      docs0.select((col("doc_id") + lit(c * 1000000L)).as("doc_id"),
-        col("lang"), col("source"),
-        (if (c == 0) col("text")
-         else regexp_replace(col("text"),
-           "^(\\S+\\s+){" + c + "}", "")).as("text"))
-    }.reduce(_ union _)
+    val inflated = graft.BenchOne.inflateDocuments(docs0, copies = 10)
     val tmp = java.nio.file.Files.createTempDirectory("graft_cur10x").toString
     inflated.write.mode("overwrite").parquet(tmp)
     val d = spark.read.parquet(tmp)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -25,25 +25,14 @@ import graft.ops.Similarity
 object IvfScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
 
     def inflate(copies: Int): DataFrame =
-      (0 until copies).map { c =>
-        base.select(
-          (col("vec_id") + lit(c * 1000000L)).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            (x * (lit(1.0) + lit(0.03 * c) * (pmod(i + lit(c), lit(7)) - lit(3))))
-              .cast("float")).as("embedding"))
-      }.reduce(_ union _)
+      graft.BenchOne.inflateEmbeddings(base, copies)
         .repartition(spark.sessionState.conf.numShufflePartitions, col("vec_id"))
 
     val K = 10

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -22,12 +22,7 @@ object KnnCostSplitProbe {
       .select(col("vec_id"), col("embedding"))
 
     def inflated(copies: Int): DataFrame = {
-      val u = (0 until copies).map { c =>
-        emb0.select((col("vec_id") + lit(c * 1000000L)).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            (x * (lit(1.0) + lit(0.03 * c) * (pmod(i + lit(c), lit(7)) - lit(3))))
-              .cast("float")).as("embedding"))
-      }.reduce(_ union _)
+      val u = graft.BenchOne.inflateEmbeddings(emb0, copies)
       val tmp = java.nio.file.Files.createTempDirectory(s"graft_knn$copies").toString
       u.write.mode("overwrite").parquet(tmp)
       spark.read.parquet(tmp)

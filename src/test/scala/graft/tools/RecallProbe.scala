@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -11,6 +11,8 @@ import graft.ops.Similarity
   * across parameter grids, on each sf dir passed as an arg.
   *
   * Run: sbt "Test/runMain graft.tools.RecallProbe /root/testdata/sf0.001 /root/testdata/sf0.1"
+  * with SPARK_GRAFT_CPUS=8 to match the local[8] session the round-8
+  * grid was recorded on.
   *
   * The SimilaritySpec floors and the shipped lshTopK/ivfTopKCells
   * defaults are pinned from this grid's output (round 8).
@@ -18,12 +20,7 @@ import graft.ops.Similarity
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RecallProbe <sfDir> [<sfDir> ...]")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     for (sf <- args) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,12 +28,7 @@ import graft.ops.{Similarity, TextAnalysis}
 object RetrievalScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs0 = Tables.load(spark, sf, "documents")
@@ -42,21 +37,11 @@ object RetrievalScaleProbe {
       .select(col("vec_id"), col("embedding"))
 
     def inflateDocs(copies: Int): DataFrame =
-      (0 until copies).map { c =>
-        docs0.select((col("doc_id") + lit(c * 1000000L)).as("doc_id"),
-          (if (c == 0) col("text")
-           else regexp_replace(col("text"),
-             "^(\\S+\\s+){" + c + "}", "")).as("text"))
-      }.reduce(_ union _)
+      graft.BenchOne.inflateDocuments(docs0, copies)
         .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
 
     def inflateEmb(copies: Int): DataFrame =
-      (0 until copies).map { c =>
-        emb0.select((col("vec_id") + lit(c * 1000000L)).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            (x * (lit(1.0) + lit(0.03 * c) * (pmod(i + lit(c), lit(7)) - lit(3))))
-              .cast("float")).as("embedding"))
-      }.reduce(_ union _)
+      graft.BenchOne.inflateEmbeddings(emb0, copies)
         .repartition(spark.sessionState.conf.numShufflePartitions, col("vec_id"))
 
     for (copies <- Seq(1, 5)) {
