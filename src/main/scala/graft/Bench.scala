@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
+import graft.queries.SemanticBlocking
 import graft.streaming.CurationStream
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
@@ -136,23 +137,21 @@ object Bench {
     // the exact all-pairs reference at the SAME threshold on the SAME
     // doubled corpus (VERDICT r8 item 2): the pair-set-equality contract
     // lives in DedupSpec at fixture scale — this emits
-    // |lsh ∩ exact| / |exact| at sf0.1 per round beside the wall-times.
-    // Parameters mirror the registered queries exactly.
+    // |lsh ∩ exact| / |exact| at sf0.1 per round beside the wall-times,
+    // at the registered operating points (SemanticBlocking).
     val pairRecalls: Seq[(String, Double)] =
       try {
         val corpus = graft.queries.TextVectorQueries
           .embedNearDupCorpus(spark, sfDir).cache()
         val out = Seq(
-          ("q36b_embed_neardup_lsh", 0.98, 8, 8),
-          ("q36c_embed_neardup_lsh08", 0.80, 6, 16)).map {
-          case (n, threshold, planes, tables) =>
+          "q36b_embed_neardup_lsh" -> SemanticBlocking.NearDupLsh,
+          "q36c_embed_neardup_lsh08" -> SemanticBlocking.NearDupLsh08).map {
+          case (n, lsh) =>
             val exact = graft.ops.Dedup.exactEmbeddingPairs(
-              corpus, "embedding", "vec_id", threshold)
+              corpus, "embedding", "vec_id", lsh.threshold)
               .select("id_a", "id_b").cache()
             val nExact = exact.count().toDouble
-            val hits = graft.ops.Dedup.embeddingNearDups(
-              corpus, "embedding", "vec_id", threshold, planes, tables)
-              .select("id_a", "id_b")
+            val hits = lsh.pairs(corpus).select("id_a", "id_b")
               .join(exact, Seq("id_a", "id_b")).count()
             exact.unpersist()
             n -> (if (nExact > 0) hits / nExact else -1.0)
@@ -166,39 +165,24 @@ object Bench {
     // O(n²) rule (q101) at the same threshold: the k-means blocking is
     // one-sided (every blocked prune is real), so recall is the single
     // number that says how much the cell scoping missed this round.
-    // Parameters mirror the registered queries exactly.
+    // All three sides are the registered queries' own results; q101c is
+    // the index-served twin, measured against the centroids the
+    // PUBLISHED table carries (training is deterministic, so it equals
+    // q101b's recall unless the served index is stale or corrupt —
+    // which is exactly what the extra row detects).
     val semanticRecall: Seq[(String, Double)] =
       try {
-        val e = graft.core.Tables.load(spark, sfDir, "embeddings").cache()
-        val exactPruned = graft.ops.Dedup
-          .semanticDedup(e, "embedding", "vec_id", 0.45)
-          .filter(!col("kept")).select("id").cache()
+        def pruned(name: String) = SparkEntry.queries(name)(spark, sfDir)
+          .filter(!col("kept")).select("id")
+        val exactPruned = pruned("q101_semantic_dedup").cache()
         val nExact = exactPruned.count().toDouble
-        val cents = graft.ops.Similarity.kmeansCentroids(
-          e, "embedding", "vec_id", k = 8, iters = 2)
-        val hits = graft.ops.Dedup
-          .semanticDedupBlocked(e, "embedding", "vec_id", 0.45, cents,
-            probes = 2)
-          .filter(!col("kept")).select("id")
-          .join(exactPruned, Seq("id")).count()
-        // the index-served twin, measured against the centroids the
-        // PUBLISHED table actually carries (training is deterministic,
-        // so this equals q101b's recall unless the served index is
-        // stale/corrupt — which is exactly what the extra row detects)
-        val served = graft.ops.Similarity.servedCentroids(
-          spark, e, "embedding", "vec_id", k = 8, iters = 2,
-          table = "default.semdedup_centroids")
-        val hitsServed = graft.ops.Dedup
-          .semanticDedupBlocked(e, "embedding", "vec_id", 0.45, served,
-            probes = 2)
-          .filter(!col("kept")).select("id")
-          .join(exactPruned, Seq("id")).count()
-        e.unpersist()
-        Seq(
-          "q101b_semantic_dedup_blocked" ->
-            (if (nExact > 0) hits / nExact else -1.0),
-          "q101c_semantic_dedup_index" ->
-            (if (nExact > 0) hitsServed / nExact else -1.0))
+        val out = Seq("q101b_semantic_dedup_blocked",
+            "q101c_semantic_dedup_index").map { n =>
+          val hits = pruned(n).join(exactPruned, Seq("id")).count()
+          n -> (if (nExact > 0) hits / nExact else -1.0)
+        }
+        exactPruned.unpersist()
+        out
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] semantic recall: ${e.getMessage}")
         Seq.empty
@@ -207,9 +191,7 @@ object Bench {
     // per-micro-batch arrived/kept/vet-cost for the q101g loop at this
     // sf — kept-rate drift is a vet-quality regression, vet-cost growth
     // an index/plan regression, and neither is visible in the batch
-    // wall-times. Mirrors q101g's registration exactly (4/5 seed
-    // blocked-deduplicated, 1/5 crawl in 3 micro-batches through the
-    // served centroid index).
+    // wall-times.
     // r18 (VERDICT r17 task 5): the sink section runs AFTER the main
     // interleaved passes, in a window the in-loop controls never see —
     // r16 AND r17 both logged vet spikes there that isolated reruns
@@ -245,8 +227,8 @@ object Bench {
     }
 
     // Label-propagation convergence telemetry (VERDICT r12 item 8):
-    // per-round changed-label counts over the blocked kNN graph,
-    // mirroring q114b's registration exactly. The changed count is the
+    // per-round changed-label counts over q114b's blocked kNN graph
+    // (SemanticBlocking.propagationGraph). The changed count is the
     // propagation frontier; it must shrink round over round — a
     // frontier that stops shrinking means the argmax is oscillating or
     // the graph degenerated, neither of which is visible in wall-times.
@@ -254,17 +236,10 @@ object Bench {
     // auditable across rounds.
     val propRounds: Seq[(Int, Long)] =
       try {
-        import org.apache.spark.sql.functions.when
-        val e = graft.core.Tables.load(spark, sfDir, "embeddings")
-        val cents = graft.ops.Similarity.kmeansCentroids(
-          e, "embedding", "vec_id",
-          k = graft.ops.Similarity.cellCountFor(e.count()), iters = 2)
-        val edges = graft.ops.Similarity.knnGraphBlocked(
-            e, "embedding", "vec_id", cents, k = 5, probes = 4, replicas = 2)
-          .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        val nodes = e.select(col("vec_id").as("node"),
-          when(col("vec_id") % 5 === 0, col("label")).as("seed_label"))
-        graft.ops.Graph.labelPropagationWithStats(nodes, edges, iters = 3)._2
+        val (nodes, edges) = SemanticBlocking.propagationGraph(
+          graft.core.Tables.load(spark, sfDir, "embeddings"))
+        graft.ops.Graph.labelPropagationWithStats(
+          SemanticBlocking.seedLabels(nodes), edges, iters = 3)._2
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] propagation: ${e.getMessage}")
         Seq.empty
@@ -437,36 +412,25 @@ object Bench {
     if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
   }
 
-  /** The streaming semantic-dedup sink section (the q101g loop), shared
-    * with [[BenchSink]] so its drill-down runs exactly this code: 4/5 of
-    * the embeddings, blocked-deduplicated through the served centroid
-    * index, seed `table`; the other 1/5 arrives in 3 staged micro-batches.
-    * The q12 control is timed right before batch 0, in the sink's own
-    * load window. Returns (control seconds, per-batch stats); a failure
-    * is logged and yields no stats (and control -1 if not yet timed). */
+  /** The streaming semantic-dedup sink section, shared with
+    * [[BenchSink]] so its drill-down runs exactly this code: q101g's
+    * loop ([[SemanticBlocking.publishSeed]] seeds `table` with the
+    * blocked-kept 4/5 of the embeddings; the other 1/5 arrives in 3
+    * staged micro-batches). The q12 control is timed right before batch
+    * 0, in the sink's own load window. Returns (control seconds,
+    * per-batch stats); a failure is logged and yields no stats (and
+    * control -1 if not yet timed). */
   def sinkSection(spark: SparkSession, sfDir: String,
       table: String): (Double, Seq[CurationStream.BatchStat]) = {
     var controlSec = -1.0
     val stats =
       try {
-        val e = graft.core.Tables.load(spark, sfDir, "embeddings")
-        val seed = e.filter(col("vec_id") % 5 =!= 0)
-        val inc = e.filter(col("vec_id") % 5 === 0)
-        val cents = graft.ops.Similarity.servedCentroids(
-          spark, e, "embedding", "vec_id", k = 8, iters = 2,
-          table = "default.semdedup_centroids").localCheckpoint(true)
-        val keptSeed = seed.join(
-          graft.ops.Dedup.semanticDedupBlocked(seed, "embedding", "vec_id",
-            0.45, cents, probes = 2)
-            .filter(col("kept")).select(col("id")),
-          seed("vec_id") === col("id"))
-          .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        graft.core.TableStore.overwriteTable(spark, table, keptSeed)
-        val staged = CurationStream.stageEmbeddings(inc, parts = 3)
+        val (cents, crawl) = SemanticBlocking.publishSeed(spark,
+          graft.core.Tables.load(spark, sfDir, "embeddings"), table)
+        val staged = CurationStream.stageEmbeddings(crawl, parts = 3)
         controlSec = timeOnce(spark, sfDir, "q12_fact_join")
-        val out = CurationStream.runSemanticDedupSinkWithStats(
-          spark, staged, table, cents, threshold = 0.45, probes = 2)
+        val out = CurationStream.runSemanticDedupSink(spark, staged, table,
+          cents, SemanticBlocking.Threshold, SemanticBlocking.Probes)
         spark.sql(s"DROP TABLE IF EXISTS $table")
         out
       } catch { case NonFatal(e) =>

@@ -441,26 +441,13 @@ object StreamingQueries {
     * growth. */
   val q101gStreamSemanticDedup = GraftQuery(
     "q101g_stream_semantic_dedup", { (s, dir) =>
-      import graft.ops.{Dedup, Similarity}
       import graft.streaming.CurationStream
-      val e = Tables.load(s, dir, "embeddings")
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val inc = e.filter(col("vec_id") % 5 === 0)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
-        .localCheckpoint(eager = true)
-      val keptSeed = seed.join(
-        Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-          cents, probes = 2)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
       val table = "default.semdedup_corpus"
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      graft.core.TableStore.overwriteTable(s, table, keptSeed)
+      val (cents, inc) = SemanticBlocking.publishSeed(s,
+        Tables.load(s, dir, "embeddings"), table)
       val stagedDir = CurationStream.stageEmbeddings(inc, parts = 3)
       CurationStream.runSemanticDedupSink(s, stagedDir, table, cents,
-        threshold = 0.45, probes = 2)
+        threshold = SemanticBlocking.Threshold, probes = SemanticBlocking.Probes)
       val landed = s.table(table).select(col("vec_id").as("id"))
         .withColumn("landed", lit(true))
       inc.select(col("vec_id").as("id"))
@@ -483,20 +470,12 @@ object StreamingQueries {
     * violations carry which side over-landed. */
   val q101iStreamFoldContract = GraftQuery(
     "q101i_stream_fold_contract", { (s, dir) =>
-      import graft.ops.{Dedup, Similarity}
       import graft.streaming.CurationStream
+      import SemanticBlocking.{Probes, Threshold}
       val e = Tables.load(s, dir, "embeddings")
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val inc = e.filter(col("vec_id") % 5 === 0)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
-        .localCheckpoint(eager = true)
-      val keptSeed = seed.join(
-        Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-          cents, probes = 2)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
+      val (seed, inc) = SemanticBlocking.seedAndCrawl(e)
+      val cents = SemanticBlocking.servedCells(s, e).localCheckpoint(eager = true)
+      val keptSeed = SemanticBlocking.keptSeed(seed, cents)
         .localCheckpoint(eager = true)
       val streamTbl = "default.semdedup_contract_stream"
       val foldTbl = "default.semdedup_contract_fold"
@@ -505,13 +484,13 @@ object StreamingQueries {
         s.sql(s"DROP TABLE IF EXISTS $streamTbl")
         graft.core.TableStore.overwriteTable(s, streamTbl, keptSeed)
         CurationStream.runSemanticDedupSink(s, staged, streamTbl, cents,
-          threshold = 0.45, probes = 2)
+          threshold = Threshold, probes = Probes)
         s.sql(s"DROP TABLE IF EXISTS $foldTbl")
         graft.core.TableStore.overwriteTable(s, foldTbl, keptSeed)
         for (i <- 0 until 3) {
           val b = s.read.parquet(s"$staged/emb_$i.parquet")
           CurationStream.vetBatch(s, foldTbl, b, cents,
-              threshold = 0.45, probes = 2)
+              threshold = Threshold, probes = Probes)
             .write.mode("append").insertInto(foldTbl)
         }
         TextVectorQueries.symmetricDiffViolations(
@@ -545,22 +524,13 @@ object StreamingQueries {
     * not just a locally-run suite. */
   val q172CdfDedupContract = GraftQuery(
     "q172_cdf_dedup_contract", { (s, dir) =>
-      import graft.ops.{Dedup, Similarity}
       import graft.streaming.CdfStream
+      import SemanticBlocking.{Probes, Threshold}
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val crawl = e.filter(col("vec_id") % 5 === 0)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2,
-        table = "default.semdedup_centroids")
-        .localCheckpoint(eager = true)
-      val keptSeed = seed.join(
-        Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-          cents, probes = 2)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
+      val (seed, crawl) = SemanticBlocking.seedAndCrawl(e)
+      val cents = SemanticBlocking.servedCells(s, e).localCheckpoint(eager = true)
+      val keptSeed = SemanticBlocking.keptSeed(seed, cents)
         .localCheckpoint(eager = true)
       val splits = (0 until 3).map(i =>
         crawl.filter(col("vec_id") % 3 === i).localCheckpoint(eager = true))
@@ -584,19 +554,19 @@ object StreamingQueries {
           D.writeDeltaTable(s, keptSeed, d)
         }
         val run1 = CdfStream.runIncrementalDedup(s, src, ckpt, keptS,
-          "embedding", "vec_id", 0.45, cents, probes = 2,
+          "embedding", "vec_id", Threshold, cents, probes = Probes,
           maxVersionsPerBatch = 1)
         // crash path: lose the LAST commit marker, re-run — the replay
         // must not double-land its batch
         java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt,
           "commits", run1.last.batchId.toString))
         CdfStream.runIncrementalDedup(s, src, ckpt, keptS,
-          "embedding", "vec_id", 0.45, cents, probes = 2,
+          "embedding", "vec_id", Threshold, cents, probes = Probes,
           maxVersionsPerBatch = 1)
         // the manual sequential fold of the IDENTICAL vet
         splits.zipWithIndex.foreach { case (b, i) =>
           val surv = CdfStream.vetArrivals(s, keptF, b, "embedding",
-            "vec_id", 0.45, cents, probes = 2)
+            "vec_id", Threshold, cents, probes = Probes)
           if (!surv.isEmpty) {
             D.appendDeltaTableIdempotent(s, surv, keptF, "fold", i.toLong)
             ()

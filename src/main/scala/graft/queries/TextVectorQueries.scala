@@ -963,8 +963,7 @@ object TextVectorQueries {
     * pair work per table. */
   val q36bEmbedNearDupLsh = GraftQuery(
     "q36b_embed_neardup_lsh", { (s, dir) =>
-      val pairs = Dedup.embeddingNearDups(embedNearDupCorpus(s, dir),
-        "embedding", "vec_id", threshold = 0.98, planes = 8, tables = 8)
+      val pairs = SemanticBlocking.NearDupLsh.pairs(embedNearDupCorpus(s, dir))
       pairs.agg(
         count(lit(1)).as("pairs_found"),
         count(when(col("id_b") === col("id_a") + 1000000L, 1)).as("true_pairs"),
@@ -983,8 +982,7 @@ object TextVectorQueries {
     * result at this threshold is asserted in DedupSpec. */
   val q36cEmbedNearDupLsh08 = GraftQuery(
     "q36c_embed_neardup_lsh08", { (s, dir) =>
-      val pairs = Dedup.embeddingNearDups(embedNearDupCorpus(s, dir),
-        "embedding", "vec_id", threshold = 0.8, planes = 6, tables = 16)
+      val pairs = SemanticBlocking.NearDupLsh08.pairs(embedNearDupCorpus(s, dir))
       pairs.agg(
         count(lit(1)).as("pairs_found"),
         count(when(col("id_b") === col("id_a") + 1000000L, 1)).as("true_pairs"),
@@ -1004,10 +1002,9 @@ object TextVectorQueries {
   val q36dLshSubsetContract = GraftQuery(
     "q36d_lsh_subset_contract", { (s, dir) =>
       val corpus = embedNearDupCorpus(s, dir)
-      val lsh = Dedup.embeddingNearDups(corpus,
-        "embedding", "vec_id", threshold = 0.98, planes = 8, tables = 8)
+      val lsh = SemanticBlocking.NearDupLsh.pairs(corpus)
       val exact = Dedup.exactEmbeddingPairs(corpus,
-        "embedding", "vec_id", threshold = 0.98)
+        "embedding", "vec_id", SemanticBlocking.NearDupLsh.threshold)
       lsh.join(exact, Seq("id_a", "id_b", "cosine"), "left_anti")
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a"), col("id_b"))
@@ -1048,10 +1045,7 @@ object TextVectorQueries {
   val q101bSemanticDedupBlocked = GraftQuery(
     "q101b_semantic_dedup_blocked", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
-      Dedup.semanticDedupBlocked(e, "embedding", "vec_id", 0.45, cents,
-        probes = 2)
+      SemanticBlocking.dedup(e, SemanticBlocking.trainedCells(e))
         .orderBy(col("id"))
     })
 
@@ -1068,10 +1062,7 @@ object TextVectorQueries {
   val q101cSemanticDedupIndex = GraftQuery(
     "q101c_semantic_dedup_index", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
-      Dedup.semanticDedupBlocked(e, "embedding", "vec_id", 0.45, cents,
-        probes = 2)
+      SemanticBlocking.dedup(e, SemanticBlocking.servedCells(s, e))
         .orderBy(col("id"))
     })
 
@@ -1087,12 +1078,10 @@ object TextVectorQueries {
   val q101dSemanticSubsetContract = GraftQuery(
     "q101d_semantic_subset_contract", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
-      val blocked = Dedup.semanticDedupBlocked(
-        e, "embedding", "vec_id", 0.45, cents, probes = 2)
+      val blocked = SemanticBlocking.dedup(e, SemanticBlocking.trainedCells(e))
         .select(col("id"), col("kept").as("kept_blocked"))
-      val exact = Dedup.semanticDedup(e, "embedding", "vec_id", 0.45)
+      val exact = Dedup.semanticDedup(e, "embedding", "vec_id",
+          SemanticBlocking.Threshold)
         .select(col("id"), col("kept").as("kept_exact"))
       blocked.join(exact, Seq("id"))
         .filter(!col("kept_blocked") && col("kept_exact"))
@@ -1100,6 +1089,13 @@ object TextVectorQueries {
         .orderBy(col("id"))
     },
     Some("SELECT CAST(NULL AS BIGINT) AS id WHERE 1 = 0"))
+
+  /** The exact rule's kept seed as (vec_id, embedding): the shared rep
+    * set of q101e and q101h. */
+  private def exactKeptSeed(seed: DataFrame): DataFrame =
+    SemanticBlocking.keptBy(seed, Dedup.semanticDedup(seed, "embedding",
+        "vec_id", SemanticBlocking.Threshold))
+      .select(col("vec_id"), col("embedding"))
 
   /** Incremental semantic dedup, exact variant (oracle-checked): a 1/5
     * "crawl batch" (vec_id % 5 = 0) vetted against the RETAINED
@@ -1112,16 +1108,10 @@ object TextVectorQueries {
     * EXISTS legs at the same 6-decimal rounding. */
   val q101eSemanticDedupIncremental = GraftQuery(
     "q101e_semantic_dedup_incremental", { (s, dir) =>
-      val e = embeds(s, dir)
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val inc = e.filter(col("vec_id") % 5 === 0)
-      val keptRep = seed.join(
-        Dedup.semanticDedup(seed, "embedding", "vec_id", 0.45)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed("vec_id"), seed("embedding"))
+      val (seed, inc) = SemanticBlocking.seedAndCrawl(embeds(s, dir))
+      val keptRep = exactKeptSeed(seed)
       Dedup.semanticDedupIncremental(keptRep, inc, "embedding", "vec_id",
-        0.45)
+        SemanticBlocking.Threshold)
         .orderBy(col("id"))
     },
     Some("""WITH seed AS (SELECT * FROM embeddings WHERE vec_id % 5 <> 0),
@@ -1156,18 +1146,13 @@ object TextVectorQueries {
   val q101fSemanticDedupIncrementalBlocked = GraftQuery(
     "q101f_semantic_dedup_incr_blocked", { (s, dir) =>
       val e = embeds(s, dir)
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val inc = e.filter(col("vec_id") % 5 === 0)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
-      val keptRep = seed.join(
-        Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-          cents, probes = 2)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed("vec_id"), seed("embedding"))
+      val (seed, inc) = SemanticBlocking.seedAndCrawl(e)
+      val cents = SemanticBlocking.servedCells(s, e)
+      val keptRep = SemanticBlocking.keptSeed(seed, cents)
+        .select(col("vec_id"), col("embedding"))
       Dedup.semanticDedupIncrementalBlocked(keptRep, inc, "embedding",
-        "vec_id", 0.45, cents, probes = 2)
+        "vec_id", SemanticBlocking.Threshold, cents,
+        probes = SemanticBlocking.Probes)
         .orderBy(col("id"))
     })
 
@@ -1183,20 +1168,15 @@ object TextVectorQueries {
   val q101hIncrSubsetContract = GraftQuery(
     "q101h_incr_subset_contract", { (s, dir) =>
       val e = embeds(s, dir)
-      val seed = e.filter(col("vec_id") % 5 =!= 0)
-      val inc = e.filter(col("vec_id") % 5 === 0)
-      val keptRep = seed.join(
-        Dedup.semanticDedup(seed, "embedding", "vec_id", 0.45)
-          .filter(col("kept")).select(col("id")),
-        seed("vec_id") === col("id"))
-        .select(seed("vec_id"), seed("embedding"))
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
+      val (seed, inc) = SemanticBlocking.seedAndCrawl(e)
+      val keptRep = exactKeptSeed(seed)
+      val cents = SemanticBlocking.trainedCells(e)
       val exact = Dedup.semanticDedupIncremental(
-          keptRep, inc, "embedding", "vec_id", 0.45)
+          keptRep, inc, "embedding", "vec_id", SemanticBlocking.Threshold)
         .select(col("id"), col("kept").as("kept_exact"))
-      Dedup.semanticDedupIncrementalBlocked(
-          keptRep, inc, "embedding", "vec_id", 0.45, cents, probes = 2)
+      Dedup.semanticDedupIncrementalBlocked(keptRep, inc, "embedding",
+          "vec_id", SemanticBlocking.Threshold, cents,
+          probes = SemanticBlocking.Probes)
         .select(col("id"), col("kept").as("kept_blocked"))
         .join(exact, Seq("id"))
         .filter(!col("kept_blocked") && col("kept_exact"))
@@ -1479,11 +1459,11 @@ object TextVectorQueries {
   val q124bSemanticDecontaminateBlocked = GraftQuery(
     "q124b_semantic_decontaminate_blocked", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
+      val cents = SemanticBlocking.trainedCells(e)
       Dedup.semanticDecontaminateBlocked(
           e.filter(col("vec_id") % 20 =!= 0), e.filter(col("vec_id") % 20 === 0),
-          "embedding", "vec_id", 0.45, cents, probes = 2)
+          "embedding", "vec_id", SemanticBlocking.Threshold, cents,
+          probes = SemanticBlocking.Probes)
         .orderBy(col("id"))
     })
 
@@ -1497,14 +1477,13 @@ object TextVectorQueries {
       val e = embeds(s, dir)
       val corpus = e.filter(col("vec_id") % 20 =!= 0)
       val bench = e.filter(col("vec_id") % 20 === 0)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
-      val blocked = Dedup.semanticDecontaminateBlocked(
-          corpus, bench, "embedding", "vec_id", 0.45, cents, probes = 2)
+      val blocked = Dedup.semanticDecontaminateBlocked(corpus, bench,
+          "embedding", "vec_id", SemanticBlocking.Threshold,
+          SemanticBlocking.trainedCells(e), probes = SemanticBlocking.Probes)
         .select(col("id"), col("n_hits").as("nh_blocked"),
           col("contaminated").as("c_blocked"))
       val exact = Dedup.semanticDecontaminate(
-          corpus, bench, "embedding", "vec_id", 0.45)
+          corpus, bench, "embedding", "vec_id", SemanticBlocking.Threshold)
         .select(col("id"), col("n_hits").as("nh_exact"),
           col("contaminated").as("c_exact"))
       blocked.join(exact, Seq("id"))
@@ -2104,13 +2083,7 @@ object TextVectorQueries {
   val q109bKnnGraphBlocked = GraftQuery(
     "q109b_knn_graph_blocked", { (s, dir) =>
       val e = embeds(s, dir)
-      // cells ∝ n (fixture: still 8) — a fixed count makes the cell
-      // pair pass quadratic in corpus size; see cellCountFor
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2,
-        table = "default.semdedup_centroids")
-      Similarity.knnGraphBlocked(e, "embedding", "vec_id", cents,
-          k = 5, probes = 4, replicas = 2)
+      SemanticBlocking.knnGraph(e, SemanticBlocking.servedCells(s, e))
         .orderBy(col("query_id"), col("rnk"))
     })
 
@@ -2127,10 +2100,7 @@ object TextVectorQueries {
   val q109cKnnGraphContract = GraftQuery(
     "q109c_knn_graph_contract", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
-      val blocked = Similarity.knnGraphBlocked(e, "embedding", "vec_id",
-        cents, k = 5, probes = 4, replicas = 2)
+      val blocked = SemanticBlocking.knnGraph(e, SemanticBlocking.trainedCells(e))
       val kth = Similarity.bruteForceTopKPartial(
           e, e, "vec_id", "embedding", "vec_id", "embedding", k = 5)
         .groupBy(col("query_id")).agg(min(col("cosine")).as("kth_exact"))
@@ -2785,20 +2755,7 @@ object TextVectorQueries {
       val edges = Similarity.bruteForceTopKPartial(
           e, e, "vec_id", "embedding", "vec_id", "embedding", k = 5)
         .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      val nodes = e.select(col("vec_id").as("node"), col("label").as("truth"),
-        (col("vec_id") % 5 === 0).as("seed"))
-      val fin = Graph.labelPropagation(
-        nodes.select(col("node"),
-          when(col("seed"), col("truth")).as("seed_label")),
-        edges, iters = 3)
-      fin.join(nodes, Seq("node"))
-        .groupBy(coalesce(col("lab"), lit(-1)).as("label"))
-        .agg(count(lit(1)).as("nodes"),
-          count(when(col("seed"), 1)).as("seeds"),
-          count(when(not(col("seed")), 1)).as("nonseed"),
-          count(when(not(col("seed")) && col("lab") === col("truth"), 1))
-            .as("correct_nonseed"))
-        .orderBy(col("label"))
+      propagationCensus(SemanticBlocking.labelNodes(e), edges)
     },
     Some(s"""WITH knn AS (
         SELECT query_id AS src, neighbor_id AS dst FROM (
@@ -2829,27 +2786,23 @@ object TextVectorQueries {
     * propagation, and q109c already pins the edge quality itself. */
   val q114bLabelPropagationBlocked = GraftQuery(
     "q114b_label_propagation_blocked", { (s, dir) =>
-      val e = embeds(s, dir)
-      val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2)
-      val edges = Similarity.knnGraphBlocked(e, "embedding", "vec_id",
-          cents, k = 5, probes = 4, replicas = 2)
-        .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      val nodes = e.select(col("vec_id").as("node"), col("label").as("truth"),
-        (col("vec_id") % 5 === 0).as("seed"))
-      val fin = Graph.labelPropagation(
-        nodes.select(col("node"),
-          when(col("seed"), col("truth")).as("seed_label")),
-        edges, iters = 3)
-      fin.join(nodes, Seq("node"))
-        .groupBy(coalesce(col("lab"), lit(-1)).as("label"))
-        .agg(count(lit(1)).as("nodes"),
-          count(when(col("seed"), 1)).as("seeds"),
-          count(when(not(col("seed")), 1)).as("nonseed"),
-          count(when(not(col("seed")) && col("lab") === col("truth"), 1))
-            .as("correct_nonseed"))
-        .orderBy(col("label"))
+      val (nodes, edges) = SemanticBlocking.propagationGraph(embeds(s, dir))
+      propagationCensus(nodes, edges)
     })
+
+  /** Three propagation rounds over (src, dst) `edges` from the seeds of
+    * `nodes` ([[SemanticBlocking.labelNodes]]), as the per-label census
+    * (nodes, seeds, non-seeds, correct non-seeds) q114 and q114b emit. */
+  private def propagationCensus(nodes: DataFrame, edges: DataFrame): DataFrame =
+    Graph.labelPropagation(SemanticBlocking.seedLabels(nodes), edges, iters = 3)
+      .join(nodes, Seq("node"))
+      .groupBy(coalesce(col("lab"), lit(-1)).as("label"))
+      .agg(count(lit(1)).as("nodes"),
+        count(when(col("seed"), 1)).as("seeds"),
+        count(when(not(col("seed")), 1)).as("nonseed"),
+        count(when(not(col("seed")) && col("lab") === col("truth"), 1))
+          .as("correct_nonseed"))
+      .orderBy(col("label"))
 
   /** Bigram-LM perplexity bucketing — the CCNet head/middle/tail split
     * one level up from q89's unigram scorer, fully oracle-checked: the
@@ -3128,8 +3081,7 @@ object TextVectorQueries {
   val q107DiversitySample = GraftQuery(
     "q107_diversity_sample", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
+      val cents = SemanticBlocking.servedCells(s, e)
       Similarity.diversitySample(e, "embedding", "vec_id", cents,
           perCell = 20)
         .groupBy(col("centroid_id"))
@@ -3153,8 +3105,7 @@ object TextVectorQueries {
   val q107bDiversityContract = GraftQuery(
     "q107b_diversity_contract", { (s, dir) =>
       val e = embeds(s, dir)
-      val cents = Similarity.servedCentroids(s, e, "embedding", "vec_id",
-        k = Similarity.cellCountFor(e.count()), iters = 2, table = "default.semdedup_centroids")
+      val cents = SemanticBlocking.servedCells(s, e)
       val s1 = Similarity.diversitySample(e, "embedding", "vec_id", cents,
         perCell = 20)
       val s2 = Similarity.diversitySample(e, "embedding", "vec_id", cents,

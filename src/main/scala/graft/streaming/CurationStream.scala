@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Dedup
@@ -101,22 +100,6 @@ object CurationStream {
   final case class BatchStat(
       batchId: Long, batchRows: Long, keptRows: Long, vetSec: Double)
 
-  /** Run the streaming semantic-dedup sink over a staged embeddings
-    * directory until exhaustion: one vet-and-append per micro-batch
-    * (`maxFilesPerTrigger = 1`, so each staged file is one batch, in
-    * name order). Returns the number of micro-batches processed. The
-    * kept table is created by the first surviving batch and appended
-    * thereafter; the centroid index is passed in — a deployment trains
-    * it once on the seed corpus ([[graft.ops.Similarity.servedCentroids]])
-    * and does NOT retrain per batch. */
-  def runSemanticDedupSink(
-      spark: SparkSession, dir: String, table: String,
-      centroidRel: DataFrame, threshold: Double = 0.45,
-      probes: Int = 2, checkpoint: Option[String] = None,
-      schema: StructType = null): Long =
-    runSemanticDedupSinkWithStats(spark, dir, table, centroidRel,
-      threshold, probes, checkpoint, schema).length.toLong
-
   /** Staged-embeddings file stream, one staged file per micro-batch.
     * `schema = null` infers from the directory's current footers —
     * which ABORTS on an empty staging directory (nothing to infer
@@ -133,51 +116,123 @@ object CurationStream {
       .parquet(dir)
   }
 
-  /** [[runSemanticDedupSink]], returning one [[BatchStat]] per
-    * processed micro-batch (in batch order) instead of just the count.
-    * The stats are driver-side scalars (row counts the vet already
-    * computes plus a wall-clock), so the telemetry adds no extra jobs
-    * beyond one `count()` of the batch and of the kept snapshot —
-    * both bounded by batch size, never corpus size. */
-  def runSemanticDedupSinkWithStats(
+  /** Run the streaming semantic-dedup sink over a staged embeddings
+    * directory until exhaustion: one vet-and-append per micro-batch
+    * (`maxFilesPerTrigger = 1`, so each staged file is one batch, in
+    * name order). The kept table is created by the first surviving
+    * batch and appended thereafter; the centroid index is passed in — a
+    * deployment trains it once on the seed corpus
+    * ([[graft.ops.Similarity.servedCentroids]]) and does NOT retrain per
+    * batch. Returns one [[BatchStat]] per processed micro-batch, in
+    * batch order (its size is the batch count). The stats are
+    * driver-side scalars (row counts the vet already computes plus a
+    * wall-clock), so they add no jobs beyond one `count()` of the batch
+    * and of the kept snapshot — both bounded by batch size, never
+    * corpus size. */
+  def runSemanticDedupSink(
       spark: SparkSession, dir: String, table: String,
       centroidRel: DataFrame, threshold: Double = 0.45,
       probes: Int = 2, checkpoint: Option[String] = None,
       schema: StructType = null): Seq[BatchStat] = {
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
-    val stream = readEmbStream(spark, dir, schema)
     // With a checkpoint the file source's commit log makes the sink
     // RESUMABLE: a restarted run skips every already-consumed file and
     // vets only what arrived since — the cost contract a standing
     // ingestion pipeline needs. WITHOUT one, a rerun re-vets everything
     // and lands nothing new (idempotence, StreamingSpec) — correct but
     // O(history) instead of O(new files).
-    val writer0 = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t0 = System.nanoTime()
-        val kept = vetBatch(spark, table, batch, centroidRel, threshold,
-          probes)
-        if (spark.catalog.tableExists(table))
-          kept.write.mode("append").insertInto(table)
-        else if (!kept.isEmpty)
-          kept.write.format("parquet").saveAsTable(table)
-        val vetSec = (System.nanoTime() - t0) / 1e9
-        // kept is an eager localCheckpoint — count() here is a scan of
-        // the snapshot RDD, not a recompute of the vet
-        stats.add(BatchStat(batchId, batch.count(), kept.count(), vetSec))
-        ()
-      }
-    val q = checkpoint
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    EventPipeline.drainForeachBatch(readEmbStream(spark, dir, schema),
+        checkpoint) { (batch, batchId) =>
+      val t0 = System.nanoTime()
+      val kept = vetBatch(spark, table, batch, centroidRel, threshold,
+        probes)
+      if (spark.catalog.tableExists(table))
+        kept.write.mode("append").insertInto(table)
+      else if (!kept.isEmpty)
+        kept.write.format("parquet").saveAsTable(table)
+      val vetSec = (System.nanoTime() - t0) / 1e9
+      // kept is an eager localCheckpoint — count() here is a scan of
+      // the snapshot RDD, not a recompute of the vet
+      stats.add(BatchStat(batchId, batch.count(), kept.count(), vetSec))
+      ()
+    }
     // the caller reads the table through THIS session next — same stale
     // cached-listing hazard as in vetBatch
     if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
     import scala.jdk.CollectionConverters._
     stats.asScala.toSeq.sortBy(_.batchId)
+  }
+
+  /** Streaming bottom-k quantile-sketch sink: each micro-batch's
+    * per-source sketch (graft.ops.Quantiles.bottomKSketch over token
+    * counts) folds into a persisted sketch table through
+    * mergeSketches' order-statistics identity. Unlike the additive
+    * token-count sink below, this merge is REPLAY-IDEMPOTENT — the
+    * merge dedups on (g, id) before re-ranking, and a given document
+    * carries one immutable (hkey, ntok) — so re-processing an
+    * already-merged batch is a no-op and a checkpoint is a COST
+    * optimization (skip re-reads after restart), not a correctness
+    * requirement. The landed table is bit-identical to the batch
+    * sketch of all files (q123c pins it; StreamingSpec pins the
+    * replay no-op). Per-batch cost: one batch-sized sketch build plus
+    * a merge window over ≤ 2k rows per source. Returns the number of
+    * micro-batches. */
+  def runQuantileSketchSink(
+      spark: SparkSession, dir: String, table: String, k: Int = 64,
+      checkpoint: Option[String] = None,
+      schema: StructType = null): Long = {
+    var batches = 0L
+    EventPipeline.drainForeachBatch(readEmbStream(spark, dir, schema),
+        checkpoint) { (batch, _) =>
+      val d = batch.select(col("source"), col("doc_id"),
+        graft.ops.TextAnalysis.tokenCount(col("text")).cast("long")
+          .as("ntok"))
+      val sk = graft.ops.Quantiles.bottomKSketch(
+        d, "source", "doc_id", "ntok", k)
+      val merged =
+        if (spark.catalog.tableExists(table))
+          graft.ops.Quantiles.mergeSketches(
+            Seq(spark.table(table), sk), k)
+        else sk
+      graft.core.TableStore.overwriteTable(spark, table,
+        merged.localCheckpoint(eager = true))
+      batches += 1
+    }
+    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
+    batches
+  }
+
+  /** Streaming k-means sufficient-statistics sink: each micro-batch of
+    * embeddings is assigned against the FROZEN `centroidRel` (micro
+    * space, (cid, d, cm)) and folded into the standing (cid, d, n, sxm)
+    * stats table — exact integer addition, so the standing table after
+    * any number of batches EQUALS a scratch pass over every row seen
+    * (the [[graft.ops.Similarity.kmeansAssignStatsMicros]] decomposition
+    * law; q147b gates it). Per batch the corpus is never rescanned —
+    * O(batch) assignment plus an O(k·dims) merge — and
+    * [[graft.ops.Similarity.kmeansCentroidsFromStats]] over the standing
+    * table yields the next Lloyd centroids whenever the operator
+    * chooses to advance the round: streaming mini-batch k-means with
+    * exact batch-order-independent state. Returns processed batches. */
+  def runKmeansStatsSink(
+      spark: SparkSession, dir: String, table: String,
+      centroidRel: DataFrame, checkpoint: Option[String] = None,
+      schema: StructType = null): Long = {
+    var batches = 0L
+    EventPipeline.drainForeachBatch(readEmbStream(spark, dir, schema),
+        checkpoint) { (batch, _) =>
+      val stats = graft.ops.Similarity.kmeansAssignStatsMicros(
+        batch, "embedding", "vec_id", centroidRel)
+      val merged =
+        if (spark.catalog.tableExists(table))
+          graft.ops.Similarity.mergeKmeansStats(spark.table(table), stats)
+        else stats
+      graft.core.TableStore.overwriteTable(spark, table,
+        merged.localCheckpoint(eager = true))
+      batches += 1
+    }
+    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
+    batches
   }
 
   /** Streaming token-count accumulator: each micro-batch's per-(source,
@@ -203,126 +258,28 @@ object CurationStream {
     * anti-joining on them — would make the merge itself idempotent at
     * the cost of a per-batch read-modify-write on the ledger.) Returns
     * the number of micro-batches. */
-  /** Streaming bottom-k quantile-sketch sink: each micro-batch's
-    * per-source sketch (graft.ops.Quantiles.bottomKSketch over token
-    * counts) folds into a persisted sketch table through
-    * mergeSketches' order-statistics identity. Unlike the additive
-    * token-count sink below, this merge is REPLAY-IDEMPOTENT — the
-    * merge dedups on (g, id) before re-ranking, and a given document
-    * carries one immutable (hkey, ntok) — so re-processing an
-    * already-merged batch is a no-op and a checkpoint is a COST
-    * optimization (skip re-reads after restart), not a correctness
-    * requirement. The landed table is bit-identical to the batch
-    * sketch of all files (q123c pins it; StreamingSpec pins the
-    * replay no-op). Per-batch cost: one batch-sized sketch build plus
-    * a merge window over ≤ 2k rows per source. Returns the number of
-    * micro-batches. */
-  def runQuantileSketchSink(
-      spark: SparkSession, dir: String, table: String, k: Int = 64,
-      checkpoint: Option[String] = None,
-      schema: StructType = null): Long = {
-    val stream = readEmbStream(spark, dir, schema)
-    var batches = 0L
-    val writer0 = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val d = batch.select(col("source"), col("doc_id"),
-          graft.ops.TextAnalysis.tokenCount(col("text")).cast("long")
-            .as("ntok"))
-        val sk = graft.ops.Quantiles.bottomKSketch(
-          d, "source", "doc_id", "ntok", k)
-        val merged =
-          if (spark.catalog.tableExists(table))
-            graft.ops.Quantiles.mergeSketches(
-              Seq(spark.table(table), sk), k)
-          else sk
-        graft.core.TableStore.overwriteTable(spark, table,
-          merged.localCheckpoint(eager = true))
-        batches += 1
-        ()
-      }
-    val q = checkpoint
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
-    batches
-  }
-
-  /** Streaming k-means sufficient-statistics sink: each micro-batch of
-    * embeddings is assigned against the FROZEN `centroidRel` (micro
-    * space, (cid, d, cm)) and folded into the standing (cid, d, n, sxm)
-    * stats table — exact integer addition, so the standing table after
-    * any number of batches EQUALS a scratch pass over every row seen
-    * (the [[graft.ops.Similarity.kmeansAssignStatsMicros]] decomposition
-    * law; q147b gates it). Per batch the corpus is never rescanned —
-    * O(batch) assignment plus an O(k·dims) merge — and
-    * [[graft.ops.Similarity.kmeansCentroidsFromStats]] over the standing
-    * table yields the next Lloyd centroids whenever the operator
-    * chooses to advance the round: streaming mini-batch k-means with
-    * exact batch-order-independent state. Returns processed batches. */
-  def runKmeansStatsSink(
-      spark: SparkSession, dir: String, table: String,
-      centroidRel: DataFrame, checkpoint: Option[String] = None,
-      schema: StructType = null): Long = {
-    val stream = readEmbStream(spark, dir, schema)
-    var batches = 0L
-    val writer0 = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val stats = graft.ops.Similarity.kmeansAssignStatsMicros(
-          batch, "embedding", "vec_id", centroidRel)
-        val merged =
-          if (spark.catalog.tableExists(table))
-            graft.ops.Similarity.mergeKmeansStats(spark.table(table), stats)
-          else stats
-        graft.core.TableStore.overwriteTable(spark, table,
-          merged.localCheckpoint(eager = true))
-        batches += 1
-        ()
-      }
-    val q = checkpoint
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
-    batches
-  }
-
   def runTokenCountSink(
       spark: SparkSession, dir: String, table: String,
       checkpoint: Option[String] = None,
       schema: StructType = null): Long = {
-    val stream = readEmbStream(spark, dir, schema)
     var batches = 0L
-    val writer0 = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions._
-        val counts = batch.select(col("source"),
-            explode(graft.ops.TextAnalysis.tokens(lower(col("text"))))
-              .as("token"))
-          .groupBy(col("source"), col("token"))
-          .agg(count(lit(1)).as("c"))
-        val merged =
-          if (spark.catalog.tableExists(table))
-            spark.table(table).unionAll(counts)
-              .groupBy(col("source"), col("token"))
-              .agg(sum(col("c")).as("c"))
-          else counts
-        graft.core.TableStore.overwriteTable(spark, table,
-          merged.localCheckpoint(eager = true))
-        batches += 1
-        ()
-      }
-    val q = checkpoint
-      .fold(writer0)(c => writer0.option("checkpointLocation", c))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    EventPipeline.drainForeachBatch(readEmbStream(spark, dir, schema),
+        checkpoint) { (batch, _) =>
+      val counts = batch.select(col("source"),
+          explode(graft.ops.TextAnalysis.tokens(lower(col("text"))))
+            .as("token"))
+        .groupBy(col("source"), col("token"))
+        .agg(count(lit(1)).as("c"))
+      val merged =
+        if (spark.catalog.tableExists(table))
+          spark.table(table).unionAll(counts)
+            .groupBy(col("source"), col("token"))
+            .agg(sum(col("c")).as("c"))
+        else counts
+      graft.core.TableStore.overwriteTable(spark, table,
+        merged.localCheckpoint(eager = true))
+      batches += 1
+    }
     if (spark.catalog.tableExists(table)) spark.catalog.refreshTable(table)
     batches
   }

@@ -381,44 +381,38 @@ object EventPipeline {
     val stream = readEventStream(spark, dir,
       glob = "events*.parquet", maxFilesPerTrigger = Some(1),
       schema = sourceSchema)
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batches.incrementAndGet()
-        val incoming = latestPerUser(batch)
-        val merged =
-          if (spark.catalog.tableExists(table))
-            latestPerUser(spark.table(table).unionByName(incoming))
-          else incoming
-        if (versioned) {
-          // reader-atomic mode: each batch's snapshot becomes the next
-          // immutable version and ONE catalog op repoints the head, so
-          // a concurrent dashboard reader NEVER hits the swap window
-          // (and an in-flight scan keeps its version's files). The
-          // merge plan reads the head view (previous version's table) —
-          // distinct location from the new version being written, so no
-          // self-overwrite. keep=2 retains the head plus ONE previous
-          // version (~2 snapshots of disk): the minimum giving an
-          // in-flight reader its resolved version's files through the
-          // next publish.
-          graft.core.TableStore.publishVersioned(spark, table, merged)
-          // cadence on the engine's 0-based persistent batchId (+1 so
-          // vacuumEvery=1 fires every batch) — restart-stable, unlike
-          // the run-local counter above
-          if ((batchId + 1) % vacuumEvery == 0)
-            graft.core.TableStore.vacuumVersions(spark, table, keep = 2)
-          ()
-        } else
-          // stage-then-swap: the plan reads `table` while writing to the
-          // staging table, then two catalog ops publish it — no eager
-          // materialization, no self-overwrite (see docstring for the
-          // crash-window bounds)
-          graft.core.TableStore.publishTable(spark, table, merged)
-      }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    try q.processAllAvailable()
-    finally q.stop()
+    drainForeachBatch(stream, checkpoint) { (batch, batchId) =>
+      batches.incrementAndGet()
+      val incoming = latestPerUser(batch)
+      val merged =
+        if (spark.catalog.tableExists(table))
+          latestPerUser(spark.table(table).unionByName(incoming))
+        else incoming
+      if (versioned) {
+        // reader-atomic mode: each batch's snapshot becomes the next
+        // immutable version and ONE catalog op repoints the head, so
+        // a concurrent dashboard reader NEVER hits the swap window
+        // (and an in-flight scan keeps its version's files). The
+        // merge plan reads the head view (previous version's table) —
+        // distinct location from the new version being written, so no
+        // self-overwrite. keep=2 retains the head plus ONE previous
+        // version (~2 snapshots of disk): the minimum giving an
+        // in-flight reader its resolved version's files through the
+        // next publish.
+        graft.core.TableStore.publishVersioned(spark, table, merged)
+        // cadence on the engine's 0-based persistent batchId (+1 so
+        // vacuumEvery=1 fires every batch) — restart-stable, unlike
+        // the run-local counter above
+        if ((batchId + 1) % vacuumEvery == 0)
+          graft.core.TableStore.vacuumVersions(spark, table, keep = 2)
+        ()
+      } else
+        // stage-then-swap: the plan reads `table` while writing to the
+        // staging table, then two catalog ops publish it — no eager
+        // materialization, no self-overwrite (see docstring for the
+        // crash-window bounds)
+        graft.core.TableStore.publishTable(spark, table, merged)
+    }
     batches.get()
   }
 
@@ -447,22 +441,16 @@ object EventPipeline {
     val stream = readEventStream(spark, dir, glob = "events*.parquet",
       maxFilesPerTrigger = Some(1), schema = sourceSchema)
     val committed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(tableDir, "_delta_log")))
-            graft.core.DeltaExport.appendDeltaTable(spark, batch, tableDir)
-          else graft.core.DeltaExport.writeDeltaTable(spark, batch, tableDir)
-          committed.incrementAndGet()
-          ()
-        }
+    drainForeachBatch(stream, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty) {
+        if (java.nio.file.Files.isDirectory(
+            java.nio.file.Paths.get(tableDir, "_delta_log")))
+          graft.core.DeltaExport.appendDeltaTable(spark, batch, tableDir)
+        else graft.core.DeltaExport.writeDeltaTable(spark, batch, tableDir)
+        committed.incrementAndGet()
+        ()
       }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    try q.processAllAvailable()
-    finally q.stop()
+    }
     committed.get()
   }
 
@@ -492,22 +480,16 @@ object EventPipeline {
         tableDir)
     val processed = new java.util.concurrent.atomic.AtomicLong(0L)
     val landed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val writer = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          processed.incrementAndGet()
-          val (_, wrote) = graft.core.DeltaExport
-            .appendDeltaTableIdempotent(spark, batch, tableDir,
-              appId, batchId)
-          if (wrote) landed.incrementAndGet()
-          ()
-        }
+    drainForeachBatch(stream, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        processed.incrementAndGet()
+        val (_, wrote) = graft.core.DeltaExport
+          .appendDeltaTableIdempotent(spark, batch, tableDir,
+            appId, batchId)
+        if (wrote) landed.incrementAndGet()
+        ()
       }
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    try q.processAllAvailable()
-    finally q.stop()
+    }
     (processed.get(), landed.get())
   }
 
@@ -604,63 +586,73 @@ object EventPipeline {
     val stream = readEventStream(spark, dir,
       glob = "events*.parquet", maxFilesPerTrigger = Some(1),
       schema = sourceSchema)
+    drainForeachBatch(stream, checkpoint) { (batch, batchId) =>
+      batches.incrementAndGet()
+      val incoming = latestPerUser(batch).withColumn("__bucket",
+        graft.core.Bucketing.bucketExpr(col("user_id"), buckets))
+      if (!spark.catalog.tableExists(table)) {
+        // seed batch: create the hash-partitioned table (partition col
+        // lands last in the table schema, as insertInto expects) and
+        // record the bucket-count contract beside it
+        graft.core.Bucketing.writePartitioned(incoming, table, "__bucket")
+        graft.core.TableStore.setBucketCount(spark, table, buckets)
+      } else {
+        // fail with a named cause when the name collides with a table
+        // that is not PARTITIONED by __bucket (e.g. one the SNAPSHOT
+        // sink published, or an unpartitioned table that merely
+        // CARRIES a __bucket data column — on which dynamic overwrite
+        // silently degrades to a FULL-table overwrite and every row
+        // outside the touched buckets would be deleted)
+        require(graft.core.TableStore.partitionColumns(spark, table)
+            .contains("__bucket"),
+          s"table $table exists but is not partitioned by __bucket — " +
+            "it was not created by the partition-scoped upsert sink")
+        graft.core.TableStore.bucketCount(spark, table) match {
+          case Some(seeded) =>
+            require(seeded == buckets,
+              s"table $table was seeded with graft.buckets=$seeded but " +
+                s"this sink was started with buckets=$buckets — a " +
+                "different modulus strands old rows in partitions the " +
+                "touched-bucket merge never reads")
+          case None =>
+            // NO recorded contract: either the seed crashed between
+            // writePartitioned and setBucketCount, or the table
+            // predates/bypassed the contract. Stamping the resumed
+            // value here would TRUST it — exactly the silent
+            // duplicate-key hole the guard exists to close — so fail
+            // loudly and make the operator attest the real modulus.
+            throw new IllegalStateException(
+              s"table $table has no recorded bucket contract " +
+                "(graft.buckets property absent) — attest the modulus " +
+                "it was seeded with via TableStore.setBucketCount(" +
+                s"spark, \"$table\", <seed buckets>) and restart")
+        }
+        val merged = partitionedMergeFrame(spark, table, incoming)
+          // break lineage: insertInto rejects a plan that reads its own
+          // target; materialized size is bounded by the TOUCHED
+          // partitions, not the table (the whole point of this sink)
+          .localCheckpoint(eager = true)
+        graft.core.Bucketing.overwritePartitions(merged, table)
+      }
+      onBatchComplete(batchId)
+    }
+    batches.get()
+  }
+
+  /** Drain `stream` through a foreachBatch sink until its input is
+    * exhausted: `body` runs once per micro-batch (with the engine's batch
+    * id), then the query stops, also when a batch fails. With
+    * `checkpoint` the file source's commit log lets a restarted run skip
+    * the files this one consumed. */
+  private[streaming] def drainForeachBatch(stream: DataFrame,
+      checkpoint: Option[String])(body: (DataFrame, Long) => Unit): Unit = {
     val writer = stream.writeStream
       .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batches.incrementAndGet()
-        val incoming = latestPerUser(batch).withColumn("__bucket",
-          graft.core.Bucketing.bucketExpr(col("user_id"), buckets))
-        if (!spark.catalog.tableExists(table)) {
-          // seed batch: create the hash-partitioned table (partition col
-          // lands last in the table schema, as insertInto expects) and
-          // record the bucket-count contract beside it
-          graft.core.Bucketing.writePartitioned(incoming, table, "__bucket")
-          graft.core.TableStore.setBucketCount(spark, table, buckets)
-        } else {
-          // fail with a named cause when the name collides with a table
-          // that is not PARTITIONED by __bucket (e.g. one the SNAPSHOT
-          // sink published, or an unpartitioned table that merely
-          // CARRIES a __bucket data column — on which dynamic overwrite
-          // silently degrades to a FULL-table overwrite and every row
-          // outside the touched buckets would be deleted)
-          require(graft.core.TableStore.partitionColumns(spark, table)
-              .contains("__bucket"),
-            s"table $table exists but is not partitioned by __bucket — " +
-              "it was not created by the partition-scoped upsert sink")
-          graft.core.TableStore.bucketCount(spark, table) match {
-            case Some(seeded) =>
-              require(seeded == buckets,
-                s"table $table was seeded with graft.buckets=$seeded but " +
-                  s"this sink was started with buckets=$buckets — a " +
-                  "different modulus strands old rows in partitions the " +
-                  "touched-bucket merge never reads")
-            case None =>
-              // NO recorded contract: either the seed crashed between
-              // writePartitioned and setBucketCount, or the table
-              // predates/bypassed the contract. Stamping the resumed
-              // value here would TRUST it — exactly the silent
-              // duplicate-key hole the guard exists to close — so fail
-              // loudly and make the operator attest the real modulus.
-              throw new IllegalStateException(
-                s"table $table has no recorded bucket contract " +
-                  "(graft.buckets property absent) — attest the modulus " +
-                  "it was seeded with via TableStore.setBucketCount(" +
-                  s"spark, \"$table\", <seed buckets>) and restart")
-          }
-          val merged = partitionedMergeFrame(spark, table, incoming)
-            // break lineage: insertInto rejects a plan that reads its own
-            // target; materialized size is bounded by the TOUCHED
-            // partitions, not the table (the whole point of this sink)
-            .localCheckpoint(eager = true)
-          graft.core.Bucketing.overwritePartitions(merged, table)
-        }
-        onBatchComplete(batchId)
-      }
+      .foreachBatch(body)
     checkpoint.foreach(writer.option("checkpointLocation", _))
     val q = writer.start()
     try q.processAllAvailable()
     finally q.stop()
-    batches.get()
   }
 
   /** True iff `checkpoint` names a checkpoint a previous query actually

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Graph, Similarity}
-import graft.queries.TextVectorQueries
+import graft.queries.{SemanticBlocking, TextVectorQueries}
 
 /** Hand-computed update-rule checks for label propagation plus a
   * geometric-coherence end-to-end: labels that follow the embedding
@@ -106,16 +106,11 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("convergence telemetry: changed-label frontier is non-increasing and the stats twin returns identical labels") {
-    // q114b's exact shape: blocked kNN edges, vec_id % 5 seeds, 3 rounds
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-      k = Similarity.cellCountFor(e.count()), iters = 2)
-    val edges = Similarity.knnGraphBlocked(e, "embedding", "vec_id",
-        cents, k = 5, probes = 4, replicas = 2)
-      .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("vec_id").as("node"),
-      when(col("vec_id") % 5 === 0, col("label")).as("seed_label"))
+    // q114b's graph (blocked kNN edges, vec_id % 5 seeds), 3 rounds
+    val (labelNodes, blockedEdges) = SemanticBlocking.propagationGraph(
+      spark.read.parquet(s"$sfDir/embeddings.parquet"))
+    val edges = blockedEdges.localCheckpoint()
+    val nodes = SemanticBlocking.seedLabels(labelNodes)
     val (labels, rounds) = Graph.labelPropagationWithStats(nodes, edges, 3)
     assert(rounds.map(_._1) === Seq(1, 2, 3))
     // round 1 labels the seeded neighborhoods — the biggest frontier;

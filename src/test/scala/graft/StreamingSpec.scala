@@ -1304,19 +1304,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming semantic-dedup sink: micro-batched result equals the sequential batch fold; re-ingest adds nothing") {
-    import graft.ops.{Dedup, Similarity}
+    import graft.queries.SemanticBlocking
     import graft.streaming.CurationStream
     val e = Tables.load(spark, sfDir, "embeddings")
-    val seed = e.filter(col("vec_id") % 5 =!= 0)
-    val inc = e.filter(col("vec_id") % 5 === 0)
-    val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-      k = 8, iters = 2).localCheckpoint(eager = true)
-    val keptSeed = seed.join(
-      Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-        cents, probes = 2)
-        .filter(col("kept")).select(col("id")),
-      seed("vec_id") === col("id"))
-      .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
+    val (seed, inc) = SemanticBlocking.seedAndCrawl(e)
+    val cents = SemanticBlocking.trainedCells(e).localCheckpoint(eager = true)
+    val keptSeed = SemanticBlocking.keptSeed(seed, cents)
       .localCheckpoint(eager = true)
     val streamTbl = "default.t_sem_sink"
     val foldTbl = "default.t_sem_fold"
@@ -1326,8 +1319,8 @@ class StreamingSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE IF EXISTS $streamTbl")
       graft.core.TableStore.overwriteTable(spark, streamTbl, keptSeed)
       val nBatches = CurationStream.runSemanticDedupSink(
-        spark, dir, streamTbl, cents, threshold = 0.45, probes = 2)
-      assert(nBatches === 3L, s"expected 3 micro-batches, got $nBatches")
+        spark, dir, streamTbl, cents, threshold = 0.45, probes = 2).size
+      assert(nBatches === 3, s"expected 3 micro-batches, got $nBatches")
       // manual fold over the SAME files in mtime order — the semantics
       // the sink must reproduce batch for batch
       spark.sql(s"DROP TABLE IF EXISTS $foldTbl")
@@ -1363,19 +1356,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming semantic-dedup sink telemetry: per-batch stats account for every row and the landed total") {
-    import graft.ops.{Dedup, Similarity}
+    import graft.queries.SemanticBlocking
     import graft.streaming.CurationStream
     val e = Tables.load(spark, sfDir, "embeddings")
-    val seed = e.filter(col("vec_id") % 5 =!= 0)
-    val inc = e.filter(col("vec_id") % 5 === 0)
-    val cents = Similarity.kmeansCentroids(e, "embedding", "vec_id",
-      k = 8, iters = 2).localCheckpoint(eager = true)
-    val keptSeed = seed.join(
-      Dedup.semanticDedupBlocked(seed, "embedding", "vec_id", 0.45,
-        cents, probes = 2)
-        .filter(col("kept")).select(col("id")),
-      seed("vec_id") === col("id"))
-      .select(seed.columns.map(seed(_)).toIndexedSeq: _*)
+    val (seed, inc) = SemanticBlocking.seedAndCrawl(e)
+    val cents = SemanticBlocking.trainedCells(e).localCheckpoint(eager = true)
+    val keptSeed = SemanticBlocking.keptSeed(seed, cents)
       .localCheckpoint(eager = true)
     val tbl = "default.t_sem_stats"
     try {
@@ -1383,7 +1369,7 @@ class StreamingSpec extends SparkTestBase {
       graft.core.TableStore.overwriteTable(spark, tbl, keptSeed)
       val before = spark.table(tbl).count()
       val dir = CurationStream.stageEmbeddings(inc, parts = 3)
-      val stats = CurationStream.runSemanticDedupSinkWithStats(
+      val stats = CurationStream.runSemanticDedupSink(
         spark, dir, tbl, cents, threshold = 0.45, probes = 2)
       assert(stats.map(_.batchId) === stats.map(_.batchId).sorted,
         "stats must come back in batch order")
@@ -1419,7 +1405,7 @@ class StreamingSpec extends SparkTestBase {
     try {
       val dir = CurationStream.stageEmbeddings(half1)
       assert(CurationStream.runSemanticDedupSink(
-        spark, dir, tbl, cents, checkpoint = Some(ckpt)) === 1L)
+        spark, dir, tbl, cents, checkpoint = Some(ckpt)).size === 1)
       val afterFirst = spark.table(tbl).count()
       assert(afterFirst > 0L)
       // a later file lands in the same directory (strictly newer mtime)
@@ -1431,10 +1417,33 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700009000000L))
       // the resumed run must vet ONLY the new file - one batch, not two
       assert(CurationStream.runSemanticDedupSink(
-        spark, dir, tbl, cents, checkpoint = Some(ckpt)) === 1L)
+        spark, dir, tbl, cents, checkpoint = Some(ckpt)).size === 1)
       assert(spark.table(tbl).count() > afterFirst,
         "the new file's survivors must land on resume")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
+  test("Bench's sink section runs q101g's registered pipeline above the fixed-cell corpus size") {
+    // 2,500 vectors: cellCountFor gives 10 cells, where a hard-coded 8
+    // would retrain the shared index and vet through other cells
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink_sf").toString
+    val n = 2500L
+    try {
+      BenchOne.inflateEmbeddings(Tables.load(spark, sfDir, "embeddings"), 5)
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(Tables.load(spark, dir, "embeddings").count() === n)
+      val (_, stats) = Bench.sinkSection(spark, dir, "default.t_bench_sink")
+      assert(stats.size === 3)
+      assert(spark.table(graft.queries.SemanticBlocking.IndexTable)
+        .select("__index_k").head().getInt(0) ===
+        graft.ops.Similarity.cellCountFor(n))
+      val q101g = SparkEntry.queries("q101g_stream_semantic_dedup")(spark, dir)
+      assert(stats.map(_.keptRows).sum === q101g.filter(col("kept")).count())
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS default.t_bench_sink")
+      spark.sql("DROP TABLE IF EXISTS default.semdedup_corpus")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("q101i stream-fold contract row is empty at the test SF") {

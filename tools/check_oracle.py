@@ -1,15 +1,20 @@
 #!/usr/bin/env python3
 """Local pre-flight for the driver's DuckDB-oracle gate.
 
-Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--against <otherVerifyOutDir>]
 
 Reads each <verifyOutDir>/<name>/ parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the sfDir tables, sorts
 columns by name and rows by all columns, and diffs values (floats to 1e-9
 rel tolerance so we can spot true logic mismatches vs hash-level float
 noise — the driver hashes exactly, so any float diff printed here is a
-risk to fix at the query level)."""
-import json, math, os, sys
+risk to fix at the query level).
+
+With --against, every dumped result — rows-only ones included — is also
+compared row for row (same columns, same normalized rows) with the result
+of the same name in another Verify dump, e.g. one made at the parent
+commit; any difference, or a result present in only one dump, fails."""
+import argparse, json, math, os, sys
 import duckdb
 import pyarrow.dataset as ds
 
@@ -24,21 +29,51 @@ def norm(v):
 def sort_key(row):
     return tuple((x is None, str(type(x)), str(x)) for x in row)
 
+def results(out_dir):
+    return sorted(n for n in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, n)))
+
+def load_rows(path):
+    """(sorted column names, rows normalized and sorted) of one dump."""
+    tbl = ds.dataset(path, format="parquet").to_table()
+    cols = sorted(tbl.column_names)
+    rows = sorted((tuple(norm(r[c]) for c in cols) for r in tbl.to_pylist()),
+                  key=sort_key)
+    return cols, rows
+
+def parity(out_dir, other_dir):
+    """Row-for-row comparison of every result in two Verify dumps."""
+    mine, theirs = set(results(out_dir)), set(results(other_dir))
+    n_same = n_diff = 0
+    for name in sorted(mine | theirs):
+        if name not in mine or name not in theirs:
+            n_diff += 1
+            side = "this dump" if name in mine else "the other dump"
+            print(f"  [DIFF-missing] {name}: only in {side}")
+            continue
+        cols, rows = load_rows(os.path.join(out_dir, name))
+        ocols, orows = load_rows(os.path.join(other_dir, name))
+        if cols != ocols:
+            n_diff += 1
+            print(f"  [DIFF-schema] {name}: {cols} vs {ocols}")
+        elif rows != orows:
+            n_diff += 1
+            differing = sum(1 for a, b in zip(rows, orows) if a != b)
+            print(f"  [DIFF-rows] {name}: {len(rows)} vs {len(orows)} rows, "
+                  f"{differing} differ in sorted order")
+        else:
+            n_same += 1
+    print(f"\nparity: {n_same} identical, {n_diff} differing")
+    return n_diff
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_ok = n_bad = n_skip = 0
-    for name in sorted(os.listdir(out_dir)):
-        path = os.path.join(out_dir, name)
-        if not os.path.isdir(path):
-            continue
-        tbl = ds.dataset(path, format="parquet").to_table()
-        cols = sorted(tbl.column_names)
-        spark_rows = sorted(
-            (tuple(norm(r[c]) for c in cols) for r in tbl.to_pylist()),
-            key=sort_key)
+    for name in results(out_dir):
+        cols, spark_rows = load_rows(os.path.join(out_dir, name))
         if name not in oracles:
             n_skip += 1
             print(f"  [rows-only] {name}: {len(spark_rows)} rows")
@@ -88,7 +123,16 @@ def main(sf_dir, out_dir):
                 print(f"    spark={a}")
                 print(f"    duck ={b}")
     print(f"\n{n_ok} exact-match, {n_bad} failing, {n_skip} rows-only")
-    return 1 if n_bad else 0
+    return n_bad
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--against", metavar="OTHER_OUT_DIR",
+                    help="also compare every result row for row with this dump")
+    args = ap.parse_args()
+    failed = main(args.sf_dir, args.out_dir)
+    if args.against:
+        failed += parity(args.out_dir, args.against)
+    sys.exit(1 if failed else 0)
