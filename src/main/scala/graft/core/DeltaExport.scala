@@ -26,6 +26,20 @@ import org.apache.spark.sql.types.DataType
   * reproduces the dataset. Those are the properties a real Delta
   * reader checks first.
   *
+  * Implemented feature set. Writers: append (flat, partitioned,
+  * idempotent through `txn`), overwrite, copy-on-write MERGE and
+  * DELETE, deletion-vector DELETE / UPDATE, RESTORE, flat OPTIMIZE
+  * (ZORDER / Hilbert), schema evolution (ADD COLUMNS), column mapping
+  * upgrade and RENAME COLUMN, CHECK constraints, identity columns,
+  * generated columns, invariants, append-only, change data feed,
+  * classic and multi-part checkpoints, log expiry and vacuum. Readers:
+  * version time travel, partition- and stats-pruned scans, CDF, and
+  * the reader features deletionVectors, columnMapping, timestampNtz,
+  * rowTracking, domainMetadata and typeWidening. Refused by name:
+  * reader feature `v2Checkpoint` ([[checkReaderProtocol]]), and every
+  * write to a table that declares row tracking or in-commit
+  * timestamps ([[refuseUnmaintainedFeatures]]).
+  *
   * Scale shape: the data write is an ordinary distributed parquet
   * write; only the log (one JSON line per file + 2 header actions) is
   * driver-side — the same O(files) metadata cost every Delta writer
@@ -86,26 +100,11 @@ object DeltaExport {
     } finally walk.close()
   }
 
-  // Hive-style path escaping — the algorithm Spark's partitionBy applies
-  // to partition directory names (ExternalCatalogUtils.escapePathName):
-  // each character below becomes %XX (uppercase hex). unescapePathName
-  // inverts it by decoding ANY %XX pair, keeping a malformed '%' literal
-  // — the same tolerance Hive/Spark readers show.
-  private val pathEscapeChars: Set[Char] =
-    (('\u0001' to '\u001F') ++
-      Seq('"', '#', '%', '\'', '*', '/', ':', '=', '?', '\\',
-        '\u007F', '{', '[', ']', '^')).toSet
-
-  private[core] def escapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach { c =>
-      if (pathEscapeChars(c)) sb.append(f"%%${c.toInt}%02X")
-      else sb.append(c)
-    }
-    sb.toString
-  }
-
-  private[core] def unescapePathName(s: String): String = {
+  // Hive-style path unescaping — the inverse of the %XX escaping Spark's
+  // partitionBy applies to partition directory names
+  // (ExternalCatalogUtils.escapePathName): decodes ANY %XX pair, keeping
+  // a malformed '%' literal — the same tolerance Hive/Spark readers show.
+  private def unescapePathName(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -136,8 +135,8 @@ object DeltaExport {
 
   /** Whether scanned-file path `uriPath` (input_file_name, decoded) is
     * logged live path `f`: relative adds match by root-relative
-    * suffix; ABSOLUTE adds (a shallow clone's references into its
-    * source) by their resolved absolute path — the suffix rule would
+    * suffix; ABSOLUTE adds (a foreign shallow clone's references into
+    * its source) by their resolved absolute path — the suffix rule would
     * never fire for them (uriPath never contains "//"). */
   private def uriMatchesLogged(dir: String, uriPath: String,
       f: String): Boolean =
@@ -527,7 +526,7 @@ object DeltaExport {
     writeCommit(dir, v,
       idActions ++
         addActionsRelative(spark, dir, fresh, System.currentTimeMillis()),
-      "APPEND", tableMeta = Some(meta))
+      "APPEND")
     v
   }
 
@@ -542,8 +541,8 @@ object DeltaExport {
       while (it.hasNext) {
         val n = it.next().getFileName.toString
         // strictly NNN.json commit names: a staging temp file, a
-        // foreign sidecar, or a checksum twin must not crash (or
-        // miscount) the version listing
+        // foreign writer's extra log file, or a checksum twin must not
+        // crash (or miscount) the version listing
         if (n.endsWith(".json"))
           n.stripSuffix(".json").toLongOption.foreach(b += _)
       }
@@ -552,40 +551,10 @@ object DeltaExport {
   }
 
   /** The commitInfo action every commit leads with — the protocol's
-    * free-form provenance record, and what anchors TIMESTAMP time
-    * travel ([[versionAtTimestamp]]): a reader resolves `timestampAsOf`
-    * against these, falling back to commit-file mtimes for foreign logs
-    * that omit them (Delta's own fallback). `ict` is the IN-COMMIT
-    * TIMESTAMP (the writer feature that makes commit time part of the
-    * atomic commit content instead of trusting file mtimes a copy or
-    * restore can scramble) — present on every commit of an enabled
-    * table, strictly greater than its predecessor's. */
-  private def commitInfoLine(now: Long, op: String,
-      ict: Option[Long] = None): String = {
-    val ictField = ict.map(t => s""""inCommitTimestamp":$t,""").getOrElse("")
-    s"""{"commitInfo":{"timestamp":$now,$ictField"operation":"${esc(op)}"}}"""
-  }
-
-  private val ciIctRe = """"inCommitTimestamp":(\d+)""".r
-
-  /** The in-commit timestamp of surviving commit `v`, if its
-    * commitInfo carries one (top-level only — the
-    * [[commitInfoTopLevel]] nesting rule). Streams lines lazily:
-    * every writeCommit peeks its predecessor, and commitInfo is the
-    * first line of any commit this writer produced — a full read of a
-    * many-thousand-add append commit would tax every later commit. */
-  private def ictOf(dir: String, v: Long): Option[Long] = {
-    val p = Paths.get(dir, "_delta_log", commitFile(v))
-    if (!Files.isRegularFile(p)) return None
-    val lines = Files.lines(p, StandardCharsets.UTF_8)
-    try {
-      import scala.jdk.CollectionConverters._
-      lines.iterator().asScala
-        .find(_.startsWith("""{"commitInfo""""))
-        .flatMap(l => ciIctRe.findFirstMatchIn(commitInfoTopLevel(l))
-          .map(_.group(1).toLong))
-    } finally lines.close()
-  }
+    * free-form provenance record; its `timestamp` is the dead-since
+    * clock of the timed vacuum ([[commitTimestamp]]). */
+  private def commitInfoLine(now: Long, op: String): String =
+    s"""{"commitInfo":{"timestamp":$now,"operation":"${esc(op)}"}}"""
 
   /** PUT-IF-ABSENT commit — the Delta protocol's one concurrency
     * primitive: version N commits atomically or not at all, and a
@@ -607,67 +576,9 @@ object DeltaExport {
     * snapshot AND blocks every retry of that version). An object store
     * deployment swaps this for its conditional put. */
   private[core] def writeCommit(dir: String, v: Long, actions: Seq[String],
-      op: String, firstIct: Option[Long] = None,
-      tableMeta: Option[String] = None): Unit = {
+      op: String): Unit = {
     val logDir = Paths.get(dir, "_delta_log")
     val target = logDir.resolve(commitFile(v))
-    // IN-COMMIT TIMESTAMP chain: once any predecessor carries one
-    // (the enablement commit seeds it via `firstIct`), every later
-    // commit continues it STRICTLY monotone — max(clock, prev + 1), so
-    // a regressed wall clock can never reorder timestamp travel. The
-    // predecessor is v-1, the newest surviving JSON commit by
-    // construction (expireLogBefore retains the checkpoint-version
-    // commit on ICT tables precisely so this chain never breaks).
-    val ict: Option[Long] = firstIct.orElse(
-      if (v == 0L) None
-      else {
-        // v-1 normally; after a FOREIGN log cleanup (which, unlike
-        // graft's own expiry, may delete every pre-checkpoint JSON)
-        // the newest SURVIVING predecessor carries the chain.
-        val prev =
-          if (Files.isRegularFile(
-              logDir.resolve(commitFile(v - 1)))) Some(v - 1)
-          else logVersions(dir).filter(_ < v).lastOption
-        prev.flatMap(ictOf(dir, _))
-          .map(p => math.max(System.currentTimeMillis(), p + 1L))
-          .orElse {
-            // ENABLEMENT-MARKER fallback (ADVICE r18): the chain can
-            // still break on an ICT-enabled table — a foreign cleanup
-            // that deletes every JSON commit covered by a checkpoint,
-            // or a spec-violating foreign writer committing v-1
-            // without the field. Silently dropping the chain would be
-            // a spec violation of OUR OWN (every later commit omits
-            // inCommitTimestamp while the enablement markers still
-            // claim it, degrading timestamp travel to mtimes) — so
-            // when the governing configuration says
-            // delta.enableInCommitTimestamps=true, the chain restarts
-            // from the deepest surviving predecessor's ICT and the
-            // enablement timestamp, strictly above both. The deep
-            // walk runs ONLY here — the common non-ICT table never
-            // pays it, and an intact chain answered at v-1 above.
-            // A metaData action riding THIS commit outranks the
-            // caller's PRE-commit snapshot meta: a commit that itself
-            // re-enables ICT (e.g. RESTORE back across an ICT-disabled
-            // stretch to an ICT-enabled version) must stamp per its
-            // OWN committed configuration (ADVICE r19).
-            val evidence = actions
-              .find(_.startsWith("""{"metaData""""))
-              .orElse(tableMeta)
-            evidence.map(configurationOf)
-              .filter(_.get("delta.enableInCommitTimestamps")
-                .exists(_.equalsIgnoreCase("true")))
-              .map { conf =>
-                val enableTs = conf
-                  .get("delta.inCommitTimestampEnablementTimestamp")
-                  .flatMap(_.toLongOption).getOrElse(0L)
-                val deepest = logVersions(dir).filter(_ < v)
-                  .reverseIterator.flatMap(ictOf(dir, _))
-                  .nextOption().getOrElse(0L)
-                math.max(System.currentTimeMillis(),
-                  math.max(enableTs, deepest) + 1L)
-              }
-          }
-      })
     // Files.createFile (unlike createTempFile's forced 0600) creates
     // with the default mode filtered by the PROCESS UMASK — the same
     // permissions the old direct write published, so a umask-0022 host
@@ -693,7 +604,7 @@ object DeltaExport {
         java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
       try {
         ch.write(java.nio.ByteBuffer.wrap(
-          ((commitInfoLine(System.currentTimeMillis(), op, ict) +: actions)
+          ((commitInfoLine(System.currentTimeMillis(), op) +: actions)
             .mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)))
         ch.force(true)
       } finally ch.close()
@@ -750,55 +661,18 @@ object DeltaExport {
     sb.toString
   }
 
-  /** Commit timestamp of a surviving JSON commit, in the protocol's
-    * preference order: the commitInfo's IN-COMMIT timestamp when
-    * present (it is part of the atomic commit content, immune to the
-    * mtime scrambling a log copy or filesystem migration causes), else
-    * its top-level `timestamp` (nested objects a foreign writer
-    * serializes first are elided — see [[commitInfoTopLevel]]), else
-    * the commit file's modification time. */
+  /** Commit timestamp of a surviving JSON commit: its commitInfo's
+    * top-level `timestamp` (nested objects a foreign writer serializes
+    * first are elided — see [[commitInfoTopLevel]]), else the commit
+    * file's modification time. */
   private def commitTimestamp(dir: String, v: Long): Long = {
     val p = Paths.get(dir, "_delta_log", commitFile(v))
     val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     txt.split("\n").find(_.startsWith("""{"commitInfo""""))
-      .flatMap { l =>
-        val top = commitInfoTopLevel(l)
-        ciIctRe.findFirstMatchIn(top).orElse(ciTsRe.findFirstMatchIn(top))
-          .map(_.group(1).toLong)
-      }
+      .flatMap(l => ciTsRe.findFirstMatchIn(commitInfoTopLevel(l))
+        .map(_.group(1).toLong))
       .getOrElse(Files.getLastModifiedTime(p).toMillis)
   }
-
-  /** Resolve `timestampAsOf` to a version — Delta's rule: the LATEST
-    * commit whose (monotonically adjusted) timestamp is <= `ts`.
-    * Timestamps are adjusted exactly as Delta adjusts them — each
-    * commit's effective time is max(its recorded time, predecessor + 1
-    * ms) — so clock skew between writers can reorder nothing. A
-    * timestamp before the first SURVIVING commit is refused loudly
-    * (after log expiry the early history is no longer
-    * timestamp-resolvable, same as Delta's earliest-available error). */
-  def versionAtTimestamp(dir: String, ts: Long): Long = {
-    val versions = logVersions(dir)
-    require(versions.nonEmpty, s"no JSON commits under $dir")
-    var prev = Long.MinValue
-    val adjusted = versions.map { v =>
-      val t = math.max(commitTimestamp(dir, v),
-        if (prev == Long.MinValue) Long.MinValue else prev + 1)
-      prev = t
-      (v, t)
-    }
-    val eligible = adjusted.filter(_._2 <= ts)
-    require(eligible.nonEmpty,
-      s"timestamp $ts precedes the first surviving commit " +
-        s"(v${adjusted.head._1} at ${adjusted.head._2}) — earlier " +
-        "history is not reconstructible")
-    eligible.last._1
-  }
-
-  /** TIMESTAMP time travel: the snapshot as of wall-clock `ts`. */
-  def readDeltaTableAsOfTimestamp(spark: SparkSession, dir: String,
-      ts: Long): DataFrame =
-    readDeltaTable(spark, dir, Some(versionAtTimestamp(dir, ts)))
 
   /** Parsed `_delta_log/_last_checkpoint` pointer. `parts` is None for
     * the classic single-file form, Some(n) for a multi-part checkpoint
@@ -807,20 +681,10 @@ object DeltaExport {
     * across parts carries no semantics, a path is either live or a
     * tombstone, never both). */
   final case class CheckpointPointer(version: Long, size: Long,
-      parts: Option[Int], v2Manifest: Option[String] = None)
-
-  // V2 (UUID-named) checkpoint manifest: <v>.checkpoint.<uuid>.parquet
-  // — the table-features form (reader feature `v2Checkpoint`); file
-  // actions live in _sidecars/ parquet files the manifest references.
-  private def v2ManifestRe(v: Long) =
-    (java.util.regex.Pattern.quote(f"$v%020d.checkpoint.") +
-      """[0-9a-fA-F-]{36}\.(parquet|json)""").r
+      parts: Option[Int])
 
   /** Last-checkpoint pointer parsed from `_delta_log/_last_checkpoint`,
-    * None when the table has never been checkpointed. When the pointer
-    * names a version whose CLASSIC file(s) are absent, the UUID-named
-    * V2 manifest for that version is discovered by listing (the spec's
-    * own discovery rule — the pointer file does not carry the uuid). */
+    * None when the table has never been checkpointed. */
   def lastCheckpoint(dir: String): Option[CheckpointPointer] = {
     val p = Paths.get(dir, "_delta_log", "_last_checkpoint")
     if (!Files.isRegularFile(p)) None
@@ -836,52 +700,7 @@ object DeltaExport {
       require(parts.forall(_ >= 1),
         s"malformed _last_checkpoint (parts must be >= 1): $txt")
       val size = sRe.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L)
-      val classicExists = checkpointPaths(dir, v, parts)
-        .forall(Files.isRegularFile(_))
-      val v2 =
-        if (classicExists || parts.isDefined) None
-        else {
-          val logDir = Paths.get(dir, "_delta_log")
-          val re = v2ManifestRe(v)
-          val walk = Files.list(logDir)
-          val cands = try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.map(_.getFileName.toString)
-              .filter(n => re.pattern.matcher(n).matches()).toSeq.sorted
-          } finally walk.close()
-          // prefer a parquet manifest — a coexisting JSON one (another
-          // writer's checkpoint of the same version) must not shadow it
-          val hit = cands.filter(_.endsWith(".parquet")).lastOption
-            .orElse(cands.lastOption)
-          hit.foreach(n => require(n.endsWith(".parquet"),
-            s"V2 checkpoint manifest $n is JSON — this consumer reads " +
-              "the parquet manifest form only"))
-          hit
-        }
-      Some(CheckpointPointer(v, size, parts, v2))
-    }
-  }
-
-  /** Sidecar parquet files a V2 manifest references, resolved under
-    * `_delta_log/_sidecars/` (relative file names, per the spec) or
-    * verbatim when absolute. Bounded driver metadata — one row per
-    * sidecar. */
-  /** A sidecar reference resolves under `_delta_log/_sidecars/`
-    * (relative file names, per the spec) or verbatim when absolute —
-    * ONE rule shared by the loader and the pointer helpers. */
-  private def resolveSidecarPath(dir: String, n: String): String =
-    if (isAbsoluteDataPath(n)) resolveDataPath(dir, n)
-    else s"$dir/_delta_log/_sidecars/$n"
-
-  private def sidecarPathsOf(spark: SparkSession, dir: String,
-      manifestPath: String): Seq[String] = {
-    val mdf = spark.read.parquet(manifestPath)
-    if (!mdf.schema.fieldNames.contains("sidecar")) Nil
-    else {
-      import org.apache.spark.sql.functions.col
-      mdf.filter(col("sidecar").isNotNull)
-        .select(col("sidecar.path")).collect().map(_.getString(0))
-        .toSeq.sorted.map(resolveSidecarPath(dir, _))
+      Some(CheckpointPointer(v, size, parts))
     }
   }
 
@@ -935,29 +754,15 @@ object DeltaExport {
     // identity column must refuse, but the writer's own allocation is
     // not an explicit insert
     enforceWriterObligations(appendMeta, "APPEND", removesData = false,
-      Some(df), rowTrackingCapable = true, protocol = st.protocol)
+      Some(df), protocol = st.protocol)
     val before = dataFiles(dir).map(_.getFileName.toString).toSet
     toPhysicalFrame(batch, tableSchema.fields.toSeq, cmCtx.mode)
       .write.mode("append").parquet(dir)
     val fresh = dataFiles(dir).filterNot(p => before(p.getFileName.toString))
     require(fresh.nonEmpty, "append produced no data files")
-    val now = System.currentTimeMillis()
-    // row-tracked appends allocate fresh baseRowIds above the high
-    // watermark and advance the rowTracking domain in the same commit
-    // — in BOTH phases: a supported-but-not-yet-enabled table (feature
-    // declared, property off) still obliges every add to carry an id,
-    // or a later enablement could never identify these rows
-    val (adds, tailActions) =
-      if (!rowTrackingEnabled(appendMeta) &&
-          !rowTrackingDeclared(st.protocol))
-        (addActions(spark, fresh, now), Seq.empty[String])
-      else {
-        val (a, hwm) = rowTrackedAddActions(spark, fresh, now, v,
-          st.rowIdHwm, dataChange = true)
-        (a, Seq(rowTrackingDomainAction(hwm)))
-      }
-    writeCommit(dir, v, idActions ++ adds ++ tailActions,
-      "APPEND", tableMeta = Some(appendMeta))
+    writeCommit(dir, v,
+      idActions ++ addActions(spark, fresh, System.currentTimeMillis()),
+      "APPEND")
     v
   }
 
@@ -1108,7 +913,7 @@ object DeltaExport {
       s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":true}}""")
     writeCommit(dir, v,
       metaActions ++ removes ++ addActions(spark, fresh, now) ++ cdcActions,
-      "OVERWRITE", tableMeta = Some(snap.meta))
+      "OVERWRITE")
     v
   }
 
@@ -1195,348 +1000,6 @@ object DeltaExport {
       .withColumn("_change_type", lit("update_postimage"))
     inserts.unionByName(deletes).unionByName(prims).unionByName(posts)
       .select(cols.map(c => col(s"__r.$c").as(c)) :+ col("_change_type"): _*)
-  }
-
-  // ---- ROW TRACKING (table feature `rowTracking`) ----
-
-  /** Scan `files` of an UNPARTITIONED table with stable row identity
-    * attached: `_row_id` / `_row_commit_version`, resolved per the
-    * public Delta protocol's Row Tracking rules — a row's id is the
-    * file's materialized row-id column value when present (how
-    * rewrites like OPTIMIZE preserve ids across position changes),
-    * else the add's `baseRowId` + the row's parquet position; the
-    * commit version resolves materialized-else-`defaultRowCommitVersion`
-    * the same way. The materialized column names come from the
-    * table's `delta.rowTracking.materialized*ColumnName` properties;
-    * they are hidden physical columns absent from the logical schema,
-    * and a file that lacks them reads NULL under the explicit request
-    * schema — which IS the fall-back signal. Per-file identity info is
-    * bounded driver metadata (one row per file, broadcast), the same
-    * planning state every Delta reader holds. */
-  private def scanFilesWithRowIds(spark: SparkSession, dir: String,
-      meta: String, files: Seq[String],
-      dvs: Map[String, DeletionVectors.Descriptor],
-      rowIds: Map[String, (Option[Long], Option[Long])]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(meta)).asInstanceOf[StructType]
-    require(partitionColumnsOf(meta).isEmpty,
-      "row-id scan supports unpartitioned tables only — partition-" +
-        "column re-attachment with row identity is not implemented")
-    val outFields = schema.fields ++ Seq(
-      StructField("_row_id", LongType),
-      StructField("_row_commit_version", LongType))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(outFields))
-    val ctx = mappingCtx(spark, meta, schema)
-    val rs = ctx.physSchema(schema)
-    val conf = configurationOf(meta)
-    val matId = conf.get("delta.rowTracking.materializedRowIdColumnName")
-    val matRcv =
-      conf.get("delta.rowTracking.materializedRowCommitVersionColumnName")
-    val readSchema = StructType(rs.fields ++
-      (matId.toSeq ++ matRcv.toSeq).distinct.map(n =>
-        StructField(n, LongType)))
-    // files join by BASENAME (the fileStatsFor discipline): the
-    // _metadata.file_path URI percent-encodes directory names, so a
-    // full-path key would silently miss on any encoded table path and
-    // NULL every id; part-file basenames carry a uuid and stay unique
-    // across clone-mixed file sets. The basename SEGMENT is encoded by
-    // the same URI rule, so the driver-side key below encodes each
-    // logged name identically — a foreign 'my file.parquet' add reads
-    // back as 'my%20file.parquet' on both sides of the join.
-    def attach(df: DataFrame): DataFrame =
-      df.withColumn("__pos", col("_metadata.row_index"))
-        .withColumn("__file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-    def encSeg(name: String): String =
-      new java.net.URI(null, null, "/" + name, null)
-        .getRawPath.stripPrefix("/")
-    val tagCols = readSchema.fieldNames.toSeq ++ Seq("__pos", "__file")
-    val (dvFiles, plain) = files.partition(dvs.contains)
-    val parts =
-      (if (plain.nonEmpty)
-        Seq(attach(ctx.session.read.schema(readSchema)
-          .parquet(plain.map(f => resolveDataPath(dir, f)): _*)))
-      else Nil) ++
-      // DV masking through the shared primitive — one implementation
-      dvFiles.sorted.map(f => dvAntiJoin(spark, dir,
-        attach(ctx.session.read.schema(readSchema)
-          .parquet(resolveDataPath(dir, f))), dvs(f), tagCols))
-    val scanned = parts.reduce(_.unionByName(_))
-    import spark.implicits._
-    val info = files.map { f =>
-      val (br, dr) = rowIds.getOrElse(f,
-        (Option.empty[Long], Option.empty[Long]))
-      (encSeg(Paths.get(resolveDataPath(dir, f)).getFileName.toString),
-        br, dr)
-    }
-    // basename collisions would fan every matching row out to BOTH
-    // info rows — refuse loudly rather than silently duplicate
-    require(info.map(_._1).distinct.size == info.size,
-      "row-id scan found files sharing a basename — the basename join " +
-        "key is ambiguous for this file set")
-    val infoDf = info.toDF("__file", "__base", "__drcv")
-    val joined = scanned.join(broadcast(infoDf), Seq("__file"), "left")
-    val ridFallback = col("__base") + col("__pos")
-    val rid = matId.map(n => coalesce(col(n), ridFallback))
-      .getOrElse(ridFallback)
-    val rcv = matRcv.map(n => coalesce(col(n), col("__drcv")))
-      .getOrElse(col("__drcv"))
-    ctx.toLogical(
-      joined
-        .withColumn("_row_id", rid.cast(LongType))
-        .withColumn("_row_commit_version", rcv.cast(LongType))
-        .select((rs.fieldNames.toSeq ++
-          Seq("_row_id", "_row_commit_version")).map(col): _*),
-      schema, Seq("_row_id", "_row_commit_version"))
-  }
-
-  /** The live snapshot with `_row_id` / `_row_commit_version` attached
-    * — the `_metadata.row_id`-style stable-identity read over a
-    * row-tracked table (ids survive OPTIMIZE through materialization;
-    * appends carry fresh ids above the high watermark). Files written
-    * before tracking was enabled (no baseRowId, no materialized
-    * column) surface NULL ids — honest absence, never an invented
-    * identity. */
-  def readDeltaTableWithRowIds(spark: SparkSession, dir: String,
-      versionAsOf: Option[Long] = None): DataFrame = {
-    val st = snapshotState(spark, dir, versionAsOf, keepStats = false)
-    scanFilesWithRowIds(spark, dir, st.meta, st.live.toSeq.sorted,
-      st.dvs.toMap, st.rowIds.toMap)
-  }
-
-  /** [[deltaChangesBetween]] keyed by INTRINSIC row identity instead
-    * of user key columns — what row tracking buys CDC: change identity
-    * survives OPTIMIZE (carry-over rows keep their materialized ids
-    * and drop as non-changes) and needs no uniqueness assumption
-    * beyond the protocol's own. Same O(changes) shape: only files
-    * removed/added/DV-changed between the versions are read. Output:
-    * the post-schema columns + `_row_id` + `_change_type`. Refuses
-    * when a scanned slice carries a NULL `_row_id` (a pre-enablement
-    * file in the diff) — classification by identity is impossible
-    * there; use the key-column form instead. */
-  def deltaChangesByRowId(spark: SparkSession, dir: String,
-      fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(fromVersion < toVersion,
-      s"fromVersion $fromVersion must precede toVersion $toVersion")
-    val stFrom = snapshotState(spark, dir, Some(fromVersion),
-      keepStats = false)
-    val stTo = snapshotState(spark, dir, Some(toVersion), keepStats = false)
-    val dvChanged = stFrom.live.toSet.intersect(stTo.live.toSet)
-      .filter(f => stFrom.dvs.get(f) != stTo.dvs.get(f))
-    val removed = (stFrom.live -- stTo.live ++ dvChanged).toSeq
-    val added = (stTo.live -- stFrom.live ++ dvChanged).toSeq
-    val toSchema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(stTo.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val fromSchema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(stFrom.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    // field survival checks by IDENTITY (mapping id / physical bridge /
-    // name), so a mapped-table rename between the versions is a match,
-    // not a false "dropped column"
-    val extinct = fromSchema.fields
-      .filterNot(ff => toSchema.fields.exists(tf =>
-        sameFieldIdentity(ff, tf)))
-      .map(_.name)
-    require(extinct.isEmpty,
-      s"columns ${extinct.mkString(",")} of v$fromVersion are gone in " +
-        s"v$toVersion — a snapshot diff cannot represent a dropped column")
-    val pre0 = scanFilesWithRowIds(spark, dir, stFrom.meta, removed,
-      stFrom.dvs.toMap, stFrom.rowIds.toMap)
-    val post = scanFilesWithRowIds(spark, dir, stTo.meta, added,
-      stTo.dvs.toMap, stTo.rowIds.toMap)
-    // the pre side ALIGNS into the to-schema through the CDF reader's
-    // machinery: renames resolve by identity, widened types cast, new
-    // columns read NULL — without this, a typeWidening or rename
-    // between the versions would break the image comparison.
-    // Both slices snapshot eagerly: the guard aggregates below would
-    // otherwise re-read every changed file a second time before the
-    // classification join does — 4 scans of the change set instead of 2
-    val pre = alignToSchema(pre0, fromSchema, toSchema,
-      Seq("_row_id", "_row_commit_version"))
-      .localCheckpoint(eager = true)
-    val postS = post.localCheckpoint(eager = true)
-    Seq(fromVersion -> pre, toVersion -> postS).foreach { case (v, df) =>
-      // ONE guard job per side: group by id, then fold null-id row
-      // count and the max group size out of one aggregate
-      val g = df.groupBy(col("_row_id")).agg(count(lit(1)).as("__c"))
-        .agg(
-          sum(when(col("_row_id").isNull, col("__c")).otherwise(lit(0L)))
-            .as("__nulls"),
-          max(when(col("_row_id").isNotNull, col("__c"))).as("__maxc"))
-        .collect().head
-      val nulls = if (g.isNullAt(0)) 0L else g.getLong(0)
-      val maxc = if (g.isNullAt(1)) 0L else g.getLong(1)
-      require(nulls == 0L,
-        s"changed file(s) of v$v hold $nulls row(s) WITHOUT a row id " +
-          "(written before tracking was enabled) — identity-keyed CDC " +
-          "is not derivable; use deltaChangesBetween with key columns")
-      require(maxc <= 1L,
-        s"changed files of v$v hold a duplicate _row_id — the log " +
-          "violates row tracking's unique-id invariant")
-    }
-    // the image deliberately EXCLUDES _row_commit_version: a rewrite
-    // that preserves a row's id and values but re-stamps its default
-    // commit version (an OPTIMIZE without materialized versions) is a
-    // storage move, not a row change
-    val cols = toSchema.fieldNames.toSeq
-    def image(df: DataFrame, side: String) = df.select(
-      Seq(col("_row_id"), struct(cols.map(col): _*).as(s"__$side")): _*)
-    val joined = image(pre, "pre").join(image(postS, "post"),
-      Seq("_row_id"), "full_outer")
-    val inserts = joined.filter(col("__pre").isNull)
-      .select(col("_row_id"), col("__post").as("__r"))
-      .withColumn("_change_type", lit("insert"))
-    val deletes = joined.filter(col("__post").isNull)
-      .select(col("_row_id"), col("__pre").as("__r"))
-      .withColumn("_change_type", lit("delete"))
-    val updated = joined
-      .filter(col("__pre").isNotNull && col("__post").isNotNull &&
-        !(col("__pre") <=> col("__post")))
-    val prims = updated.select(col("_row_id"), col("__pre").as("__r"))
-      .withColumn("_change_type", lit("update_preimage"))
-    val posts = updated.select(col("_row_id"), col("__post").as("__r"))
-      .withColumn("_change_type", lit("update_postimage"))
-    inserts.unionByName(deletes).unionByName(prims).unionByName(posts)
-      .select(cols.map(c => col(s"__r.$c").as(c)) ++
-        Seq(col("_row_id"), col("_change_type")): _*)
-  }
-
-  /** Whether the table binds the row-tracking STABILITY obligation
-    * (ids must be preserved across rewrites). */
-  private def rowTrackingEnabled(meta: String): Boolean =
-    configurationOf(meta).get("delta.enableRowTracking")
-      .exists(_.equalsIgnoreCase("true"))
-
-  /** Whether the protocol DECLARES rowTracking in writerFeatures — the
-    * spec's "supported" phase: every new add must carry a baseRowId
-    * even before delta.enableRowTracking flips stability on (a later
-    * enablement does not backfill), but rewrites need not preserve
-    * ids yet. */
-  private def rowTrackingDeclared(protocol: String): Boolean =
-    Option(protocol).exists(_.contains(""""rowTracking""""))
-
-  /** The rowTracking domain's watermark-advance action. */
-  private def rowTrackingDomainAction(hwm: Long): String =
-    s"""{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\\"rowIdHighWaterMark\\":$hwm}","removed":false}}"""
-
-  /** Add actions for a row-tracked commit: contiguous `baseRowId`
-    * ranges allocated above `hwm0` in file-name order (sizes from the
-    * same one-pass stats scan every add already runs), each add
-    * stamped with `defaultRowCommitVersion` = this commit. Returns
-    * (actions, new high watermark) — the commit must also carry
-    * [[rowTrackingDomainAction]] for the returned watermark. */
-  private def rowTrackedAddActions(spark: SparkSession,
-      fresh: Seq[java.nio.file.Path], now: Long, v: Long, hwm0: Long,
-      dataChange: Boolean): (Seq[String], Long) = {
-    val stats = fileStatsFor(spark, fresh)
-    var base = hwm0 + 1
-    val adds = fresh.sortBy(_.getFileName.toString).map { p =>
-      val st = stats.get(p.getFileName.toString)
-      val n = st.flatMap(s => statsNumRecordsRe.findFirstMatchIn(s))
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"no numRecords for fresh file $p — cannot allocate row ids"))
-      val b = base
-      base += n
-      val statsField = st.map(s => s""","stats":"${esc(s)}"""")
-        .getOrElse("")
-      s"""{"add":{"path":"${esc(p.getFileName.toString)}","partitionValues":{},"size":${Files
-          .size(p)},"modificationTime":$now,"dataChange":$dataChange$statsField,"baseRowId":$b,"defaultRowCommitVersion":$v}}"""
-    }
-    (adds, base - 1)
-  }
-
-  /** Enable ROW TRACKING (writer features `rowTracking` +
-    * `domainMetadata`) on an existing unpartitioned table — Delta's
-    * `ALTER TABLE … SET TBLPROPERTIES (delta.enableRowTracking=true)`
-    * with the spec's BACKFILL: every live file is re-added verbatim
-    * (dataChange=false; stats/DV carried) with a fresh contiguous
-    * `baseRowId` range, the metaData gains the property + generated
-    * materialized-column names, the protocol merges the two writer
-    * features, and the rowTracking domain records the high watermark.
-    * From this commit on, appends allocate above the watermark, DV
-    * deletes stay id-safe by construction, and OPTIMIZE preserves ids
-    * by materializing them ([[optimizeDeltaTable]]); row-REWRITING DML
-    * still refuses by name. Returns the new version. */
-  def enableRowTracking(spark: SparkSession, dir: String): Long = {
-    val v = latestVersion(dir) + 1
-    // keepStats: the backfill re-adds re-render each add's stats
-    // verbatim, and numRecords comes from them
-    val snap = snapshotState(spark, dir, None)
-    val conf0 = configurationOf(snap.meta)
-    require(!conf0.get("delta.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")),
-      "row tracking is already enabled")
-    // a foreign table in the SUPPORTED phase already carries baseRowIds
-    // and a watermark the spec says an enablement must preserve — this
-    // backfill assigns from 0 and would RE-IDENTIFY every row, so it
-    // upgrades genuinely untracked tables only
-    require(snap.rowIds.isEmpty &&
-        !snap.domains.contains("delta.rowTracking"),
-      "table already carries row-tracking state (baseRowIds or a " +
-        "rowIdHighWaterMark domain) — enabling over partial foreign " +
-        "state would re-identify rows; this enabler upgrades untracked " +
-        "tables only")
-    require(partitionColumnsOf(snap.meta).isEmpty,
-      "row tracking here supports unpartitioned tables only — the " +
-        "row-id scan does not re-attach partition columns")
-    val live = snap.live.toSeq.sorted
-    def numRecords(f: String): Long =
-      snap.stats.get(f)
-        .flatMap(s => statsNumRecordsRe.findFirstMatchIn(s)
-          .map(_.group(1).toLong))
-        // stats-less foreign add: one bounded footer-read job
-        .getOrElse(spark.read.parquet(resolveDataPath(dir, f)).count())
-    val now = System.currentTimeMillis()
-    var base = 0L
-    val reAdds = live.map { f =>
-      val b = base
-      base += numRecords(f)
-      val pv = snap.pvals.getOrElse(f, Map.empty).toSeq.sortBy(_._1)
-        .map { case (k, value) =>
-          s""""${esc(k)}":${Option(value).map(x => s""""${esc(x)}"""")
-              .getOrElse("null")}"""
-        }.mkString(",")
-      val statsField = snap.stats.get(f)
-        .map(s => s""","stats":"${esc(s)}"""").getOrElse("")
-      val dvField = snap.dvs.get(f)
-        .map(d => s""","deletionVector":${DeletionVectors.descriptorJson(d)}""")
-        .getOrElse("")
-      s"""{"add":{"path":"${esc(f)}","partitionValues":{$pv},"size":${Files
-          .size(Paths.get(resolveDataPath(dir, f)))},"modificationTime":$now,"dataChange":false$statsField$dvField,"baseRowId":$b,"defaultRowCommitVersion":$v}}"""
-    }
-    val suffix = java.util.UUID.randomUUID().toString.take(8)
-    val conf = conf0 ++ Map(
-      "delta.enableRowTracking" -> "true",
-      "delta.rowTracking.materializedRowIdColumnName" ->
-        s"_row_id_col_$suffix",
-      "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-        s"_rcv_col_$suffix")
-    // protocol: merge the two writer features; minReaderVersion is
-    // untouched (rowTracking is writer-only — old readers still read)
-    val cur = Option(snap.protocol).getOrElse(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val (mrv, _, rf, wf0) = parseProtocolLine(cur)
-    def render(fs: Set[String]) =
-      fs.toSeq.sorted.map(f => s""""${esc(f)}"""").mkString(",")
-    val rfField = rf
-      .map(r => s""","readerFeatures":[${render(r)}]""")
-      .getOrElse(if (mrv >= 3) s""","readerFeatures":[]""" else "")
-    val protoAction =
-      s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":7$rfField,"writerFeatures":[${render(
-          wf0 ++ Set("rowTracking", "domainMetadata"))}]}}"""
-    writeCommit(dir, v,
-      Seq(protoAction, withConfiguration(snap.meta, conf)) ++ reAdds ++
-        Seq(rowTrackingDomainAction(base - 1)),
-      "ENABLE ROW TRACKING", tableMeta = Some(snap.meta))
-    v
   }
 
   // ---- CHANGE DATA FEED (writer feature `changeDataFeed`) ----
@@ -1913,7 +1376,7 @@ object DeltaExport {
         .select(outCols.map(col): _*)
     }.filter(_ != null)
     if (perCommit.isEmpty) {
-      // only maintenance commits (OPTIMIZE / PURGE / CHECKPOINT) in
+      // only maintenance commits (OPTIMIZE / CHECKPOINT) in
       // range — an EMPTY feed, not an error: a quiet poll cycle is the
       // incremental consumer's normal case
       val fields = untilSchema.fields ++ Seq(
@@ -1971,12 +1434,8 @@ object DeltaExport {
         s"table's logged schema ${tableSchema.catalogString}")
     val cmCtx = mappingCtx(spark, snap.meta, tableSchema)
     enforceCheckConstraints(snap.meta, batch, "APPEND")
-    // a FLAT idempotent append allocates row ids like the plain form;
-    // a partitioned row-tracked table (foreign — our enable is
-    // flat-only) still refuses by name
     enforceWriterObligations(snap.meta, "APPEND", removesData = false,
-      Some(df), rowTrackingCapable = pcols.isEmpty,
-      protocol = snap.protocol)
+      Some(df), protocol = snap.protocol)
     // partitioned tables take the Hive-layout write and relative-path
     // adds; flat tables the top-level form — the txn line is the same
     val before = dataFilesRelative(dir).toSet
@@ -1986,21 +1445,11 @@ object DeltaExport {
       .mode("append").parquet(dir)
     val fresh = dataFilesRelative(dir).filterNot(before)
     require(fresh.nonEmpty, "append produced no data files")
-    val now = System.currentTimeMillis()
-    val (adds, tailActions) =
-      if (!rowTrackingEnabled(snap.meta) &&
-          !rowTrackingDeclared(snap.protocol))
-        (addActionsRelative(spark, dir, fresh, now), Seq.empty[String])
-      else {
-        val (a, hwm) = rowTrackedAddActions(spark,
-          fresh.map(f => Paths.get(dir, f)), now, v, snap.rowIdHwm,
-          dataChange = true)
-        (a, Seq(rowTrackingDomainAction(hwm)))
-      }
     writeCommit(dir, v,
       s"""{"txn":{"appId":"${esc(appId)}","version":$txnVersion}}""" +:
-        (idActions ++ adds ++ tailActions),
-      "APPEND", tableMeta = Some(snap.meta))
+        (idActions ++
+          addActionsRelative(spark, dir, fresh, System.currentTimeMillis())),
+      "APPEND")
     (v, true)
   }
 
@@ -2045,6 +1494,8 @@ object DeltaExport {
     val cdf = cdfEnabled(now.meta)
     enforceWriterObligations(now.meta, "RESTORE", removesData = true, None,
       emitsChangeData = cdf, protocol = now.protocol)
+    // the restored metaData governs from this commit on
+    refuseUnmaintainedFeatures(then_.meta, now.protocol, "RESTORE")
     val gone = then_.live.toSeq
       .filterNot(f => Files.isRegularFile(
         Paths.get(resolveDataPath(dir, f))))
@@ -2153,7 +1604,7 @@ object DeltaExport {
     }
     writeCommit(dir, v,
       metaActions ++ removeActions ++ addActions ++ cdcActions,
-      "RESTORE", tableMeta = Some(now.meta))
+      "RESTORE")
     v
   }
 
@@ -2173,6 +1624,7 @@ object DeltaExport {
       newSchema: org.apache.spark.sql.types.StructType): Long = {
     val v = latestVersion(dir) + 1
     val snap = snapshotState(spark, dir, None, keepStats = false)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol, "ADD COLUMNS")
     val old = org.apache.spark.sql.types.DataType
       .fromJson(schemaStringOf(snap.meta))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -2254,6 +1706,8 @@ object DeltaExport {
   def upgradeToColumnMapping(spark: SparkSession, dir: String): Long = {
     val v = latestVersion(dir) + 1
     val snap = snapshotState(spark, dir, None, keepStats = false)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol,
+      "UPGRADE TO COLUMN MAPPING")
     val mode = columnMappingMode(snap.meta)
     require(mode == "none",
       s"table already column-mapped (mode '$mode')")
@@ -2412,6 +1866,7 @@ object DeltaExport {
       s"bad rename: '$oldName' -> '$newName'")
     val v = latestVersion(dir) + 1
     val snap = snapshotState(spark, dir, None, keepStats = false)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol, "RENAME COLUMN")
     val mode = columnMappingMode(snap.meta)
     require(mode == "name" || mode == "id",
       "RENAME COLUMN requires column mapping — on an unmapped table " +
@@ -2487,94 +1942,6 @@ object DeltaExport {
           renamed.json)}","partitionColumns":[$pcolsJson],"configuration":{${renderConfiguration(
           configurationOf(snap.meta))}},"createdTime":$now}}"""),
       "RENAME COLUMN")
-    v
-  }
-
-  /** ALTER TABLE DROP COLUMN — metadata-only under column mapping:
-    * the field leaves the schemaString; the standing parquet bytes
-    * stay where they are but become unreachable (the reader's
-    * pinned-schema scan never requests them), appends take the
-    * narrower schema from here on, and a LATER re-add of the same
-    * logical name allocates a FRESH id + physical name, so the old
-    * data provably never resurrects — exactly Delta's DROP COLUMN
-    * semantics, and exactly why it demands the mapping (on an
-    * unmapped table the name alone binds the data, so a re-added
-    * column would silently resurrect every old value). Same
-    * dependency guards as RENAME (CHECK constraints, invariants,
-    * generation expressions refuse by name); partition columns and
-    * the last remaining column refuse. Time travel before the drop
-    * still reads the column. Returns the new version. */
-  def dropDeltaTableColumn(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    val mode = columnMappingMode(snap.meta)
-    require(mode == "name" || mode == "id",
-      "DROP COLUMN requires column mapping — on an unmapped table the " +
-        "name alone binds the data, so re-adding the column later would " +
-        "silently resurrect the old values; run upgradeToColumnMapping " +
-        "first")
-    val old = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(snap.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    // NESTED drop (r19): a dotted name drops a struct field at any
-    // depth — same metadata-only semantics, same fresh-id rule for a
-    // later re-added namesake
-    val nestedDrop = name.contains(".")
-    val dropSegs = name.split('.').toSeq
-    if (!nestedDrop) {
-      require(old.fieldNames.contains(name),
-        s"no column '$name' — have ${old.fieldNames.mkString(", ")}")
-      require(old.length > 1,
-        s"'$name' is the table's only column — a zero-column table is " +
-          "unreadable")
-    }
-    require(!partitionColumnsOf(snap.meta).contains(name),
-      s"'$name' is a partition column — the layout is the contract; " +
-        "dropping it rewrites the table (overwrite)")
-    val word = exprBindsRe(name)
-    val boundConstraints = checkConstraintsOf(snap.meta).collect {
-      case (n, e) if word.findFirstIn(e).isDefined => n
-    }
-    require(boundConstraints.isEmpty,
-      s"column '$name' is referenced by CHECK constraint(s) " +
-        s"${boundConstraints.mkString(", ")} — drop them first")
-    val boundFields = old.fields.filter { f =>
-      (f.metadata.contains("delta.invariants") &&
-        word.findFirstIn(f.metadata.getString("delta.invariants")).isDefined) ||
-      (f.metadata.contains("delta.generationExpression") &&
-        word.findFirstIn(
-          f.metadata.getString("delta.generationExpression")).isDefined)
-    }.map(_.name)
-    require(boundFields.isEmpty,
-      s"column '$name' is referenced by invariant/generation " +
-        s"expression(s) on ${boundFields.mkString(", ")}")
-    val dropped =
-      if (!nestedDrop) org.apache.spark.sql.types.StructType(
-        old.fields.filterNot(_.name == name))
-      else transformAtParent(old, dropSegs, { parent =>
-        val leaf = dropSegs.last
-        require(parent.fieldNames.contains(leaf),
-          s"no field '$name' — parent has " +
-            parent.fieldNames.mkString(", "))
-        require(parent.length > 1,
-          s"'$name' is its struct's only field — an empty struct " +
-            "column is unreadable; drop the parent column instead")
-        org.apache.spark.sql.types.StructType(
-          parent.fields.filterNot(_.name == leaf))
-      })
-    val pcolsJson = partitionColumnsOf(snap.meta)
-      .map(c => s""""${esc(c)}"""").mkString(",")
-    val idRe = """"id":"((?:[^"\\]|\\.)+)"""".r
-    val id = idRe.findFirstMatchIn(snap.meta)
-      .map(m => unescapeJson(m.group(1)))
-      .getOrElse(throw new IllegalStateException("metaData carries no id"))
-    val now = System.currentTimeMillis()
-    writeCommit(dir, v, Seq(
-      s"""{"metaData":{"id":"${esc(id)}","format":{"provider":"parquet","options":{}},"schemaString":"${esc(
-          dropped.json)}","partitionColumns":[$pcolsJson],"configuration":{${renderConfiguration(
-          configurationOf(snap.meta))}},"createdTime":$now}}"""),
-      "DROP COLUMN")
     v
   }
 
@@ -2732,7 +2099,7 @@ object DeltaExport {
     writeCommit(dir, v,
       idActions ++ removes ++ addActionsRelative(spark, dir, fresh, now) ++
         cdcActions,
-      "MERGE", tableMeta = Some(snap.meta))
+      "MERGE")
     v
   }
 
@@ -2884,7 +2251,7 @@ object DeltaExport {
       s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":true}}""")
     writeCommit(dir, v,
       removes ++ addActionsRelative(spark, dir, fresh, now) ++ cdcActions,
-      "DELETE", tableMeta = Some(snap.meta))
+      "DELETE")
     v
   }
 
@@ -2900,40 +2267,16 @@ object DeltaExport {
       6 -> Set("identityColumns"))
       .filter(_._1 <= mwv).flatMap(_._2).toSet
 
-  /** One protocol-line parse for the feature-adding upgraders:
-    * (minReaderVersion, minWriterVersion, readerFeatures-as-declared,
-    * effective writerFeatures — the declared list, or the legacy
-    * implication of minWriterVersion when the table predates table
-    * features). readerFeatures stays an Option so a writerFeatures-only
-    * {1,7} table is distinguishable from a declared-empty list. */
-  private def parseProtocolLine(cur: String)
-      : (Int, Int, Option[Set[String]], Set[String]) = {
-    val mrvRe = """"minReaderVersion":(\d+)""".r
-    val mwvRe = """"minWriterVersion":(\d+)""".r
-    val rfRe = """"readerFeatures":\[([^\]]*)\]""".r
-    val wfRe = """"writerFeatures":\[([^\]]*)\]""".r
-    def feats(re: scala.util.matching.Regex): Option[Set[String]] =
-      re.findFirstMatchIn(cur).map(m => jsonStrRe.findAllMatchIn(m.group(1))
-        .map(e => unescapeJson(e.group(1))).toSet)
-    val mrv = mrvRe.findFirstMatchIn(cur).map(_.group(1).toInt).getOrElse(1)
-    val mwv = mwvRe.findFirstMatchIn(cur).map(_.group(1).toInt).getOrElse(2)
-    (mrv, mwv, feats(rfRe),
-      feats(wfRe).getOrElse(legacyWriterFeatures(mwv)))
-  }
-
   /** The protocol action that declares WRITER feature `feature`, if
-    * any — the one upgrade rule check constraints, identity columns
-    * and in-commit timestamps share: a table-features protocol MERGES
-    * the feature into writerFeatures (readerFeatures renders only when
-    * already declared — a foreign {1,7} writerFeatures-only table must
+    * any — the one upgrade rule check constraints and identity
+    * columns share: a table-features protocol MERGES the feature into
+    * writerFeatures (readerFeatures renders only when already
+    * declared — a foreign {1,7} writerFeatures-only table must
     * NOT gain an empty readerFeatures list, or spec-strict clients
     * reject it); a legacy protocol rises to the feature's legacy
-    * writer level when it has one, or straight to table features with
-    * the legacy features RE-DECLARED (dropping one would stop later
-    * writers enforcing it) when the feature is features-only. None
-    * when already declared. */
+    * writer level. None when already declared. */
   private def writerFeatureProtocol(st: ReplayState, feature: String,
-      legacyLevel: Option[Int]): Option[String] = {
+      legacyLevel: Int): Option[String] = {
     val cur = Option(st.protocol).getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
     val mrvRe = """"minReaderVersion":(\d+)""".r
@@ -2942,24 +2285,21 @@ object DeltaExport {
     val rfRe = """"readerFeatures":\[([^\]]*)\]""".r
     val mrv = mrvRe.findFirstMatchIn(cur).map(_.group(1).toInt).getOrElse(1)
     val mwv = mwvRe.findFirstMatchIn(cur).map(_.group(1).toInt).getOrElse(2)
-    def featuresLine(wf: Set[String]): String = {
-      val rfPart = rfRe.findFirstMatchIn(cur)
-        .map(m => s""","readerFeatures":[${m.group(1)}]""").getOrElse("")
-      val merged = (wf + feature).toSeq.sorted
-        .map(f => s""""${esc(f)}"""").mkString(",")
-      s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":7$rfPart,"writerFeatures":[$merged]}}"""
-    }
     wfRe.findFirstMatchIn(cur) match {
       case Some(m) =>
         val wf = jsonStrRe.findAllMatchIn(m.group(1))
           .map(e => unescapeJson(e.group(1))).toSet
-        if (wf.contains(feature)) None else Some(featuresLine(wf))
-      case None if legacyLevel.exists(mwv >= _) => None
-      case None => legacyLevel match {
-        case Some(lvl) => Some(
-          s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":$lvl}}""")
-        case None => Some(featuresLine(legacyWriterFeatures(mwv)))
-      }
+        if (wf.contains(feature)) None
+        else {
+          val rfPart = rfRe.findFirstMatchIn(cur)
+            .map(m => s""","readerFeatures":[${m.group(1)}]""").getOrElse("")
+          val merged = (wf + feature).toSeq.sorted
+            .map(f => s""""${esc(f)}"""").mkString(",")
+          Some(s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":7$rfPart,"writerFeatures":[$merged]}}""")
+        }
+      case None if mwv >= legacyLevel => None
+      case None => Some(
+        s"""{"protocol":{"minReaderVersion":$mrv,"minWriterVersion":$legacyLevel}}""")
     }
   }
 
@@ -3017,17 +2357,10 @@ object DeltaExport {
       }.mkString(",")
     val statsField = snap.stats.get(rel)
       .map(s => s""","stats":"${esc(s)}"""").getOrElse("")
-    // a row-tracked file's identity fields carry VERBATIM — the mask
-    // moves no rows, so baseRowId + position stays the id rule and a
-    // re-add without the fields would silently un-track the file
-    val rtField = snap.rowIds.get(rel).map { case (b, d) =>
-      b.map(x => s""","baseRowId":$x""").getOrElse("") +
-        d.map(x => s""","defaultRowCommitVersion":$x""").getOrElse("")
-    }.getOrElse("")
     Seq(
       s"""{"remove":{"path":"${esc(rel)}","deletionTimestamp":$now,"dataChange":true}}""",
       s"""{"add":{"path":"${esc(rel)}","partitionValues":{$pv},"size":${Files
-          .size(Paths.get(resolveDataPath(dir, rel)))},"modificationTime":$now,"dataChange":true$statsField$rtField,"deletionVector":${DeletionVectors
+          .size(Paths.get(resolveDataPath(dir, rel)))},"modificationTime":$now,"dataChange":true$statsField,"deletionVector":${DeletionVectors
           .descriptorJson(desc)}}}""")
   }
 
@@ -3127,14 +2460,45 @@ object DeltaExport {
             "NULL both as violations)"))
     }
 
+  /** Table features whose writer obligations this module does not
+    * implement, each with the property that enables it: ROW TRACKING
+    * (every new add must carry a `baseRowId` and rewrites must
+    * preserve row ids) and IN-COMMIT TIMESTAMPS (every commit must
+    * carry a strictly increasing `inCommitTimestamp`). Reads need
+    * neither: a scan ignores row ids, and the timed vacuum clocks
+    * commits by commitInfo's `timestamp`. */
+  private val unmaintainedWriterFeatures = Seq(
+    "rowTracking" -> "delta.enableRowTracking",
+    "inCommitTimestamp" -> "delta.enableInCommitTimestamps")
+
+  /** Refuse `op`, naming the feature, on a table whose protocol
+    * declares or whose configuration enables one of
+    * [[unmaintainedWriterFeatures]] — the check every commit,
+    * checkpoint and log expiry runs before it writes. A null `meta` or
+    * `protocol` means the log carries no such action. */
+  private def refuseUnmaintainedFeatures(meta: String, protocol: String,
+      op: String): Unit = {
+    val conf = Option(meta).map(configurationOf).getOrElse(Map.empty)
+    unmaintainedWriterFeatures.foreach { case (feature, property) =>
+      if (Option(protocol).exists(_.contains(s""""$feature"""")) ||
+          conf.get(property).exists(_.equalsIgnoreCase("true")))
+        throw new IllegalArgumentException(
+          s"$op on a table with table feature $feature is refused — " +
+            s"this writer does not maintain $feature (declared in the " +
+            s"protocol or enabled by $property=true); reads still work")
+    }
+  }
+
   /** Writer OBLIGATIONS bound by table properties and schema metadata
     * — the protocol binds writers, not just readers. graft enforces
     * what it can honor and refuses BY NAME what it cannot:
     *
+    *  - the [[unmaintainedWriterFeatures]] (row tracking, in-commit
+    *    timestamps) refuse every write.
     *  - `delta.appendOnly=true` forbids dataChange=true remove actions
     *    (deletes, DV masks, updates, overwrites, merges that touch
     *    files, restores); dataChange=false maintenance (OPTIMIZE,
-    *    PURGE, CHECKPOINT) and plain appends stay allowed.
+    *    CHECKPOINT) and plain appends stay allowed.
     *  - `delta.enableChangeDataFeed=true` obliges a writer committing
     *    a partial-file rewrite to emit `_change_data` files; the DML
     *    triad (DELETE COW+DV, DV UPDATE, MERGE), OVERWRITE, and
@@ -3161,37 +2525,18 @@ object DeltaExport {
     * deletion vectors; `batch` = the rows the operation adds, if any. */
   private def enforceWriterObligations(meta: String, op: String,
       removesData: Boolean, batch: Option[DataFrame],
-      emitsChangeData: Boolean = false,
-      rowTrackingCapable: Boolean = false,
-      protocol: String = null): Unit = {
+      emitsChangeData: Boolean = false, protocol: String): Unit = {
+    refuseUnmaintainedFeatures(meta, protocol, op)
     val conf = configurationOf(meta)
     // Delta parses boolean properties case-insensitively
     // (Boolean.parseBoolean) — "True"/"TRUE" bind the same obligation
     def boolProp(key: String): Boolean =
       conf.get(key).exists(_.equalsIgnoreCase("true"))
-    // row tracking binds every writer — in BOTH phases: once the
-    // protocol declares the feature ("supported"), every new add must
-    // carry a baseRowId; once the property flips ("enabled"), ids must
-    // additionally be preserved across rewrites. The ops that ALLOCATE
-    // fresh baseRowIds (appends), stay id-safe by construction
-    // (pure-mask DV deletes), or MATERIALIZE ids on rewrite (flat
-    // OPTIMIZE) pass rowTrackingCapable = true; every other
-    // file-writing op refuses by name
-    if ((boolProp("delta.enableRowTracking") ||
-        rowTrackingDeclared(protocol)) && !rowTrackingCapable)
-      throw new IllegalArgumentException(
-        s"$op on a ROW-TRACKED table (delta.enableRowTracking=true) is " +
-          "refused — this op rewrites rows without preserving their " +
-          "ids, breaking the stable-row-id invariant. Supported on " +
-          "row-tracked tables: reads (readDeltaTable / " +
-          "readDeltaTableWithRowIds / deltaChangesByRowId), APPEND " +
-          "(allocates above the watermark), DV DELETE (pure mask), " +
-          "OPTIMIZE (materializes ids), CHECKPOINT and VACUUM")
     if (removesData && boolProp("delta.appendOnly"))
       throw new IllegalArgumentException(
         s"$op on an APPEND-ONLY table (delta.appendOnly=true) is " +
           "refused — the property forbids dataChange=true remove " +
-          "actions; dataChange=false maintenance (OPTIMIZE / PURGE / " +
+          "actions; dataChange=false maintenance (OPTIMIZE / " +
           "CHECKPOINT) and appends remain allowed")
     if (removesData && !emitsChangeData &&
         boolProp("delta.enableChangeDataFeed"))
@@ -3349,8 +2694,8 @@ object DeltaExport {
   /** The metaData action with ONLY its schemaString replaced —
     * in-place surgery, so everything else a (possibly foreign) writer
     * logged — name, description, format options, createdTime —
-    * survives verbatim. The watermark-advance and SYNC IDENTITY
-    * commits' one mutation. */
+    * survives verbatim. The watermark-advance commits' one
+    * mutation. */
   private def metaActionReplacingSchema(meta: String,
       newSchema: org.apache.spark.sql.types.StructType): String = {
     val re = """"schemaString":"((?:[^"\\]|\\.)*)"""".r
@@ -3380,8 +2725,8 @@ object DeltaExport {
 
   /** Which watermarks `row`'s extrema ADVANCE (strictly beyond the
     * recorded value, in the step's direction) — the one comparison
-    * rule allocation, explicit-insert tracking, and SYNC IDENTITY all
-    * share. `row` column i is field i's extremum. */
+    * rule allocation and explicit-insert tracking share. `row`
+    * column i is field i's extremum. */
   private def advancedWatermarks(
       fields: Seq[org.apache.spark.sql.types.StructField],
       row: org.apache.spark.sql.Row): Map[String, Long] = {
@@ -3425,10 +2770,10 @@ object DeltaExport {
     * set — OVERWRITE, or any writer on a previously-empty table):
     * bootstrapping from a PARTIAL slice (a MERGE batch, DV-UPDATE
     * images) would record an extremum the untouched rows exceed,
-    * defeating the syncDeltaIdentity refusal and re-enabling exactly
-    * the collision it prevents. Nil when nothing qualifies or nothing
-    * advanced. Cost: one tiny aggregate, and only on identity tables
-    * (the raw-string probe). */
+    * defeating the no-watermark allocation refusal and re-enabling
+    * exactly the collision it prevents. Nil when nothing qualifies or
+    * nothing advanced. Cost: one tiny aggregate, and only on identity
+    * tables (the raw-string probe). */
   private def trackProvidedIdentity(st: ReplayState,
       schema: org.apache.spark.sql.types.StructType,
       rows: DataFrame, allowBootstrap: Boolean): Seq[String] = {
@@ -3449,7 +2794,7 @@ object DeltaExport {
     * legacy level 6, what Delta itself stamps on identity tables
     * ([[writerFeatureProtocol]]). */
   private def identityColumnsProtocol(st: ReplayState): Option[String] =
-    writerFeatureProtocol(st, "identityColumns", legacyLevel = Some(6))
+    writerFeatureProtocol(st, "identityColumns", legacyLevel = 6)
 
   /** Identity handling for an appending batch — the r18 turn of the
     * GENERATED ALWAYS refusal into the feature:
@@ -3464,9 +2809,9 @@ object DeltaExport {
     *    watermark past the batch's extremum (one aggregate job over
     *    the provided columns), Delta's tracking rule — a later
     *    allocation can never collide with an explicit insert
-    *  - a non-empty table with NO recorded watermark refuses by name
-    *    toward [[syncDeltaIdentity]]: allocating blind could re-issue
-    *    values already present (creation-time rows predate tracking)
+    *  - a non-empty table with NO recorded watermark refuses by
+    *    name: allocating blind could re-issue values already present
+    *    (creation-time rows predate tracking)
     *
     * Returns the batch ready to write (identity columns filled, table
     * column order) and the protocol/metaData actions the commit must
@@ -3516,8 +2861,10 @@ object DeltaExport {
           require(identityHwmOf(f).isDefined || st.live.isEmpty,
           s"table has data but identity column '${f.name}' records no " +
             "high watermark — its rows predate tracking, so a blind " +
-            "allocation could collide; run syncDeltaIdentity first " +
-            s"(Delta's ALTER TABLE … SYNC IDENTITY) — $op refused"))
+            "allocation could collide; provide the column's values " +
+            "explicitly (recording a watermark from the data is Delta's " +
+            s"ALTER TABLE … SYNC IDENTITY, not implemented here) — $op " +
+            "refused"))
         // the user batch must be the table schema MINUS the omitted
         // identity columns, in table order — same gate the plain
         // append runs, stated against the right shape
@@ -3586,84 +2933,10 @@ object DeltaExport {
       metaActionReplacingSchema(st.meta, withWatermarks(schema, advanced)))
   }
 
-  /** ALTER TABLE … SYNC IDENTITY — recompute every identity column's
-    * high watermark from the CURRENT data (one aggregate over the
-    * live snapshot: max for ascending steps, min for descending) and
-    * commit it as a metaData action. This is the recovery move the
-    * allocation refusal points at: a table whose identity rows predate
-    * watermark tracking (creation batch, foreign writer) becomes
-    * allocatable without a collision. No-op (current version returned,
-    * no commit) when no watermark moves. */
-  def syncDeltaIdentity(spark: SparkSession, dir: String): Long = {
-    import org.apache.spark.sql.types.{LongType, StructType}
-    val v = latestVersion(dir) + 1
-    val st = snapshotState(spark, dir, None, keepStats = false)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(st.meta))
-      .asInstanceOf[StructType]
-    val idFields = schema.fields.toSeq.filter(isIdentityField)
-    require(idFields.nonEmpty,
-      "table declares no identity columns — SYNC IDENTITY has nothing " +
-        "to recompute")
-    idFields.foreach(f => require(f.dataType == LongType,
-      s"identity column '${f.name}' is ${f.dataType.simpleString} — " +
-        "the protocol defines identity over bigint only"))
-    require(st.live.nonEmpty,
-      "table has no live data — there is no observed extremum to sync " +
-        "the watermark to (a fresh table allocates from start already)")
-    val table = scanFiles(spark, dir, st.meta, st.live.toSeq.sorted, None,
-      st.pvals.toMap, st.dvs.toMap)
-    val advanced = advancedWatermarks(idFields,
-      identityExtrema(table, idFields))
-    if (advanced.isEmpty) return v - 1
-    writeCommit(dir, v,
-      identityColumnsProtocol(st).toSeq :+
-        metaActionReplacingSchema(st.meta, withWatermarks(schema, advanced)),
-      "SYNC IDENTITY")
-    v
-  }
-
-  // ---- in-commit timestamps (writer feature `inCommitTimestamp`) ----
-
-  /** The protocol action ICT enablement needs, if any — the feature
-    * has NO legacy writer level ([[writerFeatureProtocol]]). */
-  private def ictProtocol(st: ReplayState): Option[String] =
-    writerFeatureProtocol(st, "inCommitTimestamp", legacyLevel = None)
-
-  /** Enable IN-COMMIT TIMESTAMPS — Delta's
-    * `delta.enableInCommitTimestamps`: from this commit on, every
-    * commit's effective time is a field INSIDE the atomic commit
-    * content, strictly greater than its predecessor's
-    * ([[writeCommit]]'s chain), and timestamp travel resolves against
-    * it instead of file mtimes — so a log copied with fresh mtimes, a
-    * filesystem migration, or a regressed wall clock can no longer
-    * reorder history. The enablement commit carries the property, the
-    * protocol's `inCommitTimestamp` writer feature, the spec's
-    * enablementVersion/Timestamp markers (readers know the mixed
-    * pre/post boundary), and the FIRST in-commit timestamp.
-    * Returns the new version. */
-  def enableInCommitTimestamps(spark: SparkSession, dir: String): Long = {
-    val v = latestVersion(dir) + 1
-    val st = snapshotState(spark, dir, None, keepStats = false)
-    val conf0 = configurationOf(st.meta)
-    require(!conf0.get("delta.enableInCommitTimestamps")
-        .exists(_.equalsIgnoreCase("true")),
-      "in-commit timestamps already enabled")
-    val now = System.currentTimeMillis()
-    val conf = conf0 +
-      ("delta.enableInCommitTimestamps" -> "true") +
-      ("delta.inCommitTimestampEnablementVersion" -> v.toString) +
-      ("delta.inCommitTimestampEnablementTimestamp" -> now.toString)
-    writeCommit(dir, v,
-      ictProtocol(st).toSeq :+ withConfiguration(st.meta, conf),
-      "SET TBLPROPERTIES", firstIct = Some(now))
-    v
-  }
-
   /** The protocol action an ADD CONSTRAINT needs, if any — legacy
     * level 3, checkConstraints' level ([[writerFeatureProtocol]]). */
   private def checkConstraintProtocol(st: ReplayState): Option[String] =
-    writerFeatureProtocol(st, "checkConstraints", legacyLevel = Some(3))
+    writerFeatureProtocol(st, "checkConstraints", legacyLevel = 3)
 
   /** ALTER TABLE ADD CONSTRAINT — the row-level data contract beside
     * the schema gate: a named SQL predicate every CURRENT row must
@@ -3681,6 +2954,7 @@ object DeltaExport {
       s"constraint name must be alphanumeric/underscore: '$name'")
     val v = latestVersion(dir) + 1
     val snap = snapshotState(spark, dir, None, keepStats = false)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol, "ADD CONSTRAINT")
     // constraints are pure configuration surgery expressed over
     // LOGICAL names — mapped tables take them natively (the standing
     // scan and every writer's enforcement both run on logical frames)
@@ -3700,23 +2974,6 @@ object DeltaExport {
       checkConstraintProtocol(snap).toSeq :+
         withConfiguration(snap.meta, conf),
       "ADD CONSTRAINT")
-    v
-  }
-
-  /** ALTER TABLE DROP CONSTRAINT — removes the configuration entry
-    * (unknown names refused; silently "dropping" nothing has burned
-    * real hours). Returns the new version. */
-  def dropCheckConstraintDeltaTable(spark: SparkSession, dir: String,
-      name: String): Long = {
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    val existing = checkConstraintsOf(snap.meta)
-    require(existing.contains(name),
-      s"no CHECK constraint named '$name' — have: " +
-        s"${existing.keys.toSeq.sorted.mkString(", ")}")
-    val conf = configurationOf(snap.meta) - s"delta.constraints.$name"
-    writeCommit(dir, v, Seq(withConfiguration(snap.meta, conf)),
-      "DROP CONSTRAINT")
     v
   }
 
@@ -3778,12 +3035,9 @@ object DeltaExport {
     // VERBATIM from the snapshot (already physical-keyed) — no
     // display-named byte is written
     val cdf = cdfEnabled(snap.meta)
-    // a pure-mask DV delete is row-tracking-safe by construction: no
-    // row moves, positions keep meaning, and the re-add carries the
-    // identity fields verbatim (dvRewriteActions)
     enforceWriterObligations(snap.meta, "DELETE (deletion vectors)",
       removesData = true, None, emitsChangeData = cdf,
-      rowTrackingCapable = true, protocol = snap.protocol)
+      protocol = snap.protocol)
     val live = snap.live.toSeq
     require(live.nonEmpty, "no live files to delete from")
     val target = liveTargetWithFile(spark, dir, snap, withPos = true)
@@ -3850,8 +3104,7 @@ object DeltaExport {
       dvRewriteActions(dir, snap, rel, (prior ++ pos).distinct.sorted, now)
     }
     writeCommit(dir, v,
-      dvUpgradedProtocol(snap).toSeq ++ actions ++ cdcActions, "DELETE",
-      tableMeta = Some(snap.meta))
+      dvUpgradedProtocol(snap).toSeq ++ actions ++ cdcActions, "DELETE")
     v
   }
 
@@ -3979,116 +3232,7 @@ object DeltaExport {
       dvUpgradedProtocol(snap).toSeq ++ idActions ++
         (dvActions ++ addActionsRelative(spark, dir, fresh, now)) ++
         cdcActions,
-      "UPDATE", tableMeta = Some(snap.meta))
-    v
-  }
-
-  /** PURGE deletion vectors — Delta's `REORG TABLE … APPLY (PURGE)`,
-    * the standard lifecycle move that pays down DV debt: every live
-    * file carrying a deletion vector is rewritten WITHOUT its masked
-    * rows, and ONE `dataChange=false` commit removes the DV'd adds and
-    * adds the clean rewrites (table CONTENT is unchanged — the masked
-    * rows were already logically deleted — which is exactly what the
-    * flag asserts; streaming consumers skip the commit). This pays
-    * down DV debt WITHOUT reshaping file boundaries (OPTIMIZE's
-    * DV-aware compaction is the reshaping alternative): after a purge
-    * the snapshot carries no vectors — every subsequent rewrite scans
-    * plain files again and the orphaned `deletion_vector_*.bin` files
-    * become vacuum-reclaimable. Time travel to pre-purge versions
-    * still applies the old vectors (their files and the old adds stay
-    * on disk until a vacuum).
-    *
-    * A file whose vector masks EVERY row just drops (a remove with no
-    * rewrite — real Delta does the same); only DV-carrying files are
-    * touched, so the cost is proportional to the DV debt, not the
-    * table. Each rewrite lands in its source file's own partition
-    * directory, so the re-add's partitionValues match the original's.
-    * Returns the new version. */
-  def purgeDeletionVectors(spark: SparkSession, dir: String): Long = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    require(!rowTrackingEnabled(snap.meta) &&
-        !rowTrackingDeclared(snap.protocol),
-      "PURGE on a ROW-TRACKED table is refused — the rewrite scrambles " +
-        "positions without materializing ids; OPTIMIZE (which " +
-        "materializes and also purges vectors) is the supported move")
-    require(snap.dvs.nonEmpty,
-      "no live file carries a deletion vector — nothing to purge")
-    val pcols = partitionColumnsOf(snap.meta)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(snap.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val cmCtx = mappingCtx(spark, snap.meta, schema)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => pcols.contains(f.name)))
-    val purged = snap.dvs.keys.toSeq.sorted
-    val now = System.currentTimeMillis()
-    // track which fresh file each rewrite produced, so its add can
-    // carry the SOURCE add's partitionValues VERBATIM (the
-    // dvRewriteActions rule) — parsing them off the fresh file's path
-    // would yield {} for a foreign non-Hive layout whose reads depend
-    // on logged pvals, silently nulling its partition columns
-    var seen = dataFilesRelative(dir).toSet
-    val perRelFresh = purged.map { rel =>
-      // mapped tables scan physically, anti-join on the row index,
-      // round-trip to logical, and land back physically (names + ids)
-      val rs = cmCtx.physSchema(dataSchema)
-      val survivors = toPhysicalFrame(
-        cmCtx.toLogical(
-          dvAntiJoin(spark, dir,
-            cmCtx.session.read.schema(rs).parquet(resolveDataPath(dir, rel)),
-            snap.dvs(rel), rs.fieldNames.toSeq),
-          dataSchema),
-        dataSchema.fields.toSeq, cmCtx.mode)
-      // fully-masked file → nothing survives → no empty rewrite
-      if (survivors.limit(1).collect().nonEmpty) {
-        // LOCALIZE-ON-WRITE for a clone's absolute add: the rewrite
-        // lands in the TARGET's own Hive directory, rebuilt from the
-        // add's logged (physical-keyed) partitionValues — the source
-        // path's directories belong to the source
-        val target =
-          if (isAbsoluteDataPath(rel)) {
-            val pv = snap.pvals.getOrElse(rel, Map.empty)
-            val segs = pcols.map(cmCtx.phys).map { c =>
-              val value = Option(pv.getOrElse(c, null)).map(escapePathName)
-                .getOrElse("__HIVE_DEFAULT_PARTITION__")
-              s"${escapePathName(c)}=$value"
-            }
-            (dir +: segs).mkString("/")
-          } else rel.lastIndexOf('/') match {
-            case -1 => dir
-            case i  => s"$dir/${rel.substring(0, i)}"
-          }
-        // one output file per source file — a purge reshapes nothing
-        survivors.coalesce(1).write.mode("append").parquet(target)
-      }
-      val nowFiles = dataFilesRelative(dir).toSet
-      val fresh = (nowFiles -- seen).toSeq.sorted
-      seen = nowFiles
-      rel -> fresh
-    }
-    val freshAll = perRelFresh.flatMap(_._2)
-    val stats = fileStatsForRelative(spark, dir, freshAll)
-    val removes = purged.map(p =>
-      s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":false}}""")
-    val adds = perRelFresh.flatMap { case (rel, freshFiles) =>
-      val pv = snap.pvals.getOrElse(rel, hivePartitionValues(rel))
-        .toSeq.sortBy(_._1)
-        .map { case (k, value) =>
-          s""""${esc(k)}":${Option(value).map(x => s""""${esc(x)}"""")
-              .getOrElse("null")}"""
-        }.mkString(",")
-      freshFiles.map { f =>
-        val statsField = stats.get(f)
-          .map(s => s""","stats":"${esc(s)}"""").getOrElse("")
-        s"""{"add":{"path":"${esc(f)}","partitionValues":{$pv},"size":${Files
-            .size(Paths.get(dir, f))},"modificationTime":$now,"dataChange":false$statsField}}"""
-      }
-    }
-    writeCommit(dir, v, removes ++ adds, "PURGE",
-      tableMeta = Some(snap.meta))
+      "UPDATE")
     v
   }
 
@@ -4153,70 +3297,22 @@ object DeltaExport {
     require(targetFiles >= 1, "targetFiles must be >= 1")
     val v = latestVersion(dir) + 1
     val snap = snapshotState(spark, dir, None, keepStats = false)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol, "OPTIMIZE")
     require(partitionColumnsOf(snap.meta).isEmpty,
-      "table is partitioned — use optimizeDeltaTablePartitioned, which " +
-        "compacts within partitions and re-emits partitionValues; a flat " +
-        "compaction would destroy the layout")
+      "table is partitioned — OPTIMIZE compacts unpartitioned tables " +
+        "only; a flat compaction would destroy the partition layout")
     val live = snap.live.toSeq
     require(live.nonEmpty, "nothing to optimize — no live files")
     val optSchema = org.apache.spark.sql.types.DataType
       .fromJson(schemaStringOf(snap.meta))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val cmCtx = mappingCtx(spark, snap.meta, optSchema)
-    // ROW TRACKING (r20): a compaction scrambles positions, so the
-    // rewrite must MATERIALIZE each surviving row's id and commit
-    // version into the configured hidden columns — the protocol's
-    // preservation rule; the fresh adds still allocate their own
-    // baseRowId range above the watermark (the spec's always-assign
-    // rule; the materialized columns override on read)
-    // ENABLED: materialize ids into the hidden columns (stability).
-    // SUPPORTED-only (feature declared, property off): adds must still
-    // carry fresh baseRowIds, but stability is not yet promised — the
-    // compaction allocates without materializing, the spec's rule.
-    val rowTracked = rowTrackingEnabled(snap.meta)
-    val rtDeclared = rowTrackingDeclared(snap.protocol)
-    // every live file must carry a baseRowId, or the compaction would
-    // materialize NULL for its rows and the fresh file's baseRowId
-    // would INVENT identities on the next read — refuse by name
-    // (driver-side, no extra job; the spec obliges baseRowId on every
-    // add of a tracked table anyway)
-    if (rowTracked) {
-      val untracked = snap.live.toSeq
-        .filterNot(f => snap.rowIds.get(f).exists(_._1.isDefined))
-        .sorted
-      require(untracked.isEmpty,
-        s"OPTIMIZE on a ROW-TRACKED table with baseRowId-less live " +
-          s"file(s) ${untracked.mkString(", ")} — their rows have no " +
-          "identity to preserve; a compaction would invent ids")
-    }
-    val conf = configurationOf(snap.meta)
-    val matCols: Seq[(String, String)] =
-      if (!rowTracked) Nil
-      else Seq(
-        "_row_id" ->
-          conf.getOrElse("delta.rowTracking.materializedRowIdColumnName",
-            throw new IllegalStateException(
-              "row tracking enabled without a materialized row-id " +
-                "column name — cannot preserve ids across OPTIMIZE")),
-        "_row_commit_version" ->
-          conf.getOrElse(
-            "delta.rowTracking.materializedRowCommitVersionColumnName",
-            throw new IllegalStateException(
-              "row tracking enabled without a materialized commit-" +
-                "version column name")))
     // DV-aware (real Delta's OPTIMIZE): the compaction scan APPLIES
     // each file's deletion vector, so the rewrite materializes the
     // deletes and the re-adds carry no vectors — compaction doubles as
     // the DV purge, and the orphaned .bin files become vacuumable
-    val df =
-      if (!rowTracked)
-        scanFiles(spark, dir, snap.meta, live, None,
-          snap.pvals.toMap, snap.dvs.toMap)
-      else matCols.foldLeft(scanFilesWithRowIds(spark, dir, snap.meta,
-          live, snap.dvs.toMap, snap.rowIds.toMap)) {
-        case (d, (logical, physical)) => d.withColumnRenamed(logical,
-          physical)
-      }
+    val df = scanFiles(spark, dir, snap.meta, live, None,
+      snap.pvals.toMap, snap.dvs.toMap)
     // curve picks the multi-column layout: "morton" is Delta's
     // OPTIMIZE ZORDER BY; "hilbert" is the liquid-clustering walk
     // (unit steps — tighter per-file hyper-rectangles, measured by
@@ -4225,126 +3321,16 @@ object DeltaExport {
       if (zorderBy.isEmpty) df.repartition(targetFiles)
       else Zorder.curveShaped(df, zorderBy, bits = 8, targetFiles, curve)
     val before = dataFiles(dir).map(_.getFileName.toString).toSet
-    val writeFields = optSchema.fields.toSeq ++ matCols.map { case (_, p) =>
-      org.apache.spark.sql.types.StructField(p,
-        org.apache.spark.sql.types.LongType)
-    }
-    toPhysicalFrame(shaped, writeFields, cmCtx.mode)
+    toPhysicalFrame(shaped, optSchema.fields.toSeq, cmCtx.mode)
       .write.mode("append").parquet(dir)
     val fresh = dataFiles(dir).filterNot(p => before(p.getFileName.toString))
     require(fresh.nonEmpty, "optimize produced no data files")
     val now = System.currentTimeMillis()
     val removes = live.sorted.map(p =>
       s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":false}}""")
-    val (adds, tailActions) =
-      if (!rowTracked && !rtDeclared)
-        (addActions(spark, fresh, now, dataChange = false),
-          Seq.empty[String])
-      else {
-        val (a, hwm) = rowTrackedAddActions(spark, fresh, now, v,
-          snap.rowIdHwm, dataChange = false)
-        (a, Seq(rowTrackingDomainAction(hwm)))
-      }
-    writeCommit(dir, v, removes ++ adds ++ tailActions,
-      "OPTIMIZE", tableMeta = Some(snap.meta))
-    v
-  }
-
-  /** OPTIMIZE for a PARTITIONED table: compact WITHIN each partition —
-    * never across, the layout is the contract — down to
-    * `targetFilesPerPartition`, optionally only the partitions matching
-    * the equality `where` (Delta's `OPTIMIZE … WHERE`; empty = all),
-    * optionally Z-ordering rows inside each partition's output files.
-    * Partitions already at or under the target are untouched (their
-    * files are neither rewritten nor re-added). One dataChange=false
-    * commit covers every compacted partition: removes for the replaced
-    * files, stats-bearing adds for the rewrites, partitionValues from
-    * the Hive directory each rewrite lands in. The per-partition loop
-    * is driver-side planning over the live-partition list — bounded
-    * metadata; each rewrite is its own distributed job (a production
-    * run would submit them concurrently; correctness is identical).
-    * Returns the new version. */
-  def optimizeDeltaTablePartitioned(spark: SparkSession, dir: String,
-      targetFilesPerPartition: Int = 1, where: Map[String, String] = Map.empty,
-      zorderBy: Seq[String] = Nil, curve: String = "morton"): Long = {
-    require(targetFilesPerPartition >= 1, "targetFilesPerPartition must be >= 1")
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    require(!rowTrackingEnabled(snap.meta) &&
-        !rowTrackingDeclared(snap.protocol),
-      "partitioned OPTIMIZE on a ROW-TRACKED table is refused — the " +
-        "row-id scan does not re-attach partition columns, so the " +
-        "rewrite cannot materialize ids")
-    val pcols = partitionColumnsOf(snap.meta)
-    require(pcols.nonEmpty,
-      "table is not partitioned — use optimizeDeltaTable")
-    val badW = where.keys.filterNot(pcols.contains)
-    require(badW.isEmpty,
-      s"where column(s) ${badW.mkString(", ")} are not partition columns")
-    val badZ = zorderBy.filter(pcols.contains)
-    require(badZ.isEmpty,
-      s"zorderBy column(s) ${badZ.mkString(", ")} are partition columns — " +
-        "constant within every output file, they cannot cluster anything")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(snap.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val cmCtx = mappingCtx(spark, snap.meta, schema)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => pcols.contains(f.name)))
-    // `where` keys are LOGICAL partition columns; the logged pvals of a
-    // mapped table are physical-keyed — translate before matching
-    val groups = snap.live.toSeq
-      .groupBy(f => logicalPvals(
-        snap.pvals.getOrElse(f, hivePartitionValues(f)), cmCtx.phys))
-      .filter { case (pv, fs) =>
-        fs.size > targetFilesPerPartition &&
-          where.forall { case (k, x) => pv.get(k).contains(x) }
-      }
-    require(groups.nonEmpty,
-      "nothing to optimize — no matching partition exceeds the target")
-    val before = dataFilesRelative(dir).toSet
-    groups.toSeq.sortBy(_._2.head).foreach { case (pv, fs) =>
-      // escape exactly as Spark's partitionBy would have — pv holds TRUE
-      // values (hivePartitionValues unescapes), so writing them raw would
-      // land rewrites in a DIFFERENT directory than the original files.
-      // Directory SEGMENTS carry physical column names (what partitionBy
-      // wrote for the standing files of a mapped table).
-      val partDir = pcols.map { c =>
-        val value = Option(pv.getOrElse(c, null)).map(escapePathName)
-          .getOrElse("__HIVE_DEFAULT_PARTITION__")
-        s"${escapePathName(cmCtx.phys(c))}=$value"
-      }.mkString("/")
-      // DV-aware within the partition (the flat form's rule): plain
-      // files scan in bulk, DV-carrying files scan alone minus their
-      // masked rows — the rewrite materializes the deletes. Partitions
-      // at/below the file target are untouched and KEEP their vectors
-      // (purgeDeletionVectors is the targeted move for those).
-      val rs = cmCtx.physSchema(dataSchema)
-      val (dvFs, plainFs) = fs.sorted.partition(snap.dvs.contains)
-      val parts =
-        (if (plainFs.nonEmpty)
-          Seq(cmCtx.session.read.schema(rs)
-            .parquet(plainFs.map(f => resolveDataPath(dir, f)): _*))
-        else Nil) ++
-        dvFs.map(f => dvAntiJoin(spark, dir,
-          cmCtx.session.read.schema(rs).parquet(resolveDataPath(dir, f)),
-          snap.dvs(f), rs.fieldNames.toSeq))
-      val df = cmCtx.toLogical(parts.reduce(_.unionByName(_)), dataSchema)
-      val shaped =
-        if (zorderBy.isEmpty) df.repartition(targetFilesPerPartition)
-        else Zorder.curveShaped(df, zorderBy, bits = 8,
-          targetFilesPerPartition, curve)
-      toPhysicalFrame(shaped, dataSchema.fields.toSeq, cmCtx.mode)
-        .write.mode("append").parquet(s"$dir/$partDir")
-    }
-    val fresh = dataFilesRelative(dir).filterNot(before)
-    require(fresh.nonEmpty, "optimize produced no data files")
-    val now = System.currentTimeMillis()
-    val removes = groups.values.flatten.toSeq.sorted.map(p =>
-      s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":false}}""")
     writeCommit(dir, v,
-      removes ++ addActionsRelative(spark, dir, fresh, now,
-        dataChange = false), "OPTIMIZE", tableMeta = Some(snap.meta))
+      removes ++ addActions(spark, fresh, now, dataChange = false),
+      "OPTIMIZE")
     v
   }
 
@@ -4371,8 +3357,8 @@ object DeltaExport {
     * Delta's own rule for untracked files. Deletion-vector `.bin`
     * files take the same clock: a bin unreferenced by the latest
     * snapshot is reclaimed only when the commit that UN-referenced it
-    * (superseding rewrite, purge, or materializing compaction) is
-    * older than the window — tracked by replaying the surviving log
+    * (a superseding rewrite or a materializing compaction) is older
+    * than the window — tracked by replaying the surviving log
     * and recording when each bin dropped out of the referenced set
     * (a later RESTORE that re-references it clears the tombstone).
     *
@@ -4543,7 +3529,7 @@ object DeltaExport {
           s"commits after checkpoint v${p.version} are missing: " +
             gap.mkString(","))
         versions.filter(_ <= p.version).foreach(scanTombstones)
-        val cpClock = checkpointScanPaths(spark, dir, p)
+        val cpClock = checkpointPaths(dir, p.version, p.parts)
           .headOption.filter(Files.isRegularFile(_))
           .map(f => Files.getLastModifiedTime(f).toMillis)
         (loadCheckpoint(spark, dir, p, keepStats = false),
@@ -4636,9 +3622,7 @@ object DeltaExport {
     val stats = scala.collection.mutable.Map.empty[String, String]
     // path -> the add action's partitionValues (column -> string value,
     // null for a null partition). RETAINED on remove — the live set
-    // governs what is scanned, and an incremental reader
-    // ([[readDeltaAppendsSince]]) may still need the values of a file a
-    // later dataChange=false rewrite removed.
+    // governs what is scanned.
     val pvals =
       scala.collection.mutable.Map.empty[String, Map[String, String]]
     // appId -> highest committed writer txn version (the protocol's
@@ -4651,14 +3635,6 @@ object DeltaExport {
     // deletes), exactly like stats.
     val dvs = scala.collection.mutable
       .Map.empty[String, DeletionVectors.Descriptor]
-    // path -> (baseRowId, defaultRowCommitVersion) off the add action
-    // (table feature `rowTracking`): the file's rows carry stable row
-    // ids baseRowId + position unless a materialized row-id column in
-    // the file overrides them (how rewrites like OPTIMIZE preserve
-    // ids across position changes, per the public Delta protocol's
-    // Row Tracking section). Either field may ride alone.
-    val rowIds = scala.collection.mutable
-      .Map.empty[String, (Option[Long], Option[Long])]
     // domain -> (configuration JSON text UNESCAPED, removed) — the
     // protocol's domainMetadata actions (writer feature
     // `domainMetadata`): latest action per domain wins; ALL domains
@@ -4667,27 +3643,8 @@ object DeltaExport {
     // that writer's state at expiry)
     val domains = scala.collection.mutable
       .Map.empty[String, (String, Boolean)]
-    /** Row-id high watermark: the rowTracking domain's recorded value,
-      * defensively maxed with every live add's baseRowId + numRecords
-      * - 1 (a spec-conformant writer maintains the domain; the fold
-      * protects against one that forgot). -1 = untracked table. */
-    var rowIdHwmAdds: Long = -1L
-    def rowIdHwm: Long = {
-      val domain = domains.get("delta.rowTracking")
-        .filterNot(_._2)
-        .flatMap(d => rowIdHwmRe.findFirstMatchIn(d._1)
-          .map(_.group(1).toLong))
-        .getOrElse(-1L)
-      math.max(domain, rowIdHwmAdds)
-    }
   }
 
-  // rowIdHighWaterMark inside the rowTracking domain's configuration —
-  // matched on both the ESCAPED (JSON commit line) and unescaped
-  // (checkpoint struct) spellings
-  private val rowIdHwmRe = """rowIdHighWaterMark\\?":(-?\d+)""".r
-  // numRecords inside an add's (escaped) stats string
-  private val statsNumRecordsRe = """numRecords\\?":(\d+)""".r
   private val domainNameRe = """"domain":"((?:[^"\\]|\\.)+)"""".r
   private val domainConfRe =
     """"configuration":"((?:[^"\\]|\\.)*)"""".r
@@ -4696,10 +3653,6 @@ object DeltaExport {
   // the stats field is a JSON STRING inside the add action (escaped);
   // key-order-tolerant like the other extractors
   private val statsRe = """"stats":"((?:[^"\\]|\\.)*)"""".r
-
-  // row tracking's per-add fields (both plain JSON numbers)
-  private val baseRowIdRe = """"baseRowId":(\d+)""".r
-  private val defaultRcvRe = """"defaultRowCommitVersion":(\d+)""".r
 
   // one `"key":"value"` or `"key":null` entry of the partitionValues
   // object (values are JSON strings or null)
@@ -4779,13 +3732,6 @@ object DeltaExport {
           case Some(d) => st.dvs(p) = d
           case None => st.dvs -= p // a re-add without a DV supersedes
         }
-        val br = baseRowIdRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        val dr = defaultRcvRe.findFirstMatchIn(l).map(_.group(1).toLong)
-        if (br.isDefined || dr.isDefined) st.rowIds(p) = (br, dr)
-        else st.rowIds -= p // a re-add without tracking supersedes
-        for (b <- br; m <- statsNumRecordsRe.findFirstMatchIn(l))
-          st.rowIdHwmAdds =
-            math.max(st.rowIdHwmAdds, b + m.group(1).toLong - 1)
       } else if (l.startsWith("""{"domainMetadata"""")) {
         for (d <- domainNameRe.findFirstMatchIn(l)) {
           val conf = domainConfRe.findFirstMatchIn(l)
@@ -4799,16 +3745,18 @@ object DeltaExport {
         st.live -= p
         st.stats -= p
         st.dvs -= p
-        st.rowIds -= p
       }
     }
   }
 
-  /** Reader protocol gate: minReaderVersion 1 is native; version 3 is
-    * accepted when every declared readerFeature is one this consumer
-    * implements (currently `deletionVectors`). Everything else is
-    * refused BY NAME — "unsupported protocol 2" tells an operator
-    * nothing; "column mapping" names the missing capability. */
+  /** Reader protocol gate: minReaderVersion 1 is native, 2 is column
+    * mapping, and version 3 is accepted when every declared
+    * readerFeature is one this consumer implements: deletionVectors,
+    * columnMapping, timestampNtz, rowTracking, domainMetadata and
+    * typeWidening. Everything else — `v2Checkpoint` among them, since
+    * the checkpoint reader loads only the classic and multi-part
+    * forms — is refused BY NAME: "unsupported protocol 3" tells an
+    * operator nothing; "v2Checkpoint" names the missing capability. */
   private def checkReaderProtocol(l: String, where: String): Unit = {
     val mrvRe = """"minReaderVersion":(\d+)""".r
     val rfRe = """"readerFeatures":\[([^\]]*)\]""".r
@@ -4837,13 +3785,11 @@ object DeltaExport {
           // (Spark's TimestampNTZType) and parquet scans it directly —
           // the feature flag exists because OLDER readers would
           // misread the column as instant-semantics timestamps.
-          // v2Checkpoint is consumed natively since r19 (UUID-named
-          // manifest + _sidecars parquet -> the same ReplayState).
-          // rowTracking is consumed natively since r20 (per-add
-          // baseRowId/defaultRowCommitVersion + materialized-column
-          // override -> readDeltaTableWithRowIds / deltaChangesByRowId);
-          // it is formally a writer feature, but some writers mirror it
-          // into readerFeatures — accepted either way. domainMetadata
+          // rowTracking needs no reader machinery for a plain scan (row
+          // ids are not surfaced; writes refuse the feature by name,
+          // [[refuseUnmaintainedFeatures]]); it is formally a writer
+          // feature, but some writers mirror it into readerFeatures —
+          // accepted either way. domainMetadata
           // needs no reader machinery: domains configure writers, and a
           // reader ignoring an unknown domain is the spec'd behavior.
           // typeWidening is consumed natively since r20: the logged
@@ -4856,13 +3802,13 @@ object DeltaExport {
           // this path — it records history the request schema already
           // reflects.
           (feats -- Set("deletionVectors", "columnMapping",
-            "timestampNtz", "v2Checkpoint", "rowTracking",
-            "domainMetadata", "typeWidening")).toSeq.sorted
+            "timestampNtz", "rowTracking", "domainMetadata",
+            "typeWidening")).toSeq.sorted
         if (unsupported.nonEmpty) throw new IllegalArgumentException(
           s"unsupported reader feature(s) $where: " +
             s"${unsupported.mkString(", ")} — this reader implements " +
             "only deletionVectors, columnMapping, timestampNtz, " +
-            "v2Checkpoint, rowTracking, domainMetadata and typeWidening")
+            "rowTracking, domainMetadata and typeWidening")
       case other => throw new IllegalArgumentException(
         s"unsupported reader protocol $where: minReaderVersion $other")
     }
@@ -5159,7 +4105,7 @@ object DeltaExport {
   // clone-specific handling (ADVICE r18)
   private val uriSchemeRe = """^[a-zA-Z][a-zA-Z0-9+.\-]*:""".r
 
-  /** Whether a logged data path is ABSOLUTE (a shallow clone's
+  /** Whether a logged data path is ABSOLUTE (a foreign shallow clone's
     * reference into its source table) rather than table-root-relative
     * — the protocol allows both ("path: relative path … or absolute
     * path"), and absolute paths may be plain or scheme-qualified
@@ -5177,106 +4123,6 @@ object DeltaExport {
       Paths.get(java.net.URI.create(p)).toString
     else if (p.startsWith("/") || uriSchemeRe.findFirstIn(p).isDefined) p
     else s"$dir/$p"
-
-  /** SHALLOW CLONE — Delta's zero-copy `CREATE TABLE … SHALLOW CLONE`:
-    * one v0 commit at `targetDir` whose adds reference the source's
-    * live files by ABSOLUTE path (bytes never move — clone is instant
-    * at any size), carrying the source's stats, partitionValues and
-    * deletion vectors verbatim (relative DV descriptors rewrite to
-    * absolute 'p' storage, which [[DeletionVectors.referencedRelPath]]
-    * deliberately excludes from the TARGET's vacuum surface — the
-    * source's files are never the clone's to reclaim). The target
-    * takes a FRESH table id and the source's schema / configuration /
-    * protocol, and evolves independently from here: appends land
-    * relative beside the absolute references, OVERWRITE and RESTORE
-    * are log surgery and work, VACUUM is safe by construction (an
-    * absolute path never matches the target's local listing, and
-    * absolute DV descriptors are outside its reclaim surface). The
-    * file-REWRITE family takes the clone natively via
-    * LOCALIZE-ON-WRITE (r19): when MERGE / DELETE / UPDATE / OPTIMIZE
-    * / PURGE must rewrite a source-absolute file, the survivors write
-    * to a TARGET-local file and the absolute add is removed from the
-    * target's log only — the source's own log still lists the file
-    * live, so the source is untouched and the clone gradually
-    * localizes as it is edited (full localization = one OPTIMIZE).
-    * DV DML masks rows with target-local vectors against the absolute
-    * add, moving zero bytes; CHECKPOINT materializes absolute adds
-    * verbatim (the protocol permits absolute paths). The source is
-    * never written — a concurrent source VACUUM remains the
-    * documented shallow-clone hazard, exactly as in Delta.
-    * Returns version 0. */
-  def cloneDeltaTableShallow(spark: SparkSession, sourceDir: String,
-      targetDir: String): Long = {
-    require(!Files.exists(Paths.get(targetDir, "_delta_log")),
-      s"$targetDir already holds a Delta log — clone refuses to clobber")
-    // a RELATIVE source root would make the absolute references
-    // resolve against the TARGET at read time — anchor it first
-    val srcRoot = Paths.get(sourceDir).toAbsolutePath.normalize.toString
-    val st = snapshotState(spark, sourceDir, None)
-    require(st.live.nonEmpty, "source has no live files — nothing to clone")
-    val now = System.currentTimeMillis()
-    // fresh table id (Delta's clone rule): the FIRST "id" key of the
-    // metaData line is the table id — schemaString's own id keys are
-    // escaped inside the JSON string and cannot match here
-    val newId = java.util.UUID.nameUUIDFromBytes(
-      targetDir.getBytes(StandardCharsets.UTF_8)).toString
-    val withId = """"id":"((?:[^"\\]|\\.)+)"""".r.replaceFirstIn(st.meta,
-      java.util.regex.Matcher.quoteReplacement(s""""id":"${esc(newId)}""""))
-    // an ICT-enabled source seeds the TARGET's own chain: the clone's
-    // history starts at ITS v0, so the enablement markers re-anchor
-    // there and the first in-commit timestamp rides this commit —
-    // copying the source's markers verbatim would point at versions
-    // the target's log never had
-    val conf = configurationOf(st.meta)
-    val ictEnabled = conf.get("delta.enableInCommitTimestamps")
-      .exists(_.equalsIgnoreCase("true"))
-    val meta =
-      if (!ictEnabled) withId
-      else withConfiguration(withId, conf +
-        ("delta.inCommitTimestampEnablementVersion" -> "0") +
-        ("delta.inCommitTimestampEnablementTimestamp" -> now.toString))
-    val protocol = Option(st.protocol).getOrElse(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val adds = st.live.toSeq.sorted.map { p =>
-      val abs = resolveDataPath(srcRoot, p)
-      val statsField = st.stats.get(p)
-        .map(s => s""","stats":"${esc(s)}"""").getOrElse("")
-      val dvField = st.dvs.get(p).map { d =>
-        val absDv = DeletionVectors.referencedRelPath(d) match {
-          case Some(rel) =>
-            d.copy(storageType = "p", pathOrInlineDv = s"$srcRoot/$rel")
-          case None => d // inline, or already absolute
-        }
-        s""","deletionVector":${DeletionVectors.descriptorJson(absDv)}"""
-      }.getOrElse("")
-      val pv = st.pvals.getOrElse(p, Map.empty).toSeq.sortBy(_._1)
-        .map { case (k, value) =>
-          s""""${esc(k)}":${Option(value).map(x => s""""${esc(x)}"""")
-              .getOrElse("null")}"""
-        }.mkString(",")
-      // row-tracking identity carries VERBATIM (r20): the clone
-      // references the same bytes, so the same ids govern — dropping
-      // the fields would silently un-track every cloned file while the
-      // cloned configuration still claims tracking
-      val rtField = st.rowIds.get(p).map { case (b, d) =>
-        b.map(x => s""","baseRowId":$x""").getOrElse("") +
-          d.map(x => s""","defaultRowCommitVersion":$x""").getOrElse("")
-      }.getOrElse("")
-      s"""{"add":{"path":"${esc(abs)}","partitionValues":{$pv},"size":${Files
-          .size(Paths.get(abs))},"modificationTime":$now,"dataChange":true$statsField$dvField$rtField}}"""
-    }
-    // the rowTracking watermark domain rides along so the clone's own
-    // appends allocate above the source's ids
-    val domainActions = st.domains.toSeq.sortBy(_._1).map {
-      case (d, (conf, rm)) =>
-        s"""{"domainMetadata":{"domain":"${esc(d)}","configuration":"${esc(
-            conf)}","removed":$rm}}"""
-    }
-    Files.createDirectories(Paths.get(targetDir).resolve("_delta_log"))
-    writeCommit(targetDir, 0L, protocol +: meta +: (adds ++ domainActions),
-      "CLONE", firstIct = if (ictEnabled) Some(now) else None)
-    0L
-  }
 
   /** Anti-join a single file's scan against its deletion vector's
     * positions (attached via the parquet row index) — the one DV
@@ -5522,7 +4368,7 @@ object DeltaExport {
       }
       applyCommit(dir, v, tail)
     }
-    val paths = checkpointScanPaths(spark, dir, cp)
+    val paths = checkpointPaths(dir, cp.version, cp.parts)
     val gone = paths.filterNot(Files.isRegularFile(_))
     require(gone.isEmpty,
       s"_last_checkpoint names v$cpV but checkpoint file(s) " +
@@ -5597,77 +4443,6 @@ object DeltaExport {
       }.toMap ++ tail.dvs
     (scanFiles(spark, dir, meta, candidates, versionAsOf, pvals, dvs),
       candidates.size, (liveCp + tail.live.size).toInt)
-  }
-
-  /** Incremental (streaming-source) consumption of a Delta table: the
-    * rows ADDED in commits `sinceVersion` (exclusive) through
-    * `untilVersion` (inclusive; latest when None) — the append-only
-    * incremental read Delta's streaming source performs, and the
-    * consumer-side reason OPTIMIZE marks its rewrites: `add` actions
-    * with `dataChange=false` are SKIPPED (they reshape storage, not
-    * content — counting them would re-deliver every compacted row),
-    * while a CHANGE commit in the range — one carrying a `remove` with
-    * `dataChange=true` (an overwrite, a delete, or a deletion-vector
-    * DML commit, which re-issues its file's add with a DV) — is
-    * refused loudly BY NAME unless `skipChangeCommits` is set. With
-    * `skipChangeCommits=true` the change commit is skipped WHOLESALE —
-    * none of its adds deliver, including a DV re-add (whose rows the
-    * consumer already received — delivering it again would
-    * double-count the survivors) and an UPDATE's new-image files: this
-    * is exactly Delta's streaming-source `skipChangeCommits` contract,
-    * exact-once for appends at the price of not observing row-level
-    * changes (that is the CDC surface, TableStore.tableChanges). Cost
-    * is O(commits in range) log metadata plus a scan of exactly the
-    * new files — an incremental consumer never rereads the standing
-    * table. */
-  def readDeltaAppendsSince(spark: SparkSession, dir: String,
-      sinceVersion: Long, untilVersion: Option[Long] = None,
-      skipChangeCommits: Boolean = false): DataFrame = {
-    val versions = logVersions(dir)
-    val until = untilVersion.getOrElse(
-      (lastCheckpoint(dir).map(_.version).toSeq ++ versions).max)
-    require(until >= sinceVersion,
-      s"untilVersion $until precedes sinceVersion $sinceVersion")
-    val range = versions.filter(v => v > sinceVersion && v <= until)
-    val missing = ((sinceVersion + 1) to until).filterNot(range.contains)
-    require(missing.isEmpty,
-      s"commit(s) ${missing.mkString(",")} in the requested range have " +
-        "been expired — the incremental read would silently drop their rows")
-    val dcRe = """"dataChange":(true|false)""".r
-    val newFiles = Seq.newBuilder[String]
-    range.foreach { v =>
-      val lines = new String(
-        Files.readAllBytes(Paths.get(dir, "_delta_log", commitFile(v))),
-        StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty)
-      def dataChange(l: String) =
-        dcRe.findFirstMatchIn(l).forall(_.group(1) == "true")
-      // commit-level classification FIRST: a dataChange=true remove
-      // marks the whole commit as a change commit — its adds (a DV
-      // re-add, an UPDATE's new images) must deliver all-or-nothing
-      val isChangeCommit = lines.exists(l =>
-        l.startsWith("""{"remove"""") && dataChange(l))
-      if (isChangeCommit && !skipChangeCommits)
-        throw new IllegalStateException(
-          s"commit v$v changes existing data (overwrite / delete / " +
-            "deletion-vector DML) — the append-only incremental read " +
-            "cannot represent it; pass skipChangeCommits=true to skip " +
-            "the commit wholesale (its row-level changes will NOT be " +
-            "delivered), or use tableChanges for CDC")
-      if (!isChangeCommit) lines.foreach { l =>
-        if (l.startsWith("""{"add"""") && dataChange(l)) {
-          require(DeletionVectors.descriptorOf(l).isEmpty,
-            s"commit v$v adds a file with a DELETION VECTOR outside a " +
-              "change commit — a malformed log this reader refuses")
-          newFiles += pathOf(l, "add")
-        }
-      }
-    }
-    val st = snapshotState(spark, dir, Some(until), keepStats = false)
-    // st.pvals retains entries for files a dataChange=false rewrite
-    // removed, so partitioned appends in range still scan with their
-    // partition columns attached
-    scanFiles(spark, dir, st.meta, newFiles.result(), Some(until),
-      st.pvals.toMap)
   }
 
   /** Stats-pruned band read — the planning move that makes Delta fast
@@ -5793,7 +4568,7 @@ object DeltaExport {
       }
       applyCommit(dir, v, tail)
     }
-    val paths = checkpointScanPaths(spark, dir, cp)
+    val paths = checkpointPaths(dir, cp.version, cp.parts)
     val gone = paths.filterNot(Files.isRegularFile(_))
     require(gone.isEmpty,
       s"_last_checkpoint names v$cpV but checkpoint file(s) " +
@@ -5902,7 +4677,7 @@ object DeltaExport {
         ((cpV + 1) to cut).foreach(v => applyCommit(dir, v, st))
         require(st.meta != null, s"checkpoint v$cpV carries no metaData")
         st
-      case Some(CheckpointPointer(cpV, _, _, _)) =>
+      case Some(CheckpointPointer(cpV, _, _)) =>
         val versions = logVersions(dir)
         val cut = versionAsOf.get
         val missing = (0L to cut).filterNot(versions.contains)
@@ -5916,8 +4691,8 @@ object DeltaExport {
 
   /** The live snapshot's deletion-vector descriptors at `versionAsOf`
     * (latest when None): path -> descriptor. Empty when no live file
-    * carries a vector — the observable postcondition of PURGE and of
-    * DV-aware OPTIMIZE (both materialize the masked deletes). */
+    * carries a vector — the observable postcondition of DV-aware
+    * OPTIMIZE (it materializes the masked deletes). */
   def deletionVectorsAt(spark: SparkSession, dir: String,
       versionAsOf: Option[Long] = None)
       : Map[String, DeletionVectors.Descriptor] =
@@ -5945,9 +4720,7 @@ object DeltaExport {
       offset: Option[Long], sizeInBytes: Long, cardinality: Long)
   final case class CpAdd(path: String, partitionValues: Map[String, String],
       size: Long, modificationTime: Long, dataChange: Boolean,
-      stats: Option[String], deletionVector: Option[CpDv] = None,
-      baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
+      stats: Option[String], deletionVector: Option[CpDv] = None)
   final case class CpTxn(appId: String, version: Long)
   final case class CpDomainMetadata(domain: String, configuration: String,
       removed: Boolean)
@@ -5975,23 +4748,6 @@ object DeltaExport {
     }
   }
 
-  /** All parquet files whose ROWS make up checkpoint `cp` — the
-    * classic file / multi-part siblings, or (V2) the UUID-named
-    * manifest plus every sidecar it references. The distributed
-    * checkpoint consumers (partition/stats pruned reads) scan these
-    * with mergeSchema: the V2 manifest and its sidecars carry
-    * different column sets by design. */
-  private def checkpointScanPaths(spark: SparkSession, dir: String,
-      cp: CheckpointPointer): Seq[java.nio.file.Path] =
-    cp.v2Manifest match {
-      case Some(m) =>
-        val mp = Paths.get(dir, "_delta_log", m)
-        if (!Files.isRegularFile(mp)) Seq(mp)
-        else mp +: sidecarPathsOf(spark, dir, mp.toString)
-          .map(Paths.get(_))
-      case None => checkpointPaths(dir, cp.version, cp.parts)
-    }
-
   /** Write a checkpoint of the LATEST snapshot + `_last_checkpoint`:
     * the compaction that lets a reader skip — and a retention job
     * expire — every JSON commit at or before it. One parquet row per
@@ -6007,6 +4763,7 @@ object DeltaExport {
     require(parts >= 1, "parts must be >= 1")
     val v = latestVersion(dir)
     val snap = snapshotState(spark, dir, None)
+    refuseUnmaintainedFeatures(snap.meta, snap.protocol, "CHECKPOINT")
     // mapped tables checkpoint natively — pure log surgery: the
     // schemaString (mapping metadata included), configuration (mode),
     // and physical-keyed partitionValues/stats all carry VERBATIM
@@ -6050,8 +4807,7 @@ object DeltaExport {
         CpRow(None, None, None, Some(CpTxn(app, ver)))
       } ++
       // domainMetadata rows, ours or foreign, verbatim — dropping one
-      // at expiry would strip that writer's state (rowIdHighWaterMark
-      // among them)
+      // at expiry would strip that writer's state
       snap.domains.toSeq.sortBy(_._1).map { case (d, (conf, rm)) =>
         CpRow(None, None, None, None,
           Some(CpDomainMetadata(d, conf, rm)))
@@ -6069,9 +4825,7 @@ object DeltaExport {
           stats = snap.stats.get(f),
           deletionVector = snap.dvs.get(f).map(d =>
             CpDv(d.storageType, d.pathOrInlineDv, d.offset,
-              d.sizeInBytes, d.cardinality)),
-          baseRowId = snap.rowIds.get(f).flatMap(_._1),
-          defaultRowCommitVersion = snap.rowIds.get(f).flatMap(_._2))))
+              d.sizeInBytes, d.cardinality)))))
       }
     require(rows.size >= parts,
       s"cannot split ${rows.size} checkpoint action(s) into $parts parts")
@@ -6104,158 +4858,6 @@ object DeltaExport {
     v
   }
 
-  // V2 checkpoint writer structs: sidecar files carry file actions
-  // only; the manifest carries the non-file actions + sidecar refs
-  final case class CpCheckpointMetadata(version: Long)
-  final case class CpSidecarRef(path: String, sizeInBytes: Long,
-      modificationTime: Long)
-  final case class V2ManifestRow(
-      checkpointMetadata: Option[CpCheckpointMetadata],
-      protocol: Option[CpProtocol], metaData: Option[CpMetaData],
-      txn: Option[CpTxn], sidecar: Option[CpSidecarRef],
-      domainMetadata: Option[CpDomainMetadata] = None)
-  final case class V2SidecarRow(add: Option[CpAdd])
-
-  /** Enable the `v2Checkpoint` table feature: a protocol-only commit
-    * merging the feature into BOTH feature lists (the spec requires a
-    * reader feature — pre-feature readers cannot discover UUID-named
-    * manifests). Idempotent-refusing like the other enablers. */
-  def enableV2Checkpoints(spark: SparkSession, dir: String): Long = {
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    val cur = Option(snap.protocol).getOrElse(
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    val (mrv, _, rf, wf0) = parseProtocolLine(cur)
-    // a legacy reader-v2 table implies columnMapping (the one legacy
-    // READER feature) when no explicit list exists
-    val rf0 = rf.getOrElse(
-      if (mrv >= 2) Set("columnMapping") else Set.empty[String])
-    require(!(rf0.contains("v2Checkpoint") && wf0.contains("v2Checkpoint")),
-      "v2Checkpoint is already enabled")
-    def render(fs: Set[String]) = (fs + "v2Checkpoint").toSeq.sorted
-      .map(f => s""""${esc(f)}"""").mkString(",")
-    writeCommit(dir, v, Seq(
-      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":[${render(
-          rf0)}],"writerFeatures":[${render(wf0)}]}}"""),
-      "UPGRADE PROTOCOL", tableMeta = Some(snap.meta))
-    v
-  }
-
-  /** Write a V2 (UUID-named) checkpoint of the LATEST snapshot: file
-    * actions land in `sidecars` parquet file(s) under
-    * `_delta_log/_sidecars/`, the manifest
-    * (`<v>.checkpoint.<uuid>.parquet`) carries checkpointMetadata +
-    * protocol + metaData + txn rows and one `sidecar` reference per
-    * sidecar file, and `_last_checkpoint` points at the version — the
-    * consumer (classic-absent ⇒ UUID discovery, [[lastCheckpoint]])
-    * reads it back into the same ReplayState the classic form yields,
-    * DV structs and row-tracking fields included. The CLASSIC writer
-    * stays the default ([[checkpointDeltaTable]]) — which form a
-    * deployment writes is a protocol choice, not a fork. Requires the
-    * `v2Checkpoint` feature enabled ([[enableV2Checkpoints]]): a
-    * pre-feature reader must be told it cannot replay this log past
-    * the pointer. Returns the checkpointed version. */
-  def checkpointDeltaTableV2(spark: SparkSession, dir: String,
-      sidecars: Int = 1): Long = {
-    require(sidecars >= 1, "sidecars must be >= 1")
-    val v = latestVersion(dir)
-    val snap = snapshotState(spark, dir, None)
-    val curP = Option(snap.protocol).getOrElse("")
-    require(curP.contains(""""v2Checkpoint""""),
-      "the v2Checkpoint table feature is not enabled — a pre-feature " +
-        "reader could not discover the UUID-named manifest; run " +
-        "enableV2Checkpoints first (or write a classic checkpoint)")
-    val files = snap.live.toSeq.sorted
-    require(files.size >= sidecars || sidecars == 1,
-      s"cannot split ${files.size} file action(s) into $sidecars sidecars")
-    val meta = snap.meta
-    val idRe = """"id":"((?:[^"\\]|\\.)+)"""".r
-    val ctRe = """"createdTime":(\d+)""".r
-    val id = idRe.findFirstMatchIn(meta)
-      .map(m => unescapeJson(m.group(1)))
-      .getOrElse(throw new IllegalStateException("metaData carries no id"))
-    val createdTime = ctRe.findFirstMatchIn(meta)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val mrvRe = """"minReaderVersion":(\d+)""".r
-    val mwvRe = """"minWriterVersion":(\d+)""".r
-    def featsOf(key: String): Option[Seq[String]] = {
-      val re = (s""""$key":\\[([^\\]]*)\\]""").r
-      re.findFirstMatchIn(curP).map(m =>
-        jsonStrRe.findAllMatchIn(m.group(1))
-          .map(e => unescapeJson(e.group(1))).toSeq)
-    }
-    val cpProtocol = CpProtocol(
-      mrvRe.findFirstMatchIn(curP).map(_.group(1).toInt).getOrElse(3),
-      mwvRe.findFirstMatchIn(curP).map(_.group(1).toInt).getOrElse(7),
-      featsOf("readerFeatures"), featsOf("writerFeatures"))
-    def addOf(f: String): CpAdd = {
-      val p = Paths.get(resolveDataPath(dir, f))
-      CpAdd(f, snap.pvals.getOrElse(f, Map.empty), Files.size(p),
-        Files.getLastModifiedTime(p).toMillis, dataChange = false,
-        stats = snap.stats.get(f),
-        deletionVector = snap.dvs.get(f).map(d =>
-          CpDv(d.storageType, d.pathOrInlineDv, d.offset,
-            d.sizeInBytes, d.cardinality)),
-        baseRowId = snap.rowIds.get(f).flatMap(_._1),
-        defaultRowCommitVersion = snap.rowIds.get(f).flatMap(_._2))
-    }
-    val logDir = Paths.get(dir, "_delta_log")
-    val scDir = logDir.resolve("_sidecars")
-    Files.createDirectories(scDir)
-    import spark.implicits._
-    // write one parquet under a temp dir, move its single part into
-    // place — ONE publish discipline for sidecars and manifest alike
-    // (the classic writer's rule)
-    def writeOne(df: DataFrame, dest: java.nio.file.Path): Unit = {
-      val tmp = Files.createTempDirectory("graft_v2cp_w")
-      try {
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = dataFiles(tmp.toString).head
-        Files.move(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(tmp.toFile)
-    }
-    // round-robin split (like the classic multi-part form); drop empty
-    // groups so a small table never writes an empty sidecar
-    val groups = (0 until sidecars)
-      .map(i => files.zipWithIndex.collect {
-        case (f, j) if j % sidecars == i => f
-      })
-      .filter(_.nonEmpty)
-    val scRefs = groups.map { fs =>
-      val name = s"${java.util.UUID.randomUUID()}.parquet"
-      val dest = scDir.resolve(name)
-      writeOne(spark.createDataset(
-        fs.map(f => V2SidecarRow(Some(addOf(f))))).toDF(), dest)
-      CpSidecarRef(name, Files.size(dest),
-        Files.getLastModifiedTime(dest).toMillis)
-    }
-    val manifestRows: Seq[V2ManifestRow] =
-      Seq(
-        V2ManifestRow(Some(CpCheckpointMetadata(v)), None, None, None, None),
-        V2ManifestRow(None, Some(cpProtocol), None, None, None),
-        V2ManifestRow(None, None, Some(CpMetaData(id, schemaStringOf(meta),
-          partitionColumnsOf(meta), createdTime, configurationOf(meta))),
-          None, None)) ++
-      snap.txns.toSeq.sortBy(_._1).map { case (app, ver) =>
-        V2ManifestRow(None, None, None, Some(CpTxn(app, ver)), None)
-      } ++
-      snap.domains.toSeq.sortBy(_._1).map { case (d, (conf, rm)) =>
-        V2ManifestRow(None, None, None, None, None,
-          Some(CpDomainMetadata(d, conf, rm)))
-      } ++
-      scRefs.map(r => V2ManifestRow(None, None, None, None, Some(r)))
-    val manifestName =
-      f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-    writeOne(spark.createDataset(manifestRows).toDF(),
-      logDir.resolve(manifestName))
-    Files.write(logDir.resolve("_last_checkpoint"),
-      s"""{"version":$v,"size":${manifestRows.size}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    v
-  }
-
   /** Log-retention cleanup: delete JSON commits at or before the
     * checkpoint (they are superseded by it). Refuses without a
     * checkpoint covering them — that would orphan the table — and
@@ -6264,47 +4866,32 @@ object DeltaExport {
     * the JSON chain on the pointer's word alone would orphan the table
     * despite this function's stated guarantee. Returns the deleted
     * commit file names. */
-  def expireLogBefore(dir: String,
-      spark: Option[SparkSession] = None): Seq[String] = {
+  def expireLogBefore(dir: String): Seq[String] = {
     val cp = lastCheckpoint(dir)
       .getOrElse(throw new IllegalStateException(
         "no checkpoint — expiring JSON commits would orphan the table"))
-    val cpFiles = cp.v2Manifest match {
-      case Some(m) =>
-        // the SIDECARS are part of the covering checkpoint: deleting
-        // the JSON chain on the manifest's word alone would orphan the
-        // table if a sidecar was lost (the classic branch verifies
-        // every part for exactly this reason). Reading their names
-        // needs a parquet read — a session.
-        val sess = spark.getOrElse(throw new IllegalStateException(
-          "expiring a V2-checkpointed log requires a SparkSession to " +
-            "verify the manifest's sidecar files exist — " +
-            "expireLogBefore(dir, Some(spark))"))
-        Paths.get(dir, "_delta_log", m) +:
-          sidecarPathsOf(sess, dir, s"$dir/_delta_log/$m")
-            .map(Paths.get(_))
-      case None => checkpointPaths(dir, cp.version, cp.parts)
-    }
-    val gone = cpFiles.filterNot(Files.isRegularFile(_))
+    val gone = checkpointPaths(dir, cp.version, cp.parts)
+      .filterNot(Files.isRegularFile(_))
     if (gone.nonEmpty) throw new IllegalStateException(
       s"_last_checkpoint names v${cp.version} but checkpoint file(s) " +
         s"${gone.map(_.getFileName).mkString(", ")} are missing — " +
         "expiring JSON commits would orphan the table")
     val allJson = logVersions(dir)
-    val victims0 = allJson.filter(_ <= cp.version)
-    // an ICT table keeps its NEWEST JSON commit even when the
-    // checkpoint supersedes it: the next writer continues the
-    // strictly-monotone in-commit-timestamp chain from v-1's value,
-    // and deleting every predecessor would force it to guess (a
-    // retained extra JSON commit is always protocol-legal). Moot when
-    // commits newer than the checkpoint survive anyway.
-    val victims = victims0 match {
-      case vs if vs.nonEmpty && vs.max == allJson.max &&
-          ictOf(dir, vs.max).isDefined =>
-        vs.filterNot(_ == vs.max)
-      case vs => vs
+    // the newest protocol and metaData the JSON commits carry: what
+    // the checkpoint covers passed the same refusal when
+    // checkpointDeltaTable wrote it
+    var protocol: String = null
+    var meta: String = null
+    allJson.foreach { v =>
+      new String(Files.readAllBytes(
+        Paths.get(dir, "_delta_log", commitFile(v))), StandardCharsets.UTF_8)
+        .split("\n").foreach { l =>
+          if (l.startsWith("""{"protocol"""")) protocol = l
+          else if (l.startsWith("""{"metaData"""")) meta = l
+        }
     }
-    victims.map { v =>
+    refuseUnmaintainedFeatures(meta, protocol, "LOG EXPIRY")
+    allJson.filter(_ <= cp.version).map { v =>
       Files.delete(Paths.get(dir, "_delta_log", commitFile(v)))
       commitFile(v)
     }
@@ -6321,71 +4908,31 @@ object DeltaExport {
     import org.apache.spark.sql.functions.{col, lit}
     val v = cp.version
     val parts = cp.parts
-    // V2 (UUID-named) checkpoint: the manifest parquet carries the
-    // non-file actions (protocol, metaData, txn, checkpointMetadata)
-    // plus `sidecar` references; the add/remove rows live in the
-    // _sidecars parquet files (and/or the manifest itself — the spec
-    // allows both). Everything funnels into the SAME row loop the
-    // classic form uses — the loader reads by field name, so the two
-    // layouts differ only in which files contribute which columns.
+    val cls = checkpointPaths(dir, v, parts)
+    val gone = cls.filterNot(Files.isRegularFile(_))
+    require(gone.isEmpty,
+      s"_last_checkpoint names v$v${parts.map(n => s" ($n parts)").getOrElse("")} " +
+        s"but checkpoint file(s) ${gone.map(_.getFileName).mkString(", ")} are missing")
+    // mergeSchema: a foreign MULTI-PART checkpoint may split
+    // action kinds across parts with heterogeneous file schemas
+    val cpDf = spark.read.option("mergeSchema", "true")
+      .parquet(cls.map(_.toString): _*)
     // the executor-side stats NULLing a no-prune consumer wants — the
     // driver then holds only paths/partitionValues/DV descriptors
     // instead of ~1 KB of stats string per live file (the 10⁶-file
     // driver-memory hazard)
-    def collectRows(df0: DataFrame): Array[org.apache.spark.sql.Row] = {
-      val hasAddStats = df0.schema.fields.find(_.name == "add").exists(
-        _.dataType match {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.fieldNames.contains("stats")
-          case _ => false
-        })
-      (if (keepStats || !hasAddStats) df0
-       else df0.withColumn("add",
+    val hasAddStats = cpDf.schema.fields.find(_.name == "add").exists(
+      _.dataType match {
+        case st: org.apache.spark.sql.types.StructType =>
+          st.fieldNames.contains("stats")
+        case _ => false
+      })
+    val rows: Array[org.apache.spark.sql.Row] =
+      (if (keepStats || !hasAddStats) cpDf
+       else cpDf.withColumn("add",
          col("add").withField("stats",
            lit(null).cast(org.apache.spark.sql.types.StringType))))
         .collect()
-    }
-    val rows: Array[org.apache.spark.sql.Row] = cp.v2Manifest match {
-      case Some(m) =>
-        val mp = Paths.get(dir, "_delta_log", m)
-        require(Files.isRegularFile(mp),
-          s"_last_checkpoint names v$v but V2 manifest $m is missing")
-        // ONE read of the (few-row) manifest: sidecar references,
-        // checkpointMetadata verification and the non-file action rows
-        // all come from the same collect
-        val manifestRows = spark.read.parquet(mp.toString).collect()
-        def optStruct(r: org.apache.spark.sql.Row, f: String) =
-          structField(r, f)
-        val badV = manifestRows
-          .flatMap(optStruct(_, "checkpointMetadata"))
-          .map(_.getAs[Long]("version")).filter(_ != v)
-        require(badV.isEmpty,
-          s"V2 manifest $m carries checkpointMetadata for version(s) " +
-            s"${badV.distinct.mkString(",")}, expected $v")
-        val sidecars = manifestRows.flatMap(optStruct(_, "sidecar"))
-          .map(_.getAs[String]("path")).toSeq.sorted
-          .map(n => Paths.get(resolveSidecarPath(dir, n)))
-        val goneSc = sidecars.filterNot(Files.isRegularFile(_))
-        require(goneSc.isEmpty,
-          s"V2 checkpoint v$v names sidecar file(s) that are missing: " +
-            goneSc.map(_.getFileName).mkString(", "))
-        // the manifest's own rows join the loop (the spec allows file
-        // actions in the manifest too); sidecar rows read in one scan
-        manifestRows ++ (if (sidecars.isEmpty) Array
-          .empty[org.apache.spark.sql.Row]
-        else collectRows(spark.read.option("mergeSchema", "true")
-          .parquet(sidecars.map(_.toString): _*)))
-      case None =>
-        val cls = checkpointPaths(dir, v, parts)
-        val gone = cls.filterNot(Files.isRegularFile(_))
-        require(gone.isEmpty,
-          s"_last_checkpoint names v$v${parts.map(n => s" ($n parts)").getOrElse("")} " +
-            s"but checkpoint file(s) ${gone.map(_.getFileName).mkString(", ")} are missing")
-        // mergeSchema: a foreign MULTI-PART checkpoint may split
-        // action kinds across parts with heterogeneous file schemas
-        collectRows(spark.read.option("mergeSchema", "true")
-          .parquet(cls.map(_.toString): _*))
-    }
     val st = new ReplayState
     st.keepStats = keepStats
     rows.foreach { r =>
@@ -6406,32 +4953,13 @@ object DeltaExport {
         if (pvIdx >= 0 && !a.isNullAt(pvIdx))
           st.pvals(p) = a.getMap[String, String](pvIdx).toMap
         val si = a.schema.fieldNames.indexOf("stats")
-        // keepStats gate here too: manifest-resident add rows (V2)
-        // reach this loop without the executor-side NULLing
-        if (st.keepStats && si >= 0 && !a.isNullAt(si))
-          st.stats(p) = a.getString(si)
+        if (si >= 0 && !a.isNullAt(si)) st.stats(p) = a.getString(si)
         // a foreign checkpoint may carry per-file deletionVector
         // structs — parse them into the same descriptor the JSON
         // replay produces, so a checkpointed DV table reads correctly
         val dvIdx = a.schema.fieldNames.indexOf("deletionVector")
         if (dvIdx >= 0 && !a.isNullAt(dvIdx))
           st.dvs(p) = dvDescriptorOfRow(a.getStruct(dvIdx))
-        // row tracking survives log expiry through the checkpoint,
-        // like stats and DV descriptors
-        val brIdx = a.schema.fieldNames.indexOf("baseRowId")
-        val drIdx = a.schema.fieldNames.indexOf("defaultRowCommitVersion")
-        val br = if (brIdx >= 0 && !a.isNullAt(brIdx))
-          Some(a.getLong(brIdx)) else None
-        val dr = if (drIdx >= 0 && !a.isNullAt(drIdx))
-          Some(a.getLong(drIdx)) else None
-        if (br.isDefined || dr.isDefined) st.rowIds(p) = (br, dr)
-        // defensive HWM fold (the domain row is authoritative); stats
-        // may be NULLed under keepStats=false — the fold then rests on
-        // the checkpointed domain alone
-        for (b <- br if si >= 0 && !a.isNullAt(si);
-             m <- statsNumRecordsRe.findFirstMatchIn(a.getString(si)))
-          st.rowIdHwmAdds =
-            math.max(st.rowIdHwmAdds, b + m.group(1).toLong - 1)
       }
       structField(r, "txn").foreach { t =>
         val app = t.getAs[String]("appId")

@@ -131,8 +131,8 @@ object CurationStream {
     * corpus size. */
   def runSemanticDedupSink(
       spark: SparkSession, dir: String, table: String,
-      centroidRel: DataFrame, threshold: Double = 0.45,
-      probes: Int = 2, checkpoint: Option[String] = None,
+      centroidRel: DataFrame, threshold: Double,
+      probes: Int, checkpoint: Option[String] = None,
       schema: StructType = null): Seq[BatchStat] = {
     val stats = new java.util.concurrent.ConcurrentLinkedQueue[BatchStat]()
     // With a checkpoint the file source's commit log makes the sink

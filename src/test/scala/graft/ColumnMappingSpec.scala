@@ -12,8 +12,8 @@ import graft.core.DeltaExport
   * (the Databricks default for evolved tables) columns resolve by
   * parquet FIELD ID against delta.columnMapping.id. Fixtures are
   * hand-built protocol-shaped logs, the DeletionVectorSpec posture.
-  * Since r18 the WRITERS work too: appends, overwrite, DML, OPTIMIZE,
-  * PURGE and CHECKPOINT land PHYSICAL column names + field ids
+  * Since r18 the WRITERS work too: appends, overwrite, DML, OPTIMIZE
+  * and CHECKPOINT land PHYSICAL column names + field ids
   * (toPhysicalFrame); ADD COLUMNS allocates fresh ids/physical names
   * against maxColumnId; upgradeToColumnMapping converts an unmapped
   * table and renameDeltaTableColumn is the metadata-only rename the
@@ -178,7 +178,6 @@ class ColumnMappingSpec extends SparkTestBase {
       .schema.fieldNames.toSeq === Seq("key", "balance"))
     // a BACKTICK-quoted reference (Spark SQL's identifier quoting)
     // must bind the dependency guard exactly like the bare spelling
-    DeltaExport.dropCheckConstraintDeltaTable(spark, dir, "bpos")
     DeltaExport.addCheckConstraintDeltaTable(spark, dir, "bq",
       "`balance` >= 0")
     val e3 = intercept[IllegalArgumentException](
@@ -222,45 +221,6 @@ class ColumnMappingSpec extends SparkTestBase {
     DeltaExport.renameDeltaTableColumn(spark, dir, "note", "label")
     assert(DeltaExport.readDeltaTable(spark, dir)
       .schema.fieldNames.toSeq === Seq("id", "label"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("DROP COLUMN is metadata-only under mapping; a re-added namesake never resurrects the old data") {
-    import graft.core.DeltaExport
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cm_drop").toString
-    DeltaExport.writeDeltaTable(spark,
-      spark.range(10).select(col("id"), (col("id") * 2).as("bal")), dir)
-    // unmapped tables refuse — a later namesake would resurrect data
-    val e0 = intercept[IllegalArgumentException](
-      DeltaExport.dropDeltaTableColumn(spark, dir, "bal"))
-    assert(e0.getMessage.contains("upgradeToColumnMapping"), e0.getMessage)
-    DeltaExport.upgradeToColumnMapping(spark, dir)
-    val vDrop = DeltaExport.dropDeltaTableColumn(spark, dir, "bal")
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    assert(back.schema.fieldNames.toSeq === Seq("id"))
-    // pre-drop time travel still reads the column
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(vDrop - 1))
-      .schema.fieldNames.toSeq === Seq("id", "bal"))
-    // re-add a NAMESAKE: it allocates a fresh id + physical name, so
-    // every standing row reads NULL — the old bytes never resurrect
-    DeltaExport.evolveDeltaTableSchema(spark, dir,
-      org.apache.spark.sql.types.StructType(back.schema.fields :+
-        StructField("bal", LongType, nullable = true)))
-    val again = DeltaExport.readDeltaTable(spark, dir)
-    assert(again.filter(col("bal").isNotNull).count() === 0L,
-      "re-added namesake must NOT resurrect dropped data")
-    // appends under the new schema land and read back
-    DeltaExport.appendDeltaTable(spark,
-      Seq((100L, Option(7L))).toDF("id", "bal"), dir)
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .filter(col("bal") === 7L).count() === 1L)
-    // guards: last column, partition column, constraint-bound column
-    val e1 = intercept[IllegalArgumentException](
-      DeltaExport.dropDeltaTableColumn(spark, dir, "bal") match {
-        case _ => DeltaExport.dropDeltaTableColumn(spark, dir, "id")
-      })
-    assert(e1.getMessage.contains("only column"), e1.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -636,7 +596,7 @@ class ColumnMappingSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("NESTED field rename/drop are metadata-only: display names move, the physical layer and standing bytes never do") {
+  test("NESTED field rename is metadata-only: display names move, the physical layer and standing bytes never do") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_cm_nested_ren").toString
     val baseSchema = StructType(Seq(
@@ -678,36 +638,20 @@ class ColumnMappingSpec extends SparkTestBase {
       newSchema), dir)
     assert(DeltaExport.readDeltaTable(spark, dir)
       .agg(sum(col("obj.alpha"))).head().getLong(0) === 60L)
-    // a CHECK constraint binding obj.b blocks BOTH its rename and its
-    // drop — and blocks renaming the PARENT too (the dotted spelling
-    // contains it)
+    // a CHECK constraint binding obj.b blocks its rename — and blocks
+    // renaming the PARENT too (the dotted spelling contains it)
     DeltaExport.addCheckConstraintDeltaTable(spark, dir, "b_set",
       "obj.b IS NOT NULL")
     for ((what, op) <- Seq[(String, () => Any)](
         ("rename leaf", () => DeltaExport
           .renameDeltaTableColumn(spark, dir, "obj.b", "beta")),
-        ("drop leaf", () => DeltaExport
-          .dropDeltaTableColumn(spark, dir, "obj.b")),
         ("rename parent", () => DeltaExport
           .renameDeltaTableColumn(spark, dir, "obj", "rec")))) {
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains("b_set"), s"$what: ${e.getMessage}")
     }
-    DeltaExport.dropCheckConstraintDeltaTable(spark, dir, "b_set")
-    // nested DROP: metadata-only; pre-drop time travel keeps the field
-    val vDrop = DeltaExport.dropDeltaTableColumn(spark, dir, "obj.b")
-    val after = DeltaExport.readDeltaTable(spark, dir)
-    assert(after.schema("obj").dataType.asInstanceOf[StructType]
-      .fieldNames.toSeq === Seq("alpha"))
-    assert(after.agg(sum(col("obj.alpha"))).head().getLong(0) === 60L)
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(vDrop - 1))
-      .select(col("obj.b")).as[String].collect().sorted.toSeq ===
-      Seq("x", "y", "z"))
-    // guards: the struct's ONLY field refuses; a path through an
-    // array refuses by name; a bad leaf refuses naming the parent set
-    val e1 = intercept[IllegalArgumentException](
-      DeltaExport.dropDeltaTableColumn(spark, dir, "obj.alpha"))
-    assert(e1.getMessage.contains("only field"), e1.getMessage)
+    // guards: a path through an array refuses by name; a bad leaf
+    // refuses naming the parent set
     val e2 = intercept[IllegalArgumentException](
       DeltaExport.renameDeltaTableColumn(spark, dir, "arr.x", "y"))
     assert(e2.getMessage.contains("STRUCT"), e2.getMessage)
@@ -852,14 +796,6 @@ class ColumnMappingSpec extends SparkTestBase {
     assert(cand === 2 && live === 3, s"cand=$cand live=$live")
     assert(pruned.select("id").as[Long].collect().sorted.toSeq ===
       Seq(3L, 4L))
-    // partitioned OPTIMIZE compacts WITHIN the physical directory
-    DeltaExport.optimizeDeltaTablePartitioned(spark, dir,
-      targetFilesPerPartition = 1, where = Map("lang" -> "fr"))
-    val (pruned2, cand2, _) = DeltaExport.readDeltaTablePartitionPruned(
-      spark, dir, Map("lang" -> "fr"))
-    assert(cand2 === 1, s"cand2=$cand2")
-    assert(pruned2.select("id").as[Long].collect().sorted.toSeq ===
-      Seq(3L, 4L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -896,9 +832,10 @@ class ColumnMappingSpec extends SparkTestBase {
     assert(DeltaExport.readDeltaTable(spark, dir)
       .orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (3L, "C"), (4L, "d")))
-    // PURGE rewrites the DV-carrying file without its masked rows;
-    // content unchanged, vectors gone
-    DeltaExport.purgeDeletionVectors(spark, dir)
+    // DV-aware OPTIMIZE rewrites the live files without their masked
+    // rows, physically named; content unchanged, vectors gone
+    DeltaExport.optimizeDeltaTable(spark, dir)
+    assert(DeltaExport.deletionVectorsAt(spark, dir).isEmpty)
     assert(DeltaExport.readDeltaTable(spark, dir)
       .orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (3L, "C"), (4L, "d")))

@@ -8,10 +8,9 @@ import graft.core.{DeletionVectors, DeltaExport}
   * bytes, the end-to-end read of hand-built DV commits (inline and
   * on-disk), CDC over a DV-only change, the DV DML writers (DELETE/
   * UPDATE via vectors; MERGE/COW-DELETE/OPTIMIZE applying vectors;
-  * PURGE materializing them; DV-carrying checkpoints), and the loud
-  * by-name refusals that remain (column mapping modes beyond name/id,
-  * unknown reader features, standalone DV adds in the incremental
-  * reader). */
+  * DV-carrying checkpoints), and the loud by-name refusals that remain
+  * (column mapping modes beyond name/id, unknown reader features,
+  * writes to row-tracking and in-commit-timestamp tables). */
 class DeletionVectorSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -277,139 +276,6 @@ class DeletionVectorSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pdir))
   }
 
-  test("PURGE materializes deletion vectors: content unchanged, dataChange=false, table re-enters the whole-file surface") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dv_purge").toString
-    val d = (1L to 10000L).map(i => (i, i * 2.0)).toDF("id", "v")
-    DeltaExport.writeDeltaTable(spark,
-      d.repartitionByRange(2, col("id")), dir)
-    // one BIG delete (spills to a .bin) + one small (inline) so the
-    // purge pays down both DV storage forms at once
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") % 2L === 0L)
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 5001L)
-    val expectIds = (1L to 10000L).filter(i => i % 2L != 0L && i != 5001L)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() ===
-      expectIds.size.toLong)
-    // purge preserves file BOUNDARIES (one rewrite per DV'd file) —
-    // the no-reshape alternative to OPTIMIZE's DV-aware compaction
-    val filesBefore = DeltaExport.liveFilesAt(dir, None)._2.size
-    assert(DeltaExport.purgeDeletionVectors(spark, dir) === 3L)
-    assert(DeltaExport.liveFilesAt(dir, None)._2.size === filesBefore)
-    // content identical at latest, exactly once
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .select("id").as[Long].collect().sorted.toSeq === expectIds)
-    // the purge commit is pure dataChange=false with no vectors left
-    val c3 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000003.json")), "UTF-8")
-    assert(!c3.contains(""""dataChange":true"""), c3)
-    assert(!c3.contains("deletionVector"), c3)
-    // time travel to the DV versions still applies the old vectors
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(1L)).count() === 5000L)
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(0L)).count() === 10000L)
-    // re-entered the whole-file surface: checkpoint + optimize work,
-    // and neither the purge nor the optimize delivers incrementally
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    DeltaExport.optimizeDeltaTable(spark, dir, targetFiles = 1)
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 2L).count() === 0L)
-    // vacuum reclaims the now-orphaned .bin and the superseded files;
-    // the DV versions then fail loudly (retention-0 trade)
-    val reclaimed = DeltaExport.vacuumDeltaTable(spark, dir)
-    assert(reclaimed.exists(_.startsWith("deletion_vector_")),
-      reclaimed.toString)
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("deletion_vector_")))
-    intercept[Exception](
-      DeltaExport.readDeltaTable(spark, dir, Some(1L)).count())
-    assert(DeltaExport.readDeltaTable(spark, dir).count() ===
-      expectIds.size.toLong)
-    // a purge with no vectors is a refused no-op
-    val e1 = intercept[IllegalArgumentException](
-      DeltaExport.purgeDeletionVectors(spark, dir))
-    assert(e1.getMessage.contains("nothing to purge"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("PURGE drops a fully-masked file and lands partitioned rewrites in their own partition dirs") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dv_purge_part").toString
-    val d = ((1L to 10L).map(i => (i, "en")) ++
-      (11L to 20L).map(i => (i, "fr"))).toDF("id", "lang").repartition(1)
-    DeltaExport.writeDeltaTablePartitioned(spark, d, dir, Seq("lang"))
-    // mask EVERY en row (whole file) plus one fr row in one commit
-    DeltaExport.deleteFromDeltaTableDv(spark, dir,
-      col("lang") === "en" || col("id") === 11L)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() === 9L)
-    DeltaExport.purgeDeletionVectors(spark, dir)
-    // the fully-masked en file just dropped — no empty rewrite landed
-    val c2 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000002.json")), "UTF-8")
-    assert(""""remove":\{""".r.findAllMatchIn(c2).length === 2, c2)
-    assert(""""add":\{""".r.findAllMatchIn(c2).length === 1, c2)
-    assert(!c2.split("\n").exists(l =>
-      l.startsWith("""{"add"""") && l.contains("lang=en")), c2)
-    // the fr rewrite landed in its own partition dir with its values
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    assert(back.select("id").as[Long].collect().sorted.toSeq ===
-      (12L to 20L))
-    assert(back.filter(col("lang") === "fr").count() === 9L)
-    // log-only partition pruning still works over the rewrite
-    val (pr, cand, all) = DeltaExport.readDeltaTablePartitionPruned(
-      spark, dir, Map("lang" -> "fr"))
-    assert(pr.count() === 9L && cand === 1 && all === 1)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("PURGE of a foreign non-Hive-layout partitioned table carries the source add's partitionValues verbatim") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dv_purge_foreign").toString
-    // foreign layout: data file under data/ (no lang=… segment); the
-    // LOG's partitionValues are the only source of the partition value
-    val d = Seq(1L, 2L, 3L, 4L).toDF("id")
-      .repartition(1).sortWithinPartitions("id")
-    d.write.parquet(s"$dir/data")
-    val rel = {
-      val f = new java.io.File(s"$dir/data").listFiles()
-        .map(_.getName).filter(_.endsWith(".parquet")).head
-      s"data/$f"
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType, nullable = true)))
-    def escJson(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val dvBytes = DeletionVectors.serializePortable(Seq(1L)) // id 2
-    val desc = DeletionVectors.Descriptor("i",
-      DeletionVectors.z85encode(dvBytes), None, dvBytes.length.toLong, 1L)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(dir, "_delta_log"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_delta_log", "00000000000000000000.json"),
-      (Seq(
-        """{"commitInfo":{"timestamp":1,"operation":"WRITE"}}""",
-        """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
-        s"""{"metaData":{"id":"ccccdddd-2222-3333-4444-555555555555","format":{"provider":"parquet","options":{}},"schemaString":"${escJson(
-            schema.json)}","partitionColumns":["lang"],"configuration":{},"createdTime":1}}""",
-        s"""{"add":{"path":"$rel","partitionValues":{"lang":"en"},"size":${java.nio.file.Files
-            .size(java.nio.file.Paths.get(dir, rel))},"modificationTime":1,"dataChange":true,"deletionVector":${DeletionVectors.descriptorJson(desc)}}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .filter(col("lang") === "en").count() === 3L)
-    DeltaExport.purgeDeletionVectors(spark, dir)
-    // the rewrite's add must carry {"lang":"en"} from the SOURCE add —
-    // its path has no Hive segment to parse it from
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    assert(back.count() === 3L)
-    assert(back.filter(col("lang").isNull).count() === 0L,
-      "purge dropped the logged partitionValues — rows read back NULL")
-    assert(back.select("id").as[Long].collect().sorted.toSeq ===
-      Seq(1L, 3L, 4L))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("DV delete of only already-deleted rows refuses the no-op; descriptor JSON escapes foreign paths") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_dv_noop").toString
@@ -541,14 +407,18 @@ class DeletionVectorSpec extends SparkTestBase {
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""))
     assert(DeltaExport.readDeltaTable(spark, dir).count() === 2L)
     // v3 with a feature beyond the implemented set — named
-    // (v2Checkpoint is consumed since r19; rowTracking/domainMetadata/
-    // typeWidening since r20 — so the probe uses a genuinely-unknown
-    // feature)
     writeCommit(1, Seq(
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors","collations"]}}"""))
     val vf = intercept[IllegalArgumentException](
       DeltaExport.readDeltaTable(spark, dir))
     assert(vf.getMessage.contains("collations"), vf.getMessage)
+    // V2 checkpoints are not read (the checkpoint reader loads only the
+    // classic and multi-part forms), so the reader feature is refused
+    writeCommit(1, Seq(
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["v2Checkpoint"],"writerFeatures":["v2Checkpoint"]}}"""))
+    val v2 = intercept[IllegalArgumentException](
+      DeltaExport.readDeltaTable(spark, dir))
+    assert(v2.getMessage.contains("v2Checkpoint"), v2.getMessage)
     // a DV table: reads fine, every mutator refuses naming the feature
     val file = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).head
@@ -560,11 +430,6 @@ class DeletionVectorSpec extends SparkTestBase {
       s"""{"add":{"path":"$file","partitionValues":{},"size":${new java.io.File(dir, file).length},"modificationTime":1,"dataChange":true,"deletionVector":${DeletionVectors.descriptorJson(desc)}}}"""))
     assert(DeltaExport.readDeltaTable(spark, dir)
       .select("id").as[Long].collect().sorted.toSeq === Seq(2L))
-    // the append-only incremental reader still refuses a standalone
-    // DV add by name (a malformed log outside a change commit)
-    val eInc = intercept[Exception](
-      DeltaExport.readDeltaAppendsSince(spark, dir, 0L).count())
-    assert(eInc.getMessage.contains("DELETION VECTOR"), eInc.getMessage)
     // CHECKPOINT is DV-aware: the checkpoint row carries the
     // deletionVector struct AND the real {3,7} feature protocol, so a
     // post-checkpoint snapshot still masks the deleted row and still
@@ -582,36 +447,44 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(DeltaExport.readDeltaTable(spark, dir)
       .select("s").as[String].collect().toSeq === Seq("x"))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("partitioned OPTIMIZE applies vectors within compacted partitions and leaves untouched partitions' vectors alone") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dv_opt_part").toString
-    // en: two files (compactable), fr: one file (at target, untouched)
-    val base = ((1L to 20L).map(i => (i, "en")) ++
-      (41L to 60L).map(i => (i, "fr"))).toDF("id", "lang").repartition(1)
-    graft.core.DeltaExport.writeDeltaTablePartitioned(spark,
-      base, dir, Seq("lang"))
-    DeltaExport.appendDeltaTablePartitioned(spark,
-      (21L to 40L).map(i => (i, "en")).toDF("id", "lang").repartition(1),
-      dir)
-    // vectors in BOTH partitions
-    DeltaExport.deleteFromDeltaTableDv(spark, dir,
-      col("id") === 5L || col("id") === 45L)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() === 58L)
-    DeltaExport.optimizeDeltaTablePartitioned(spark, dir,
-      targetFilesPerPartition = 1)
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    // en compacted minus its masked row; fr untouched, vector intact
-    assert(back.count() === 58L)
-    assert(back.filter(col("id").isin(5L, 45L)).count() === 0L)
-    // fr's single file was at target → not rewritten → vector LIVE:
-    // a fresh DV delete against fr compounds with it
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 46L)
-    val after = DeltaExport.readDeltaTable(spark, dir)
-    assert(after.count() === 57L)
-    assert(after.filter(col("id").isin(5L, 45L, 46L)).count() === 0L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    // row tracking and in-commit timestamps are not maintained: a table
+    // that declares or enables either still reads, but every write —
+    // data commits, checkpoint, log expiry — refuses naming the feature
+    // and commits nothing
+    def refusesWrites(feature: String, commit1: String => String): Unit = {
+      val t = java.nio.file.Files
+        .createTempDirectory("graft_unmaintained").toString
+      DeltaExport.writeDeltaTable(spark, d, t)
+      DeltaExport.checkpointDeltaTable(spark, t)
+      val log = java.nio.file.Paths.get(t, "_delta_log")
+      val meta0 = new String(java.nio.file.Files.readAllBytes(
+        log.resolve("00000000000000000000.json")), "UTF-8")
+        .split("\n").find(_.startsWith("""{"metaData"""")).get
+      java.nio.file.Files.write(log.resolve("00000000000000000001.json"),
+        (commit1(meta0) + "\n").getBytes("UTF-8"))
+      assert(DeltaExport.readDeltaTable(spark, t).count() === 2L)
+      Seq[(String, () => Any)](
+        "APPEND" -> (() => DeltaExport.appendDeltaTable(spark,
+          Seq((3L, "c")).toDF("id", "s"), t)),
+        "MERGE" -> (() => DeltaExport.mergeDeltaTable(spark,
+          Seq((2L, "x")).toDF("id", "s"), t, Seq("id"))),
+        "DV DELETE" -> (() => DeltaExport.deleteFromDeltaTableDv(spark, t,
+          col("id") === 1L)),
+        "CHECKPOINT" -> (() => DeltaExport.checkpointDeltaTable(spark, t)),
+        "LOG EXPIRY" -> (() => DeltaExport.expireLogBefore(t))
+      ).foreach { case (op, write) =>
+        val e = intercept[IllegalArgumentException](write())
+        assert(e.getMessage.contains(feature), s"$op: ${e.getMessage}")
+      }
+      assert(DeltaExport.logVersions(t) === Seq(0L, 1L))
+      assert(DeltaExport.lastCheckpoint(t).map(_.version) === Some(0L))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
+    }
+    refusesWrites("rowTracking", _ =>
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","invariants","rowTracking","domainMetadata"]}}""")
+    refusesWrites("inCommitTimestamp", meta0 => meta0.replace(
+      """"configuration":{}""",
+      """"configuration":{"delta.enableInCommitTimestamps":"true"}"""))
   }
 
   test("MERGE and COW DELETE apply live vectors: masked rows never resurrect, untouched files keep theirs") {

@@ -369,7 +369,24 @@ class DeltaCdfSpec extends SparkTestBase {
       .getBytes("UTF-8"))
     DeltaExport.upgradeToColumnMapping(spark, dir)                     // v1
     DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 2L)   // v2
-    DeltaExport.dropDeltaTableColumn(spark, dir, "obj.b")              // v3
+    // v3: a foreign writer's metadata-only nested DROP — obj.b leaves
+    // the logged schema (mapping metadata kept), the bytes stay put
+    val meta2 = DeltaExport.snapshotAt(spark, dir, None)._1
+    val schema2 = DataType.fromJson(DeltaExport.schemaStringOf(meta2))
+      .asInstanceOf[StructType]
+    val dropped = StructType(schema2.fields.map {
+      case f if f.name == "obj" => f.copy(dataType = StructType(
+        f.dataType.asInstanceOf[StructType].fields.filter(_.name != "b")))
+      case f => f
+    })
+    val escJson = dropped.json.replace("\\", "\\\\").replace("\"", "\\\"")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_delta_log",
+      "00000000000000000003.json"), (Seq(
+        """{"commitInfo":{"timestamp":1,"operation":"DROP COLUMN"}}""",
+        """"schemaString":"(?:[^"\\]|\\.)*"""".r.replaceFirstIn(meta2,
+          java.util.regex.Matcher.quoteReplacement(
+            s""""schemaString":"$escJson""""))).mkString("\n") + "\n")
+      .getBytes("UTF-8"))
     // spanning read: v2's change files carry obj{a,b}; the until
     // schema is obj{a} — field-by-field alignment, b just leaves
     val span = DeltaExport.readDeltaCdf(spark, dir, 0L, Some(3L))

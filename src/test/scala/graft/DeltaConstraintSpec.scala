@@ -147,22 +147,6 @@ class DeltaConstraintSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("DROP CONSTRAINT lifts the gate; unknown names refused") {
-    val dir = newTable()
-    DeltaExport.addCheckConstraintDeltaTable(spark, dir,
-      "bal_positive", "bal > 0.0")
-    val unknown = intercept[IllegalArgumentException](
-      DeltaExport.dropCheckConstraintDeltaTable(spark, dir, "nope"))
-    assert(unknown.getMessage.contains("no CHECK constraint"),
-      unknown.getMessage)
-    DeltaExport.dropCheckConstraintDeltaTable(spark, dir, "bal_positive")
-    DeltaExport.appendDeltaTable(spark,
-      Seq((4L, Option(-1.0))).toDF("id", "bal"), dir)
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .filter(col("bal") < 0).count() === 1L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("constraints survive schema evolution and schema-changing overwrites; expressions with braces replay") {
     val dir = newTable()
     // a CHECK whose expression contains braces and quotes-worthy text —

@@ -1,201 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.core.DeltaExport
 
-/** IN-COMMIT TIMESTAMPS (writer feature `inCommitTimestamp`): commit
-  * time becomes a field inside the atomic commit content — strictly
-  * monotone across commits — and timestamp travel resolves against it
-  * instead of commit-file mtimes, which a log copy, filesystem
-  * migration, or regressed wall clock can scramble. */
+/** Commit-metadata preservation: a metaData commit rewrites only what
+  * it must, keeping a foreign writer's fields verbatim. In-commit
+  * timestamps themselves are not maintained — every write to a table
+  * that enables them refuses by name (DeletionVectorSpec pins it). */
 class DeltaIctSpec extends SparkTestBase {
   import spark.implicits._
-
-  private def newTable(): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ict").toString
-    DeltaExport.writeDeltaTable(spark,
-      Seq((1L, 10.0), (2L, 20.0)).toDF("id", "bal").repartition(1), dir)
-    dir
-  }
-
-  private def commitLine(dir: String, v: Long): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json")), "UTF-8")
-      .split("\n").head
-
-  private def ictIn(line: String): Option[Long] =
-    """"inCommitTimestamp":(\d+)""".r.findFirstMatchIn(line)
-      .map(_.group(1).toLong)
-
-  test("enablement seeds the chain; every later commit carries a STRICTLY greater in-commit timestamp") {
-    val dir = newTable()
-    // pre-enablement commits carry no ICT field
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir)
-    assert(ictIn(commitLine(dir, 1L)).isEmpty)
-    val vE = DeltaExport.enableInCommitTimestamps(spark, dir)
-    assert(vE === 2L)
-    assert(ictIn(commitLine(dir, 2L)).isDefined)
-    // a burst of commits inside one millisecond still yields a
-    // STRICTLY increasing chain (the prev+1 leg of the max)
-    val versions = (0 until 4).map { i =>
-      DeltaExport.appendDeltaTable(spark,
-        Seq((100L + i, 1.0)).toDF("id", "bal"), dir)
-    }
-    val icts = (vE +: versions).map(v => ictIn(commitLine(dir, v)).get)
-    assert(icts === icts.sorted && icts.distinct === icts,
-      s"not strictly monotone: $icts")
-    // enablement markers + the protocol feature recorded (the mixed
-    // pre/post boundary) — these ride on LATER lines of the commit
-    val full = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000002.json")), "UTF-8")
-    assert(full.contains("delta.inCommitTimestampEnablementVersion"))
-    assert(full.contains(""""delta.enableInCommitTimestamps":"true""""))
-    assert(full.contains(""""minWriterVersion":7"""), full)
-    assert(full.contains(""""inCommitTimestamp""""), full)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("timestamp travel resolves against the in-commit timestamp, not the file mtime") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir) // v1
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir) // v2
-    DeltaExport.appendDeltaTable(spark, Seq((4L, 40.0)).toDF("id", "bal"), dir) // v3
-    // push v3's ICT far into the future INSIDE the commit content —
-    // the file's mtime stays now, so an mtime-based resolver would
-    // still pick v3
-    val p3 = java.nio.file.Paths.get(dir, "_delta_log",
-      "00000000000000000003.json")
-    val raw = new String(java.nio.file.Files.readAllBytes(p3), "UTF-8")
-    val future = System.currentTimeMillis() + 3600L * 1000L
-    java.nio.file.Files.write(p3, raw.replaceFirst(
-      """"inCommitTimestamp":\d+""",
-      s""""inCommitTimestamp":$future""").getBytes("UTF-8"))
-    val nowTs = System.currentTimeMillis() + 60L * 1000L
-    assert(DeltaExport.versionAtTimestamp(dir, nowTs) === 2L)
-    assert(DeltaExport.readDeltaTableAsOfTimestamp(spark, dir, nowTs)
-      .count() === 3L)
-    // at/after the future ICT, v3 resolves again
-    assert(DeltaExport.versionAtTimestamp(dir, future + 1) === 3L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("log expiry keeps the newest commit on an ICT table so the chain survives; plain tables expire fully") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir) // v1
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir) // v2
-    val ict2 = ictIn(commitLine(dir, 2L)).get
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    val deleted = DeltaExport.expireLogBefore(dir)
-    // v0 and v1 expired; v2 retained for the chain
-    assert(deleted.toSet ===
-      Set("00000000000000000000.json", "00000000000000000001.json"))
-    assert(DeltaExport.logVersions(dir) === Seq(2L))
-    val v3 = DeltaExport.appendDeltaTable(spark,
-      Seq((4L, 40.0)).toDF("id", "bal"), dir)
-    assert(v3 === 3L)
-    assert(ictIn(commitLine(dir, 3L)).get > ict2)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() === 4L)
-
-    // a PLAIN table keeps the old behavior: every superseded commit goes
-    val dir2 = newTable()
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir2)
-    DeltaExport.checkpointDeltaTable(spark, dir2)
-    DeltaExport.expireLogBefore(dir2)
-    assert(DeltaExport.logVersions(dir2).isEmpty)
-    Seq(dir, dir2).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    ()
-  }
-
-  test("the chain survives a FOREIGN cleanup that deletes v-1 but leaves an older ICT commit") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir) // v1
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir) // v2
-    val ict1 = ictIn(commitLine(dir, 1L)).get
-    // checkpoint at v2, then a foreign cleanup deletes v2's JSON but
-    // leaves v0/v1 (graft's own expiry would never produce this shape
-    // — it keeps the NEWEST commit; the fallback reads the newest
-    // SURVIVING predecessor instead of silently dropping the chain)
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir,
-      "_delta_log", "00000000000000000002.json"))
-    val v3 = DeltaExport.appendDeltaTable(spark,
-      Seq((4L, 40.0)).toDF("id", "bal"), dir)
-    assert(v3 === 3L)
-    assert(ictIn(commitLine(dir, 3L)).get > ict1)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("the chain RESTARTS from the enablement markers when NO surviving predecessor carries an ICT") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir) // v1
-    DeltaExport.appendDeltaTable(spark, Seq((3L, 30.0)).toDF("id", "bal"), dir) // v2
-    val enableTs =
-      """"delta\.inCommitTimestampEnablementTimestamp":"(\d+)"""".r
-        .findFirstMatchIn(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(dir, "_delta_log",
-            "00000000000000000001.json")), "UTF-8")).get.group(1).toLong
-    // checkpoint at v2, then a protocol-legal FOREIGN cleanup deletes
-    // EVERY JSON commit the checkpoint covers — no surviving
-    // predecessor carries an ICT, so the v-1 probe AND the deep walk
-    // both come up empty. The ADVICE-r18 failure mode was a silent
-    // chain drop (every later commit omits the field while the
-    // enablement markers still claim ICT); the fallback must restart
-    // the chain above the enablement timestamp instead.
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    Seq(0L, 1L, 2L).foreach(v => java.nio.file.Files.delete(
-      java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json")))
-    val v3 = DeltaExport.appendDeltaTable(spark,
-      Seq((4L, 40.0)).toDF("id", "bal"), dir)
-    assert(v3 === 3L)
-    val restarted = ictIn(commitLine(dir, 3L))
-    assert(restarted.isDefined, "chain silently dropped — commit v3 " +
-      "carries no inCommitTimestamp on an ICT-enabled table")
-    assert(restarted.get > enableTs)
-    // and the restarted chain continues strictly monotone
-    val v4 = DeltaExport.appendDeltaTable(spark,
-      Seq((5L, 50.0)).toDF("id", "bal"), dir)
-    assert(ictIn(commitLine(dir, v4)).get > restarted.get)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("a RESTORE that re-enables ICT stamps per its OWN committed metaData, not the pre-commit snapshot (ADVICE r19)") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir) // v1
-    DeltaExport.appendDeltaTable(spark,
-      Seq((3L, 30.0)).toDF("id", "bal"), dir)        // v2 (ICT stamped)
-    val ict2 = ictIn(commitLine(dir, 2L)).get
-    // FOREIGN disable at v3: a metaData-only commit flipping the
-    // enablement off, carrying no inCommitTimestamp of its own
-    val enabledMeta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000001.json")), "UTF-8")
-      .split("\n").find(_.startsWith("""{"metaData"""")).get
-    val disabledMeta = enabledMeta.replace(
-      """"delta.enableInCommitTimestamps":"true"""",
-      """"delta.enableInCommitTimestamps":"false"""")
-    assert(disabledMeta != enabledMeta)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_delta_log",
-      "00000000000000000003.json"), (disabledMeta + "\n").getBytes("UTF-8"))
-    // RESTORE back across the disabled stretch to the ICT-enabled v2:
-    // the commit re-asserts the enabled metaData as governing, so it
-    // must carry an inCommitTimestamp per its OWN configuration — the
-    // pre-commit snapshot (disabled) must not veto the stamp
-    val v4 = DeltaExport.restoreDeltaTable(spark, dir, 2L)
-    assert(v4 === 4L)
-    val restamped = ictIn(commitLine(dir, 4L))
-    assert(restamped.isDefined, "restore re-enabling ICT silently " +
-      "dropped the chain — no inCommitTimestamp on v4")
-    assert(restamped.get > ict2)
-    // and the chain continues strictly monotone after the restore
-    val v5 = DeltaExport.appendDeltaTable(spark,
-      Seq((4L, 40.0)).toDF("id", "bal"), dir)
-    assert(ictIn(commitLine(dir, v5)).get > restamped.get)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
 
   test("a watermark-advance metaData keeps a foreign writer's name/description/createdTime verbatim") {
     // identity table whose v0 metaData carries a description — the
@@ -229,19 +41,5 @@ class DeltaIctSpec extends SparkTestBase {
     assert(c1.contains(""""description":"the billing ledger""""), c1)
     assert(c1.contains("delta.identity.highWaterMark"), c1)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("double enablement refuses; non-ICT tables never gain the field") {
-    val dir = newTable()
-    DeltaExport.enableInCommitTimestamps(spark, dir)
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.enableInCommitTimestamps(spark, dir))
-    assert(e.getMessage.contains("already enabled"))
-    val dir2 = newTable()
-    DeltaExport.appendDeltaTable(spark, Seq((9L, 9.0)).toDF("id", "bal"), dir2)
-    assert(ictIn(commitLine(dir2, 1L)).isEmpty)
-    Seq(dir, dir2).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    ()
   }
 }

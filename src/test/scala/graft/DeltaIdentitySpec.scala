@@ -11,7 +11,8 @@ import graft.core.DeltaExport
   * watermark as a metaData action (plus the identityColumns protocol
   * declaration on first allocation), and explicit BY DEFAULT inserts
   * advance the watermark too, so later allocations can never collide.
-  * SYNC IDENTITY recovers tables whose rows predate tracking.
+  * A table whose rows predate tracking refuses allocation by name
+  * until an OVERWRITE with explicit values bootstraps its watermark.
   *
   * Reference behavior anchor: the reference pipeline (README.md,
   * notebook cells) relies on Databricks-managed tables whose surrogate
@@ -78,7 +79,7 @@ class DeltaIdentitySpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("non-empty table without a watermark refuses allocation by name toward SYNC IDENTITY, which unblocks it") {
+  test("non-empty table without a watermark refuses allocation by name and commits nothing") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_identity_sync").toString
     val md = new MetadataBuilder()
@@ -94,19 +95,10 @@ class DeltaIdentitySpec extends SparkTestBase {
         org.apache.spark.sql.Row(7L, 0.2)), 1), schema), dir)
     val e = intercept[IllegalArgumentException](
       DeltaExport.appendDeltaTable(spark, Seq(1.0).toDF("v"), dir))
-    assert(e.getMessage.contains("syncDeltaIdentity"), e.getMessage)
-    val v = DeltaExport.syncDeltaIdentity(spark, dir)
-    assert(v === 1L)
-    // sync observed max 7 → next allocation is 9
-    DeltaExport.appendDeltaTable(spark, Seq(1.0).toDF("v"), dir)
-    val got = DeltaExport.readDeltaTable(spark, dir)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(got === Seq(1L, 7L, 9L))
-    // a second sync with nothing beyond the watermark is a NO-OP —
-    // no commit lands
-    val before = DeltaExport.logVersions(dir).max
-    assert(DeltaExport.syncDeltaIdentity(spark, dir) === before)
-    assert(DeltaExport.logVersions(dir).max === before)
+    assert(e.getMessage.contains("records no high watermark") &&
+      e.getMessage.contains("'id'"), e.getMessage)
+    assert(DeltaExport.logVersions(dir) === Seq(0L),
+      "the refused allocation must commit nothing")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -233,9 +225,13 @@ class DeltaIdentitySpec extends SparkTestBase {
       Seq((5L, 9.9)).toDF("id", "v"), dir, Seq("id"))
     val e = intercept[IllegalArgumentException](
       DeltaExport.appendDeltaTable(spark, Seq(1.0).toDF("v"), dir))
-    assert(e.getMessage.contains("syncDeltaIdentity"), e.getMessage)
-    // sync observes the TRUE extremum; allocation then continues at 9
-    DeltaExport.syncDeltaIdentity(spark, dir)
+    assert(e.getMessage.contains("records no high watermark"),
+      e.getMessage)
+    // an OVERWRITE replaces the whole row set, so it may bootstrap the
+    // watermark from the TRUE extremum; allocation then continues at 9
+    DeltaExport.overwriteDeltaTable(spark,
+      DeltaExport.readDeltaTable(spark, dir).localCheckpoint(eager = true),
+      dir)
     DeltaExport.appendDeltaTable(spark, Seq(2.0).toDF("v"), dir)
     val got = DeltaExport.readDeltaTable(spark, dir)
       .select("id").as[Long].collect().sorted.toSeq

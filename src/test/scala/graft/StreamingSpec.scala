@@ -1319,7 +1319,8 @@ class StreamingSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE IF EXISTS $streamTbl")
       graft.core.TableStore.overwriteTable(spark, streamTbl, keptSeed)
       val nBatches = CurationStream.runSemanticDedupSink(
-        spark, dir, streamTbl, cents, threshold = 0.45, probes = 2).size
+        spark, dir, streamTbl, cents, threshold = SemanticBlocking.Threshold,
+        probes = SemanticBlocking.Probes).size
       assert(nBatches === 3, s"expected 3 micro-batches, got $nBatches")
       // manual fold over the SAME files in mtime order — the semantics
       // the sink must reproduce batch for batch
@@ -1327,8 +1328,10 @@ class StreamingSpec extends SparkTestBase {
       graft.core.TableStore.overwriteTable(spark, foldTbl, keptSeed)
       for (i <- 0 until 3) {
         val b = spark.read.parquet(s"$dir/emb_$i.parquet")
+        // vetBatch snapshots eagerly
         val kept = CurationStream.vetBatch(spark, foldTbl, b, cents,
-          threshold = 0.45, probes = 2) // vetBatch snapshots eagerly
+          threshold = SemanticBlocking.Threshold,
+          probes = SemanticBlocking.Probes)
         kept.write.mode("append").insertInto(foldTbl)
       }
       val streamed = spark.table(streamTbl).select("vec_id")
@@ -1346,7 +1349,8 @@ class StreamingSpec extends SparkTestBase {
       // table adds nothing — each copy meets its own representative at
       // cosine 1 and is pruned
       CurationStream.runSemanticDedupSink(
-        spark, dir, streamTbl, cents, threshold = 0.45, probes = 2)
+        spark, dir, streamTbl, cents, threshold = SemanticBlocking.Threshold,
+        probes = SemanticBlocking.Probes)
       assert(spark.table(streamTbl).count() === n,
         "re-ingesting already-landed data must add no rows")
     } finally {
@@ -1370,7 +1374,8 @@ class StreamingSpec extends SparkTestBase {
       val before = spark.table(tbl).count()
       val dir = CurationStream.stageEmbeddings(inc, parts = 3)
       val stats = CurationStream.runSemanticDedupSink(
-        spark, dir, tbl, cents, threshold = 0.45, probes = 2)
+        spark, dir, tbl, cents, threshold = SemanticBlocking.Threshold,
+        probes = SemanticBlocking.Probes)
       assert(stats.map(_.batchId) === stats.map(_.batchId).sorted,
         "stats must come back in batch order")
       assert(stats.length === 3)
@@ -1391,6 +1396,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming semantic-dedup sink resumes from its checkpoint: only new files are vetted") {
     import graft.ops.Similarity
+    import graft.queries.SemanticBlocking
     import graft.streaming.CurationStream
     val e = Tables.load(spark, sfDir, "embeddings")
     val inc = e.filter(col("vec_id") % 5 === 0)
@@ -1405,7 +1411,8 @@ class StreamingSpec extends SparkTestBase {
     try {
       val dir = CurationStream.stageEmbeddings(half1)
       assert(CurationStream.runSemanticDedupSink(
-        spark, dir, tbl, cents, checkpoint = Some(ckpt)).size === 1)
+        spark, dir, tbl, cents, SemanticBlocking.Threshold,
+        SemanticBlocking.Probes, checkpoint = Some(ckpt)).size === 1)
       val afterFirst = spark.table(tbl).count()
       assert(afterFirst > 0L)
       // a later file lands in the same directory (strictly newer mtime)
@@ -1417,7 +1424,8 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700009000000L))
       // the resumed run must vet ONLY the new file - one batch, not two
       assert(CurationStream.runSemanticDedupSink(
-        spark, dir, tbl, cents, checkpoint = Some(ckpt)).size === 1)
+        spark, dir, tbl, cents, SemanticBlocking.Threshold,
+        SemanticBlocking.Probes, checkpoint = Some(ckpt)).size === 1)
       assert(spark.table(tbl).count() > afterFirst,
         "the new file's survivors must land on resume")
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -1087,154 +1087,6 @@ class TableStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("V2 checkpoint (UUID manifest + _sidecars): reads, DV masking, time travel, pruned reads and expiry all consume it") {
-    import graft.core.DeltaExport
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.Row
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_v2cp").toString
-    DeltaExport.writeDeltaTable(spark,
-      spark.range(100).select(col("id"), (col("id") * 2).as("v"))
-        .repartition(3), dir)
-    DeltaExport.appendDeltaTable(spark,
-      spark.range(100, 120).select(col("id"), (col("id") * 2).as("v")),
-      dir)                                                        // v1
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") % 10 === 3) // v2
-    val (meta, live) = DeltaExport.snapshotAt(spark, dir, None)
-    val stats = DeltaExport.statsAt(spark, dir)
-    val dvs = DeltaExport.deletionVectorsAt(spark, dir)
-    assert(dvs.nonEmpty, "fixture needs a live deletion vector")
-    val tableId = """"metaData":\{"id":"([^"]+)"""".r
-      .findFirstMatchIn(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_delta_log",
-          "00000000000000000000.json")), "UTF-8")).get.group(1)
-    // ---- hand-build the V2 checkpoint at v2 ----
-    val logDir = java.nio.file.Paths.get(dir, "_delta_log")
-    java.nio.file.Files.createDirectories(logDir.resolve("_sidecars"))
-    def writeOne(df: org.apache.spark.sql.DataFrame,
-        dest: java.nio.file.Path): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_v2cp_w")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, dest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-    val dvType = StructType(Seq(
-      StructField("storageType", StringType), StructField("pathOrInlineDv", StringType),
-      StructField("offset", LongType), StructField("sizeInBytes", LongType),
-      StructField("cardinality", LongType)))
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType), StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType), StructField("stats", StringType),
-      StructField("deletionVector", dvType)))
-    def addRow(f: String): Row = {
-      val dv = dvs.get(f).map(d => Row(d.storageType, d.pathOrInlineDv,
-        d.offset.map(Long.box).orNull, d.sizeInBytes, d.cardinality)).orNull
-      Row(Row(f, Map.empty[String, String],
-        java.nio.file.Files.size(java.nio.file.Paths.get(dir, f)),
-        1L, false, stats.get(f).orNull, dv))
-    }
-    val (liveA, liveB) = live.sorted.splitAt(live.size / 2)
-    val scSchema = StructType(Seq(StructField("add", addType)))
-    val scNames = Seq("a", "b").map(x =>
-      s"${java.util.UUID.randomUUID()}.parquet")
-    Seq(liveA, liveB).zip(scNames).foreach { case (fs, n) =>
-      writeOne(spark.createDataFrame(
-        spark.sparkContext.parallelize(fs.map(addRow), 1), scSchema),
-        logDir.resolve("_sidecars").resolve(n))
-    }
-    val manifestSchema = StructType(Seq(
-      StructField("checkpointMetadata", StructType(Seq(
-        StructField("version", LongType)))),
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType))))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType), StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("createdTime", LongType),
-        StructField("configuration", MapType(StringType, StringType))))),
-      StructField("sidecar", StructType(Seq(
-        StructField("path", StringType), StructField("sizeInBytes", LongType),
-        StructField("modificationTime", LongType))))))
-    val feats = Seq("deletionVectors", "v2Checkpoint")
-    val manifestRows = Seq(
-      Row(Row(2L), null, null, null),
-      Row(null, Row(3, 7, feats, feats), null, null),
-      Row(null, null, Row(tableId, DeltaExport.schemaStringOf(meta),
-        Seq.empty[String], 1L, Map.empty[String, String]), null)) ++
-      scNames.map(n => Row(null, null, null, Row(n,
-        java.nio.file.Files.size(logDir.resolve("_sidecars").resolve(n)),
-        1L)))
-    val manifestName =
-      f"${2L}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-    writeOne(spark.createDataFrame(
-      spark.sparkContext.parallelize(manifestRows, 1), manifestSchema),
-      logDir.resolve(manifestName))
-    java.nio.file.Files.write(logDir.resolve("_last_checkpoint"),
-      s"""{"version":2,"size":${manifestRows.size}}"""
-        .getBytes("UTF-8"))
-    assert(DeltaExport.lastCheckpoint(dir)
-      .flatMap(_.v2Manifest) === Some(manifestName))
-    // expiry verifies manifest AND sidecars, then drops every JSON
-    assert(DeltaExport.expireLogBefore(dir, Some(spark)).size === 3)
-    // without a session a V2 expiry refuses by name — it cannot read
-    // the manifest to verify the sidecar files exist
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000002.json"),
-      "{\"commitInfo\":{\"timestamp\":1,\"operation\":\"NOOP\"}}\n"
-        .getBytes("UTF-8"))
-    val eNoS = intercept[IllegalStateException](
-      DeltaExport.expireLogBefore(dir))
-    assert(eNoS.getMessage.contains("SparkSession"), eNoS.getMessage)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir,
-      "_delta_log", "00000000000000000002.json"))
-    assert(DeltaExport.logVersions(dir).isEmpty)
-    // latest read replays FROM the manifest + sidecars, DV honored
-    val expect = (0L until 120L).filterNot(_ % 10 == 3)
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .orderBy("id").select("id").as[Long].collect().toSeq === expect)
-    assert(DeltaExport.readDeltaTable(spark, dir)
-      .filter(col("id") % 10 === 3).count() === 0L)
-    // time travel AT the checkpoint version works
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(2L)).count() ===
-      expect.size.toLong)
-    // a post-checkpoint append replays on top
-    DeltaExport.appendDeltaTable(spark,
-      Seq((500L, 1000L)).toDF("id", "v"), dir)                    // v3
-    assert(DeltaExport.readDeltaTable(spark, dir).count() ===
-      expect.size.toLong + 1L)
-    // the stats-pruned read runs its band DISTRIBUTED over the
-    // manifest + sidecars (the checkpointed path) and still prunes
-    val (bandDf, cand, liveN) = DeltaExport.readDeltaTablePruned(
-      spark, dir, "id", 500.0, 500.0)
-    assert(liveN > cand, s"cand=$cand live=$liveN")
-    assert(bandDf.filter(col("id") === 500L).count() === 1L)
-    // an unknown reader feature BESIDE v2Checkpoint still refuses by
-    // name through the same gate
-    val badFeats = Seq("v2Checkpoint", "futureMagic")
-    val badRows = manifestRows.map {
-      case r if r.get(1) != null =>
-        Row(null, Row(3, 7, badFeats, badFeats), null, null)
-      case r => r
-    }
-    writeOne(spark.createDataFrame(
-      spark.sparkContext.parallelize(badRows, 1), manifestSchema),
-      logDir.resolve(manifestName))
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.readDeltaTable(spark, dir, Some(2L)).collect())
-    assert(e.getMessage.contains("futureMagic"), e.getMessage)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("Delta checkpoint refuses to expire logs without a covering checkpoint") {
     import graft.core.DeltaExport
     val dir = java.nio.file.Files
@@ -1402,88 +1254,6 @@ class TableStoreSpec extends SparkTestBase {
     assert(postA.count() === 512L && postB.count() === 512L)
     assert(postA.agg(sum(col("payload"))).head.getLong(0) ===
       grid.filter(col("a") <= 7).agg(sum(col("payload"))).head.getLong(0))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("Delta incremental read: appends since a version, OPTIMIZE rewrites skipped, overwrites refused, expired ranges refused") {
-    import graft.core.DeltaExport
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    val v0df = base.filter(col("doc_id") % 3 === 0)
-    val v1df = base.filter(col("doc_id") % 3 === 1)
-    val v2df = base.filter(col("doc_id") % 3 === 2)
-    val v4df = base.limit(10).withColumn("doc_id", col("doc_id") + 900000L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_incr").toString
-    DeltaExport.writeDeltaTable(spark, v0df, dir)
-    DeltaExport.appendDeltaTable(spark, v1df, dir)
-    DeltaExport.appendDeltaTable(spark, v2df, dir)
-    DeltaExport.optimizeDeltaTable(spark, dir, targetFiles = 1)
-    DeltaExport.appendDeltaTable(spark, v4df, dir)
-    def same(a: org.apache.spark.sql.DataFrame,
-        b: org.apache.spark.sql.DataFrame): Unit = {
-      assert(a.exceptAll(b).count() === 0L)
-      assert(b.exceptAll(a).count() === 0L)
-    }
-    // since v0: the three appended batches, each exactly once — the
-    // OPTIMIZE rewrite of v0..v2 (which spans ALL their rows) must not
-    // re-deliver anything
-    same(DeltaExport.readDeltaAppendsSince(spark, dir, 0L),
-      v1df.unionAll(v2df).unionAll(v4df))
-    same(DeltaExport.readDeltaAppendsSince(spark, dir, 2L), v4df)
-    // a bounded range that holds ONLY the OPTIMIZE commit is empty
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 2L, Some(3L))
-      .count() === 0L)
-    // an overwrite in range is refused (append-only reader, not CDC)
-    DeltaExport.overwriteDeltaTable(spark, base.limit(5), dir)
-    val e = intercept[IllegalStateException] {
-      DeltaExport.readDeltaAppendsSince(spark, dir, 0L)
-    }
-    assert(e.getMessage.contains("changes existing data") &&
-      e.getMessage.contains("skipChangeCommits"))
-    // an expired range is refused rather than silently dropped
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    DeltaExport.expireLogBefore(dir)
-    val e2 = intercept[IllegalArgumentException] {
-      DeltaExport.readDeltaAppendsSince(spark, dir, 0L, Some(2L))
-    }
-    assert(e2.getMessage.contains("expired"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("Delta incremental read across DV commits: refused by name, or exact-once with skipChangeCommits") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_incr_dv").toString
-    def batch(lo: Long, hi: Long) =
-      (lo to hi).map(i => (i, s"row $i")).toDF("id", "s").repartition(1)
-    DeltaExport.writeDeltaTable(spark, batch(1L, 10L), dir)     // v0
-    DeltaExport.appendDeltaTable(spark, batch(11L, 20L), dir)   // v1
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 3L) // v2
-    DeltaExport.appendDeltaTable(spark, batch(21L, 30L), dir)   // v3
-    // a DV delete in range: refused BY NAME, naming the option
-    val e = intercept[IllegalStateException](
-      DeltaExport.readDeltaAppendsSince(spark, dir, 0L).count())
-    assert(e.getMessage.contains("deletion-vector") &&
-      e.getMessage.contains("skipChangeCommits"), e.getMessage)
-    // skipChangeCommits skips the change commit WHOLESALE: the two
-    // appends deliver exactly once — the DV re-add of v0's file (whose
-    // 9 survivors the consumer already received) must not double-land
-    val got = DeltaExport.readDeltaAppendsSince(spark, dir, 0L,
-        skipChangeCommits = true)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(got === (11L to 30L))
-    // an UPDATE's new-image files are PART of its change commit — a
-    // skip delivers none of them (row-level changes are CDC's surface)
-    DeltaExport.updateDeltaTableDv(spark, dir, col("id") === 21L,
-      Map("s" -> lit("updated")))                               // v4
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 3L,
-      skipChangeCommits = true).count() === 0L)
-    // a post-purge consumer resumes cleanly: the purge is
-    // dataChange=false, so it too delivers nothing
-    DeltaExport.purgeDeletionVectors(spark, dir)                // v5
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 4L).count() === 0L)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -1676,11 +1446,6 @@ class TableStoreSpec extends SparkTestBase {
     assert(DeltaExport.readDeltaTable(spark, dir, Some(0L)).count() === 5L)
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(dir, "lang=it")))
-    // incremental read of the appended range carries partition columns
-    val incr = DeltaExport.readDeltaAppendsSince(spark, dir, 0L)
-    assert(incr.orderBy("id").collect().map(r =>
-        (r.getLong(0), r.getString(2))).toSeq ===
-      Seq((6L, "en"), (7L, "it")))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -1741,70 +1506,6 @@ class TableStoreSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(orphan))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(flatDir))
-  }
-
-  test("Delta partitioned OPTIMIZE: compacts within partitions only, honors WHERE, keeps time travel and the incremental contract") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val d = (1L to 60L).map(i =>
-      (i, s"doc $i", if (i % 3 == 0) "de" else if (i % 2 == 0) "en" else "fr"))
-      .toDF("id", "text", "lang")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_popt").toString
-    // 4 pre-partition splits → several files per partition directory
-    DeltaExport.writeDeltaTablePartitioned(spark,
-      d.repartition(4), dir, Seq("lang"))
-    def filesPer(lang: String): Long = {
-      val p = java.nio.file.Paths.get(dir, s"lang=$lang")
-      val s = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(f =>
-          f.getFileName.toString.endsWith(".parquet"))
-      } finally s.close()
-    }
-    assert(filesPer("en") > 1 && filesPer("fr") > 1)
-    // WHERE restricts the compaction to one partition
-    val v1 = DeltaExport.optimizeDeltaTablePartitioned(
-      spark, dir, where = Map("lang" -> "en"))
-    assert(v1 === 1L)
-    val afterEn = DeltaExport.readDeltaTable(spark, dir)
-    assert(afterEn.count() === 60L)
-    // live file set: en compacted to 1, fr/de untouched
-    val liveByPart = DeltaExport.readDeltaTable(spark, dir)
-    assert(liveByPart.filter(col("lang") === "en").count() === 20L)
-    // full compaction pass
-    val v2 = DeltaExport.optimizeDeltaTablePartitioned(spark, dir)
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq ===
-      (1L to 60L))
-    assert(back.filter(col("lang") === "de").count() === 20L)
-    // partition prune still plans from the log after the rewrite
-    val (pr, c, l) = DeltaExport.readDeltaTablePartitionPruned(
-      spark, dir, Map("lang" -> "fr"))
-    assert(c === 1 && c < l && pr.count() === 20L)
-    // time travel to v0 reads the pre-compaction files
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(0L)).count() === 60L)
-    // the rewrite is dataChange=false: an incremental reader sees nothing
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 0L, Some(v2))
-      .count() === 0L)
-    // vacuum reclaims the superseded originals; latest still reads
-    assert(DeltaExport.vacuumDeltaTable(spark, dir).nonEmpty)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() === 60L)
-    // guards: zorder on a partition column; where on a data column;
-    // nothing left over target
-    val ez = intercept[IllegalArgumentException](
-      DeltaExport.optimizeDeltaTablePartitioned(spark, dir,
-        zorderBy = Seq("lang")))
-    assert(ez.getMessage.contains("partition columns"))
-    val ew = intercept[IllegalArgumentException](
-      DeltaExport.optimizeDeltaTablePartitioned(spark, dir,
-        where = Map("id" -> "1")))
-    assert(ew.getMessage.contains("not partition columns"))
-    val en = intercept[IllegalArgumentException](
-      DeltaExport.optimizeDeltaTablePartitioned(spark, dir))
-    assert(en.getMessage.contains("nothing to optimize"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("Delta MERGE: copy-on-write updates/inserts/deletes rewrite only the touched files; time travel and guards hold") {
@@ -2111,56 +1812,7 @@ class TableStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pdir))
   }
 
-  test("Delta TIMESTAMP time travel: commitInfo anchors versionAtTimestamp; skew adjusts monotonically; pre-history refused") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_ts").toString
-    DeltaExport.writeDeltaTable(spark,
-      Seq((1L, "a")).toDF("id", "s"), dir)
-    Thread.sleep(5)
-    DeltaExport.appendDeltaTable(spark, Seq((2L, "b")).toDF("id", "s"), dir)
-    Thread.sleep(5)
-    DeltaExport.appendDeltaTable(spark, Seq((3L, "c")).toDF("id", "s"), dir)
-    // every commit leads with a commitInfo carrying its operation
-    for ((v, op) <- Seq(0 -> "WRITE", 1 -> "APPEND", 2 -> "APPEND")) {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json")), "UTF-8")
-      assert(txt.linesIterator.next().startsWith("""{"commitInfo""""), txt)
-      assert(txt.contains(s""""operation":"$op""""), txt)
-    }
-    def ciTs(v: Int): Long = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json")), "UTF-8")
-      """"timestamp":(\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-    }
-    // as-of each commit's own instant → that version; between commits
-    // → the earlier one; far future → latest
-    assert(DeltaExport.versionAtTimestamp(dir, ciTs(0)) === 0L)
-    assert(DeltaExport.versionAtTimestamp(dir, ciTs(1)) === 1L)
-    assert(DeltaExport.versionAtTimestamp(dir, ciTs(2) - 1) === 1L)
-    assert(DeltaExport.versionAtTimestamp(dir, Long.MaxValue) === 2L)
-    assert(DeltaExport.readDeltaTableAsOfTimestamp(spark, dir, ciTs(1))
-      .count() === 2L)
-    // before the first commit: refused loudly
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.versionAtTimestamp(dir, ciTs(0) - 1))
-    assert(e.getMessage.contains("precedes the first surviving commit"))
-    // clock skew: write v3 whose recorded timestamp REWINDS behind v2 —
-    // the adjusted time must order after v2 (Delta's max(prev+1) rule),
-    // so an as-of at v2's instant still resolves to v2, not v3
-    DeltaExport.appendDeltaTable(spark, Seq((4L, "d")).toDF("id", "s"), dir)
-    val p3 = java.nio.file.Paths.get(dir, "_delta_log",
-      "00000000000000000003.json")
-    val rewound = new String(java.nio.file.Files.readAllBytes(p3), "UTF-8")
-      .replaceFirst(""""timestamp":\d+""", s""""timestamp":${ciTs(0)}""")
-    java.nio.file.Files.write(p3, rewound.getBytes("UTF-8"))
-    assert(DeltaExport.versionAtTimestamp(dir, ciTs(2)) === 2L)
-    assert(DeltaExport.versionAtTimestamp(dir, Long.MaxValue) === 3L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("Delta partitioned: special-character partition values survive write, prune, MERGE and OPTIMIZE") {
+  test("Delta partitioned: special-character partition values survive write, prune, MERGE and append") {
     import graft.core.DeltaExport
     import spark.implicits._
     // a space (literal on disk, %20 in the scan URI), a percent (Hive-
@@ -2217,19 +1869,17 @@ class TableStoreSpec extends SparkTestBase {
       "merge duplicated rows — a touched file's remove action was dropped")
     assert(merged.filter(col("text").startsWith("UPDATED")).count() ===
       langs.size.toLong)
-    // OPTIMIZE: append a second file into every partition, then compact —
-    // rewrites must land back in the SAME escaped directories and keep
-    // values intact
+    // append a second file into every partition — it must land in the
+    // SAME escaped directories and keep values intact
     DeltaExport.appendDeltaTablePartitioned(spark,
       langs.zipWithIndex.map { case (l, i) => (i * 10L + 3L, s"three $l", l) }
         .toDF("id", "text", "lang"), dir)
-    DeltaExport.optimizeDeltaTablePartitioned(spark, dir)
-    val optimized = DeltaExport.readDeltaTable(spark, dir)
-    assert(optimized.count() === d.count() + langs.size)
-    assert(optimized.select("lang").distinct().collect()
+    val appended = DeltaExport.readDeltaTable(spark, dir)
+    assert(appended.count() === d.count() + langs.size)
+    assert(appended.select("lang").distinct().collect()
       .map(_.getString(0)).toSet === langs.toSet)
-    // no stray directory appeared (an unescaped partDir would create
-    // nested lang=a/b or lang=a:b spellings)
+    // no stray directory appeared (an unescaped partition directory
+    // would create nested lang=a/b or lang=a:b spellings)
     val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
     val names = try {
       import scala.jdk.CollectionConverters._
@@ -2241,39 +1891,36 @@ class TableStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("Delta time travel: commitInfo with a nested object before its timestamp still anchors timestampAsOf") {
+  test("Timed vacuum: a commitInfo with a nested object before its timestamp still clocks the tombstone") {
     import graft.core.DeltaExport
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_delta_fts").toString
     DeltaExport.writeDeltaTable(spark, Seq((1L, "a")).toDF("id", "s"), dir)
-    DeltaExport.appendDeltaTable(spark, Seq((2L, "b")).toDF("id", "s"), dir)
-    // rewrite v1's commitInfo the way a foreign writer serializes it:
-    // an operationParameters OBJECT before the timestamp field — a
-    // first-}-bounded regex loses the timestamp and falls back to file
-    // mtime, mis-resolving as-of reads once files are copied
-    def ciTs(v: Long): Long = {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json")), "UTF-8")
-      """"timestamp":(\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-    }
-    val t1 = ciTs(1L)
+    DeltaExport.overwriteDeltaTable(spark, Seq((2L, "b")).toDF("id", "s"), dir)
+    val v0Files = DeltaExport.liveFilesAt(dir, Some(0L))._2
+    // rewrite v1 the way a foreign writer serializes it: its remove
+    // carries no deletionTimestamp, so the commit's own (aged)
+    // timestamp is the tombstone clock, and an operationParameters
+    // OBJECT holding a FRESH "timestamp" precedes it. A first-}-bounded
+    // parse loses the field and falls back to the fresh file mtime; a
+    // bare first match reads the nested one — either way v0's file
+    // would wrongly survive the window
+    val fresh = System.currentTimeMillis()
+    val old = fresh - 200L * 3600 * 1000
     val p1 = java.nio.file.Paths.get(dir, "_delta_log",
       "00000000000000000001.json")
     val foreign = new String(java.nio.file.Files.readAllBytes(p1), "UTF-8")
       .split("\n").map { l =>
         if (l.startsWith("""{"commitInfo""""))
-          s"""{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Append","partitionBy":"[]"},"timestamp":$t1}}"""
-        else l
+          s"""{"commitInfo":{"operation":"WRITE","operationParameters":{"mode":"Overwrite","timestamp":$fresh},"timestamp":$old}}"""
+        else l.replaceAll(""","deletionTimestamp":\d+""", "")
       }.mkString("\n") + "\n"
     java.nio.file.Files.write(p1, foreign.getBytes("UTF-8"))
-    // push the commit file's mtime far into the future: a parser that
-    // fell back to mtime would resolve t1 to v0, not v1
-    java.nio.file.Files.setLastModifiedTime(p1,
-      java.nio.file.attribute.FileTime.fromMillis(t1 + 86400000L))
-    assert(DeltaExport.versionAtTimestamp(dir, t1) === 1L)
-    assert(DeltaExport.readDeltaTableAsOfTimestamp(spark, dir, t1)
-      .count() === 2L)
+    assert(DeltaExport.vacuumDeltaTable(spark, dir, 168.0, force = false)
+      .toSet === v0Files.toSet)
+    assert(DeltaExport.readDeltaTable(spark, dir)
+      .select("id").as[Long].collect().toSeq === Seq(2L))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -2359,14 +2006,14 @@ class TableStoreSpec extends SparkTestBase {
         .filter(_.startsWith("deletion_vector_")).toSeq
     } finally bins.close()
     assert(binNames.size === 1, binNames.toString)
-    // purge materializes the deletes — the bin is now unreferenced,
-    // but its un-referencing commit is FRESH: the window keeps it and
-    // DV time travel to v1 still works
-    DeltaExport.purgeDeletionVectors(spark, dir)
+    // DV-aware OPTIMIZE materializes the deletes — the bin is now
+    // unreferenced, but its un-referencing commit is FRESH: the window
+    // keeps it and DV time travel to v1 still works
+    DeltaExport.optimizeDeltaTable(spark, dir)
     assert(!DeltaExport.vacuumDeltaTable(spark, dir, 168.0, force = false)
       .exists(_.startsWith("deletion_vector_")))
     assert(DeltaExport.readDeltaTable(spark, dir, Some(1L)).count() === 2700L)
-    // age the PURGE commit (the one that un-referenced the bin) past
+    // age the OPTIMIZE commit (the one that un-referenced the bin) past
     // the window → the bin reclaims; backdate the data tombstones too
     // so only age, not kind, differs
     val p2 = java.nio.file.Paths.get(dir, "_delta_log",
@@ -2700,162 +2347,6 @@ class TableStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir2))
   }
 
-  test("Row tracking consumer: ids stable across OPTIMIZE, fresh ids on append, CDC by row id, checkpoint round-trip, writer refusal (r20)") {
-    import graft.core.DeltaExport
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_rowtrack").toString
-    val logDir = java.nio.file.Paths.get(dir, "_delta_log")
-    java.nio.file.Files.createDirectories(logDir)
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_rt_w")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = new java.io.File(tmp.toString).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(dir, name),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-    // data invariant: _row_id == id for every row, so stability is
-    // checkable by value. f0: ids 0-4 (baseRowId 0), f1: ids 5-9
-    // (baseRowId 5), f2 appends ids 10-11 (fresh baseRowId 10 above
-    // the watermark), f3 compacts ALL rows scrambled with MATERIALIZED
-    // id/version columns (how OPTIMIZE preserves identity).
-    writeOne((0L to 4L).map(i => (i, i * 100)).toDF("id", "v"), "f0.parquet")
-    writeOne((5L to 9L).map(i => (i, i * 100)).toDF("id", "v"), "f1.parquet")
-    writeOne((10L to 11L).map(i => (i, i * 100)).toDF("id", "v"), "f2.parquet")
-    writeOne((0L to 11L).sortBy(i => -i)
-      .map(i => (i, i * 100, i, if (i < 10) 0L else 1L))
-      .toDF("id", "v", "_tracked_row_id", "_tracked_rcv"), "f3.parquet")
-    val schemaJson = StructType(Seq(
-      StructField("id", LongType), StructField("v", LongType)))
-      .json.replace("\\", "\\\\").replace("\"", "\\\"")
-    val protocol = """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["rowTracking","domainMetadata"],"writerFeatures":["rowTracking","domainMetadata"]}}"""
-    val meta = s"""{"metaData":{"id":"rt-test","format":{"provider":"parquet","options":{}},"schemaString":"$schemaJson","partitionColumns":[],"configuration":{"delta.enableRowTracking":"true","delta.rowTracking.materializedRowIdColumnName":"_tracked_row_id","delta.rowTracking.materializedRowCommitVersionColumnName":"_tracked_rcv"},"createdTime":1}}"""
-    def add(f: String, base: Long, drcv: Long, dc: Boolean) =
-      s"""{"add":{"path":"$f","partitionValues":{},"size":${java.nio.file.Files
-        .size(java.nio.file.Paths.get(dir, f))},"modificationTime":1,"dataChange":$dc,"baseRowId":$base,"defaultRowCommitVersion":$drcv}}"""
-    def rm(f: String) =
-      s"""{"remove":{"path":"$f","deletionTimestamp":2,"dataChange":false}}"""
-    def commit(v: Long, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(logDir.resolve(f"$v%020d.json"),
-        (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    commit(0L, Seq(protocol, meta,
-      add("f0.parquet", 0L, 0L, dc = true),
-      add("f1.parquet", 5L, 0L, dc = true)))
-    commit(1L, Seq(add("f2.parquet", 10L, 1L, dc = true)))
-    // the compaction allocates fresh base 12 over 12 rows, so the
-    // spec-correct watermark after v2 is 23 (a conformant writer
-    // advances the domain past every base it hands out)
-    commit(2L, Seq(
-      """{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\"rowIdHighWaterMark\":23}","removed":false}}""",
-      rm("f0.parquet"), rm("f1.parquet"), rm("f2.parquet"),
-      add("f3.parquet", 12L, 2L, dc = false)))
-    def idMap(v: Option[Long]): Map[Long, (Long, Long)] =
-      DeltaExport.readDeltaTableWithRowIds(spark, dir, v)
-        .select(col("id"), col("_row_id"), col("_row_commit_version"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    // pre-OPTIMIZE: ids computed as baseRowId + position, versions off
-    // the add's default
-    val at1 = idMap(Some(1L))
-    assert(at1 === (0L to 11L).map(i =>
-      i -> (i, if (i < 10) 0L else 1L)).toMap)
-    // post-OPTIMIZE: positions scrambled, ids STABLE through the
-    // materialized columns (the fresh baseRowId 12 must NOT win)
-    val at2 = idMap(None)
-    assert(at2 === at1, "row ids must survive OPTIMIZE unchanged")
-    // CDC by intrinsic identity: the append is inserts-only …
-    val c01 = DeltaExport.deltaChangesByRowId(spark, dir, 0L, 1L)
-      .select(col("_row_id"), col("id"), col("_change_type"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .toSet
-    assert(c01 === Set((10L, 10L, "insert"), (11L, 11L, "insert")))
-    // … and the OPTIMIZE diffs to NOTHING: every carry-over keeps its
-    // id and values, so identity-keyed CDC drops it as a non-change
-    assert(DeltaExport.deltaChangesByRowId(spark, dir, 1L, 2L)
-      .count() === 0L)
-    // checkpoint round-trip: baseRowId/defaultRowCommitVersion survive
-    // log expiry through the checkpoint's add rows
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    assert(DeltaExport.expireLogBefore(dir).nonEmpty)
-    assert(idMap(None) === at1, "ids must survive checkpoint + expiry")
-    // APPEND is a first-class writer since the r20 allocation work:
-    // fresh ids land strictly above everything ever allocated (f3's
-    // fresh baseRowId 12 over 12 rows pushed the effective watermark
-    // to 23); a row-REWRITING op still refuses by name
-    DeltaExport.appendDeltaTable(spark, Seq((99L, 0L)).toDF("id", "v"), dir)
-    val after = idMap(None)
-    assert(after.filter(_._1 != 99L) === at1)
-    assert(after(99L)._1 > 23L, after.toString)
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.overwriteDeltaTable(spark,
-        Seq((99L, 0L)).toDF("id", "v"), dir))
-    assert(e.getMessage.contains("ROW-TRACKED"), e.getMessage)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("V2 checkpoint WRITER round-trips against the consumer: write, expire, read parity with the classic form incl. DV structs (r20)") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    // two identical twin tables: one checkpoints classic, one V2 —
-    // after expiry both must reconstruct the same snapshot
-    def build(): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_delta_v2w").toString
-      DeltaExport.writeDeltaTable(spark,
-        spark.range(60).select(col("id"), (col("id") * 3).as("v"))
-          .repartition(3), dir)
-      DeltaExport.appendDeltaTable(spark,
-        spark.range(60, 80).select(col("id"), (col("id") * 3).as("v")),
-        dir)                                                       // v1
-      DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") % 9 === 4) // v2
-      DeltaExport.appendDeltaTableIdempotent(spark,
-        spark.range(80, 85).select(col("id"), (col("id") * 3).as("v")),
-        dir, "twin-app", 7L)                                       // v3
-      dir
-    }
-    val classic = build()
-    val v2 = build()
-    DeltaExport.checkpointDeltaTable(spark, classic)
-    // the V2 writer refuses without the feature — a pre-feature reader
-    // could not discover the UUID manifest
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.checkpointDeltaTableV2(spark, v2))
-    assert(e.getMessage.contains("v2Checkpoint"), e.getMessage)
-    DeltaExport.enableV2Checkpoints(spark, v2)                     // v4
-    val cpV = DeltaExport.checkpointDeltaTableV2(spark, v2, sidecars = 2)
-    assert(cpV === 4L)
-    assert(DeltaExport.lastCheckpoint(v2).flatMap(_.v2Manifest).isDefined,
-      "the pointer must discover the UUID-named manifest")
-    // expire BOTH logs; each table must reconstruct from its own form
-    assert(DeltaExport.expireLogBefore(classic).nonEmpty)
-    assert(DeltaExport.expireLogBefore(v2, Some(spark)).nonEmpty)
-    def snap(dir: String): Set[(Long, Long)] =
-      DeltaExport.readDeltaTable(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(snap(v2) === snap(classic), "V2 and classic must replay " +
-      "the same snapshot after expiry")
-    assert(snap(v2).size === 76, "60 + 20 + 5 rows minus 9 DV-masked")
-    // DV masking survives the V2 round-trip (id % 9 == 4 rows absent)
-    assert(!snap(v2).exists(_._1 % 9 === 4))
-    // the idempotence watermark survives the manifest's txn rows: a
-    // replay of the same (appId, txnVersion) lands nothing
-    val (_, landed) = DeltaExport.appendDeltaTableIdempotent(spark,
-      spark.range(80, 85).select(col("id"), (col("id") * 3).as("v")),
-      v2, "twin-app", 7L)
-    assert(!landed, "txn watermark must survive the V2 checkpoint")
-    // post-checkpoint writes continue the log normally
-    DeltaExport.appendDeltaTable(spark,
-      Seq((999L, 0L)).toDF("id", "v"), v2)
-    assert(DeltaExport.readDeltaTable(spark, v2).count() === 77L)
-    Seq(classic, v2).foreach(d => org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(d)))
-    ()
-  }
-
   test("Type widening consumer: pre-widening files upcast under the wide logged schema; time travel pins the narrow one (r20)") {
     import graft.core.DeltaExport
     import org.apache.spark.sql.types._
@@ -2919,224 +2410,10 @@ class TableStoreSpec extends SparkTestBase {
     assert(old.schema("amt").dataType === FloatType)
     assert(old.collect().map(r => (r.getInt(0), r.getFloat(1))).toSet ===
       Set((1, 1.5f), (2, 2.5f)))
-    // the incremental reader crosses the boundary at the wide schema
-    assert(DeltaExport.readDeltaAppendsSince(spark, dir, 1L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet ===
-      Set((100L, 9.5)))
     // appends at the wide schema flow normally
     DeltaExport.appendDeltaTable(spark,
       Seq((200L, 1.25d)).toDF("k", "amt"), dir)
     assert(DeltaExport.readDeltaTable(spark, dir).count() === 4L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("Row tracking WRITER: enable backfills ids, appends allocate above the watermark, DV delete is id-safe, OPTIMIZE materializes, rewriting DML refuses (r20)") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_rtwriter").toString
-    DeltaExport.writeDeltaTable(spark,
-      (0L until 20L).map(i => (i, i * 10)).toDF("id", "v")
-        .repartition(3), dir)
-    val vE = DeltaExport.enableRowTracking(spark, dir)          // v1
-    assert(vE === 1L)
-    def idMap(): Map[Long, Long] =
-      DeltaExport.readDeltaTableWithRowIds(spark, dir)
-        .select(col("id"), col("_row_id"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // backfill: every row has an id; ids are 0..19 (contiguous ranges
-    // per file); rcv = the enablement commit for every row
-    val at1 = idMap()
-    assert(at1.values.toSeq.sorted === (0L until 20L))
-    assert(DeltaExport.readDeltaTableWithRowIds(spark, dir)
-      .select(col("_row_commit_version")).distinct()
-      .collect().map(_.getLong(0)).toSeq === Seq(1L))
-    // append allocates ABOVE the watermark with this commit's version
-    DeltaExport.appendDeltaTable(spark,
-      Seq((100L, 0L), (101L, 0L)).toDF("id", "v"), dir)         // v2
-    val at2 = idMap()
-    assert(at2.filter(_._1 < 100L) === at1,
-      "standing ids must not move on append")
-    assert(at2(100L) >= 20L && at2(101L) >= 20L &&
-      at2(100L) != at2(101L))
-    // DV delete: survivors keep their ids; masked ids disappear
-    DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") % 5 === 3) // v3
-    val at3 = idMap()
-    assert(at3 === at2.filter { case (id, _) => id % 5 != 3 })
-    // OPTIMIZE materializes: ids stable across the compaction, the
-    // vectors purge, and identity CDC across it diffs to NOTHING
-    DeltaExport.optimizeDeltaTable(spark, dir, targetFiles = 2,
-      zorderBy = Seq("v"))                                      // v4
-    assert(idMap() === at3, "ids must survive OPTIMIZE via the " +
-      "materialized columns")
-    assert(DeltaExport.deletionVectorsAt(spark, dir, None).isEmpty)
-    assert(DeltaExport.deltaChangesByRowId(spark, dir, 3L, 4L)
-      .count() === 0L)
-    // watermark survives checkpoint + expiry: the next append cannot
-    // collide with any id ever allocated (OPTIMIZE burned fresh bases)
-    DeltaExport.checkpointDeltaTable(spark, dir)
-    DeltaExport.expireLogBefore(dir)
-    DeltaExport.appendDeltaTable(spark, Seq((200L, 0L)).toDF("id", "v"),
-      dir)                                                      // v5
-    val at5 = idMap()
-    assert(at5.values.toSeq.distinct.size === at5.size,
-      "row ids must stay unique after checkpoint + expiry + append")
-    assert(at5(200L) > at3.values.max)
-    // a shallow clone carries identity + watermark: reads agree, and a
-    // clone-side append allocates above the SOURCE's ids
-    val cl = java.nio.file.Files
-      .createTempDirectory("graft_delta_rtclone").toString
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cl))
-    DeltaExport.cloneDeltaTableShallow(spark, dir, cl)
-    assert(DeltaExport.readDeltaTableWithRowIds(spark, cl)
-      .select(col("id"), col("_row_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === at5)
-    DeltaExport.appendDeltaTable(spark, Seq((300L, 0L)).toDF("id", "v"), cl)
-    val clIds = DeltaExport.readDeltaTableWithRowIds(spark, cl)
-      .select(col("id"), col("_row_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(clIds(300L) > at5.values.max)
-    // row-REWRITING ops refuse by name; the id-safe family worked above
-    def refuses(f: => Any): Unit = {
-      val e = intercept[IllegalArgumentException](f)
-      assert(e.getMessage.contains("ROW-TRACKED"), e.getMessage)
-    }
-    refuses(DeltaExport.updateDeltaTableDv(spark, dir,
-      col("id") === 0L, Map("v" -> lit(1L))))
-    refuses(DeltaExport.overwriteDeltaTable(spark,
-      Seq((1L, 1L)).toDF("id", "v"), dir))
-    refuses(DeltaExport.deleteFromDeltaTable(spark, dir, col("id") === 0L))
-    refuses(DeltaExport.mergeDeltaTable(spark,
-      Seq((0L, 5L)).toDF("id", "v"), dir, Seq("id")))
-    val eP = intercept[IllegalArgumentException](
-      DeltaExport.purgeDeletionVectors(spark, dir))
-    assert(eP.getMessage.contains("ROW-TRACKED"), eP.getMessage)
-    // double enablement refuses
-    assert(intercept[IllegalArgumentException](
-      DeltaExport.enableRowTracking(spark, dir))
-      .getMessage.contains("already enabled"))
-    Seq(dir, cl).foreach(d => org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(d)))
-    ()
-  }
-
-  test("Row tracking survives a URI-encoded table path: ids resolve and OPTIMIZE preserves them under a directory with a space (r20 review)") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    // _metadata.file_path percent-encodes this directory name; a
-    // full-path join key would miss every file, NULL the ids, and the
-    // OPTIMIZE would then materialize NULL — silently re-identifying
-    // every row (the review-wave finding)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_delta_rt enc").toString
-    val dir = java.nio.file.Paths.get(root, "my table").toString
-    DeltaExport.writeDeltaTable(spark,
-      (0L until 10L).map(i => (i, i)).toDF("id", "v").repartition(2), dir)
-    DeltaExport.enableRowTracking(spark, dir)
-    def idMap(): Map[Long, Long] =
-      DeltaExport.readDeltaTableWithRowIds(spark, dir)
-        .select(col("id"), col("_row_id"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val at1 = idMap()
-    assert(at1.size === 10 && !at1.values.exists(_ < 0),
-      s"ids must resolve under an encoded path: $at1")
-    assert(at1.values.toSeq.sorted === (0L until 10L))
-    DeltaExport.optimizeDeltaTable(spark, dir, targetFiles = 1)
-    assert(idMap() === at1, "ids must survive OPTIMIZE under an " +
-      "encoded path")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-  }
-
-  test("CDF x row tracking on one table: the DV delete feeds change data AND keeps ids; both readers agree (r20)") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_cdfrt").toString
-    DeltaExport.writeDeltaTable(spark,
-      (0L until 12L).map(i => (i, i * 10)).toDF("id", "v")
-        .repartition(2), dir)
-    val p0 = java.nio.file.Paths.get(dir, "_delta_log",
-      "00000000000000000000.json")
-    java.nio.file.Files.write(p0, new String(
-      java.nio.file.Files.readAllBytes(p0), "UTF-8")
-      .replace(""""configuration":{}""",
-        """"configuration":{"delta.enableChangeDataFeed":"true"}""")
-      .getBytes("UTF-8"))
-    DeltaExport.enableRowTracking(spark, dir)                     // v1
-    val before = DeltaExport.readDeltaTableWithRowIds(spark, dir)
-      .select(col("id"), col("_row_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val vD = DeltaExport.deleteFromDeltaTableDv(spark, dir,
-      col("id") % 4 === 1)                                        // v2
-    // the CDF feed carries the deletes …
-    val feed = DeltaExport.readDeltaCdf(spark, dir, vD - 1, Some(vD))
-      .select(col("id"), col("_change_type"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(feed === Set((1L, "delete"), (5L, "delete"), (9L, "delete")))
-    // … and the survivors keep their ids (the id-safe mask); the
-    // identity CDC agrees with the feed on which rows left
-    val after = DeltaExport.readDeltaTableWithRowIds(spark, dir)
-      .select(col("id"), col("_row_id"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(after === before.filter { case (id, _) => id % 4 != 1 })
-    val byId = DeltaExport.deltaChangesByRowId(spark, dir, vD - 1, vD)
-      .select(col("id"), col("_change_type"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(byId === feed)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("Row tracking SUPPORTED phase: declared-but-not-enabled tables still get ids on every new add; rewrites refuse; enable refuses over partial state (r20 review)") {
-    import graft.core.DeltaExport
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_delta_rtsupported").toString
-    DeltaExport.writeDeltaTable(spark,
-      Seq((1L, 10L), (2L, 20L)).toDF("id", "v").repartition(1), dir)
-    // foreign upgrade: the protocol DECLARES rowTracking (supported
-    // phase) but delta.enableRowTracking stays off — per the spec,
-    // every new add must carry a baseRowId from now on, or a later
-    // enablement could never identify these rows
-    val p0 = java.nio.file.Paths.get(dir, "_delta_log",
-      "00000000000000000000.json")
-    java.nio.file.Files.write(p0, new String(
-      java.nio.file.Files.readAllBytes(p0), "UTF-8")
-      .replace("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-        """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","domainMetadata","invariants","rowTracking"]}}""")
-      .getBytes("UTF-8"))
-    DeltaExport.appendDeltaTable(spark,
-      Seq((3L, 30L)).toDF("id", "v"), dir)                        // v1
-    val c1 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000001.json")), "UTF-8")
-    assert(c1.contains(""""baseRowId":0"""), c1)
-    assert(c1.contains("rowIdHighWaterMark"), c1)
-    // reads surface the split honestly: pre-declaration rows have no
-    // identity, the new add does
-    val ids = DeltaExport.readDeltaTableWithRowIds(spark, dir)
-      .select(col("id"), col("_row_id")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None
-        else Some(r.getLong(1)))).toMap
-    assert(ids(1L).isEmpty && ids(2L).isEmpty && ids(3L).contains(0L))
-    // rewriting DML refuses in the supported phase too (this writer
-    // cannot stamp ids on a rewrite's adds outside OPTIMIZE)
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.updateDeltaTableDv(spark, dir, col("id") === 1L,
-        Map("v" -> lit(0L))))
-    assert(e.getMessage.contains("ROW-TRACKED"), e.getMessage)
-    // OPTIMIZE allocates fresh ids (stability is not promised yet,
-    // materialization needs no column names) — afterwards EVERY row
-    // carries an id and a later enablement could flip stability on
-    DeltaExport.optimizeDeltaTable(spark, dir, targetFiles = 1)    // v2
-    val after = DeltaExport.readDeltaTableWithRowIds(spark, dir)
-      .select(col("_row_id")).collect().map(_.getLong(0)).toSeq.sorted
-    assert(after.size === 3 && after.distinct.size === 3 &&
-      after.forall(_ > 0L), after.toString)
-    // our enabler refuses over this partial foreign state — its
-    // from-zero backfill would re-identify rows
-    val eEn = intercept[IllegalArgumentException](
-      DeltaExport.enableRowTracking(spark, dir))
-    assert(eEn.getMessage.contains("partial"), eEn.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
