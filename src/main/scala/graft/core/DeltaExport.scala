@@ -27,12 +27,13 @@ import org.apache.spark.sql.types.DataType
   * reader checks first.
   *
   * Implemented feature set. Writers: append (flat, partitioned,
-  * idempotent through `txn`), overwrite, copy-on-write MERGE and
-  * DELETE, deletion-vector DELETE / UPDATE, RESTORE, flat OPTIMIZE
-  * (ZORDER / Hilbert), schema evolution (ADD COLUMNS), column mapping
-  * upgrade and RENAME COLUMN, CHECK constraints, identity columns,
-  * generated columns, invariants, append-only, change data feed,
-  * classic and multi-part checkpoints, log expiry and vacuum. Readers:
+  * idempotent through `txn`), overwrite, copy-on-write MERGE (its
+  * delete flag rewrites row deletes), deletion-vector DELETE / UPDATE,
+  * RESTORE, flat OPTIMIZE (ZORDER / Hilbert), schema evolution (ADD
+  * COLUMNS), column mapping upgrade and RENAME COLUMN, CHECK
+  * constraints, identity columns, generated columns, invariants,
+  * append-only, change data feed, classic and multi-part checkpoints,
+  * log expiry and vacuum. Readers:
   * version time travel, partition- and stats-pruned scans, CDF, and
   * the reader features deletionVectors, columnMapping, timestampNtz,
   * rowTracking, domainMetadata and typeWidening. Refused by name:
@@ -1998,14 +1999,12 @@ object DeltaExport {
     val live = snap.live.toSeq
     require(live.nonEmpty, "no live files to merge into")
     val cols = tableSchema.fieldNames.toSeq
-    // partitioned target: the files lack the partition columns, so each
-    // live-partition group scans with the data schema plus literal
-    // partition values (the scanFiles rule) — with the file name kept
-    // for touched-file detection. DVs APPLIED: a touched DV file's
-    // rewrite materializes its deletes (and drops the vector with the
-    // remove); untouched files keep their vectors
-    val target = liveTargetWithFile(spark, dir, snap, withPos = false,
-      applyDvs = true)
+    // the live snapshot with the file name kept for touched-file
+    // detection. DVs APPLIED: a touched DV file's rewrite materializes
+    // its deletes (and drops the vector with the remove); untouched
+    // files keep their vectors
+    val target = scanFiles(spark, dir, snap.meta, live, None,
+      snap.pvals.toMap, snap.dvs.toMap, tags = Seq("__file"))
     // bounded collect: the DISTINCT file names containing a matched key
     val touchedUris = target
       .join(batch.select(keyCols.map(col): _*), keyCols, "left_semi")
@@ -2100,158 +2099,6 @@ object DeltaExport {
       idActions ++ removes ++ addActionsRelative(spark, dir, fresh, now) ++
         cdcActions,
       "MERGE")
-    v
-  }
-
-  /** The live snapshot scanned WITH its source file attached (`__file`
-    * = the scan URI; `__pos` = the parquet row index when `withPos`) —
-    * the target relation MERGE and both DELETEs share: partitioned
-    * tables group per live partition and re-attach the partition
-    * columns as literals (the scanFiles rule), flat tables scan in
-    * bulk.
-    *
-    * `applyDvs = false` (the DV writers' mode) scans files RAW — those
-    * callers merge prior DV positions themselves, and a DV-deleted row
-    * re-matching a delete predicate is a harmless superset there.
-    * `applyDvs = true` (the copy-on-write writers' mode) masks each
-    * DV-carrying file's deleted positions at scan, so matches and
-    * rewrites see only live rows and a rewrite MATERIALIZES the
-    * deletes. */
-  private def liveTargetWithFile(spark: SparkSession, dir: String,
-      snap: ReplayState, withPos: Boolean,
-      applyDvs: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val pcols = partitionColumnsOf(snap.meta)
-    val tableSchema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(snap.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val ctx = mappingCtx(spark, snap.meta, tableSchema)
-    val live = snap.live.toSeq
-    val tagCols = Seq("__file") ++ (if (withPos) Seq("__pos") else Nil)
-    def tag(df: DataFrame): DataFrame = {
-      val f = df.withColumn("__file", input_file_name())
-      if (withPos) f.withColumn("__pos", col("_metadata.row_index")) else f
-    }
-    // a DV-carrying file scans ALONE, tagged first (so __file/__pos
-    // survive the anti-join's projection), through the shared DV
-    // application primitive. Scans request the PHYSICAL schema and
-    // rename to logical LAST — after tagging and masking, which both
-    // need the scan's own _metadata column
-    def masked(rs: org.apache.spark.sql.types.StructType,
-        f: String): DataFrame =
-      dvAntiJoin(spark, dir,
-        tag(ctx.session.read.schema(rs).parquet(resolveDataPath(dir, f))),
-        snap.dvs(f), rs.fieldNames.toSeq ++ tagCols)
-    def scanGroup(schema: org.apache.spark.sql.types.StructType,
-        fs: Seq[String]): DataFrame = {
-      val rs = ctx.physSchema(schema)
-      val (dvFs, plain) =
-        if (applyDvs) fs.sorted.partition(snap.dvs.contains)
-        else (Seq.empty[String], fs.sorted)
-      val parts =
-        (if (plain.nonEmpty)
-          Seq(tag(ctx.session.read.schema(rs)
-            .parquet(plain.map(f => resolveDataPath(dir, f)): _*)))
-        else Nil) ++ dvFs.map(masked(rs, _))
-      ctx.toLogical(parts.reduce(_.unionByName(_)), schema, tagCols)
-    }
-    if (pcols.isEmpty) scanGroup(tableSchema, live)
-    else {
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        tableSchema.fields.filterNot(f => pcols.contains(f.name)))
-      live
-        .groupBy { f =>
-          val pv = logicalPvals(
-            snap.pvals.getOrElse(f, hivePartitionValues(f)), ctx.phys)
-          pcols.map(c => pv.getOrElse(c, null))
-        }
-        .toSeq.sortBy(_._1.mkString("/"))
-        .map { case (vals, fs) =>
-          pcols.zip(vals).foldLeft(scanGroup(dataSchema, fs)) {
-            case (d, (c, value)) =>
-              d.withColumn(c, lit(value).cast(tableSchema(c).dataType))
-          }
-        }
-        .reduce(_.unionByName(_))
-    }
-  }
-
-  /** Row-level DELETE, COPY-ON-WRITE: only the files CONTAINING a
-    * matching row rewrite (minus their matches); untouched files keep
-    * their adds — stats, layout and all. One dataChange=true commit of
-    * removes + adds; old files stay for time travel until vacuum. The
-    * whole-file-rewrite cost is the COW trade — for small targeted
-    * deletes, [[deleteFromDeltaTableDv]] writes a deletion vector
-    * instead and moves no data at all. A predicate matching nothing is
-    * refused loudly (Delta logs a no-op commit; a silent version bump
-    * that changed nothing has burned real debugging hours). Returns
-    * the new version. */
-  def deleteFromDeltaTable(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions._
-    val v = latestVersion(dir) + 1
-    val snap = snapshotState(spark, dir, None, keepStats = false)
-    val cdf = cdfEnabled(snap.meta)
-    enforceWriterObligations(snap.meta, "DELETE", removesData = true, None,
-      emitsChangeData = cdf, protocol = snap.protocol)
-    val pcols = partitionColumnsOf(snap.meta)
-    val live = snap.live.toSeq
-    require(live.nonEmpty, "no live files to delete from")
-    val delSchema = org.apache.spark.sql.types.DataType
-      .fromJson(schemaStringOf(snap.meta))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val cmCtx = mappingCtx(spark, snap.meta, delSchema)
-    val cols = delSchema.fieldNames.toSeq
-    // DVs APPLIED: only LIVE rows can match (a predicate matching
-    // nothing but already-masked rows is a refused no-op), and a
-    // touched DV file's rewrite materializes its deletes
-    val target = liveTargetWithFile(spark, dir, snap, withPos = false,
-      applyDvs = true)
-    requireDeterministicPredicate(target.filter(predicate), "DELETE")
-    // bounded collect: the DISTINCT file names containing a match
-    val touchedUris = target.filter(predicate)
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    require(touchedUris.nonEmpty,
-      "DELETE matched no rows — refusing a no-op commit")
-    val touchedPaths = touchedUris.map(uriToPath)
-    val touched = live.filter(f =>
-      touchedPaths.exists(uriMatchesLogged(dir, _, f)))
-    // NULL-predicate rows are NOT matches (SQL DELETE deletes only
-    // where TRUE) — a bare !predicate is null there too and would drop
-    // them from the rewrite: silent row loss, not a delete
-    val survivors = target
-      .filter(col("__file").isin(touchedUris.toSeq: _*))
-      .filter(!coalesce(predicate, lit(false)))
-      .select(cols.map(col): _*)
-    val before = dataFilesRelative(dir).toSet
-    val freshNeeded = survivors.limit(1).collect().nonEmpty
-    if (freshNeeded) {
-      val physSurv =
-        toPhysicalFrame(survivors, delSchema.fields.toSeq, cmCtx.mode)
-      if (pcols.isEmpty) physSurv.write.mode("append").parquet(dir)
-      else physSurv.write.partitionBy(pcols.map(cmCtx.phys): _*)
-        .mode("append").parquet(dir)
-    }
-    val fresh = dataFilesRelative(dir).filterNot(before)
-    require(!freshNeeded || fresh.nonEmpty, "delete produced no data files")
-    // CDF obligation honored: the deleted rows (exactly the matches in
-    // touched files, NULL-predicate rows excluded) land in
-    // _change_data and the commit carries their cdc actions
-    val cdcActions =
-      if (!cdf) Seq.empty[String]
-      else writeCdcFiles(spark, dir, snap.meta,
-        target.filter(col("__file").isin(touchedUris.toSeq: _*))
-          .filter(coalesce(predicate, lit(false)))
-          .select(cols.map(col): _*)
-          .withColumn("_change_type", lit("delete")))
-    val now = System.currentTimeMillis()
-    val removes = touched.sorted.map(p =>
-      s"""{"remove":{"path":"${esc(p)}","deletionTimestamp":$now,"dataChange":true}}""")
-    writeCommit(dir, v,
-      removes ++ addActionsRelative(spark, dir, fresh, now) ++ cdcActions,
-      "DELETE")
     v
   }
 
@@ -2501,7 +2348,7 @@ object DeltaExport {
     *    CHECKPOINT) and plain appends stay allowed.
     *  - `delta.enableChangeDataFeed=true` obliges a writer committing
     *    a partial-file rewrite to emit `_change_data` files; the DML
-    *    triad (DELETE COW+DV, DV UPDATE, MERGE), OVERWRITE, and
+    *    triad (DV DELETE, DV UPDATE, MERGE), OVERWRITE, and
     *    RESTORE all DO (schema-CHANGING forms included since r19 —
     *    each emits its feed in its OWN commit's schema, which the
     *    per-commit CDF reader resolves) and pass `emitsChangeData=
@@ -3023,8 +2870,8 @@ object DeltaExport {
     * irreducible cost of any DV writer (per-file bitmaps must be
     * materialized to serialize into the commit), bounded by the
     * DELETE's own row count. A delete too big to hold as positions is
-    * a rewrite, not a vector — use [[deleteFromDeltaTable]]. Returns
-    * the new version. */
+    * a rewrite, not a vector — [[mergeDeltaTable]] with a delete flag
+    * rewrites the touched files instead. Returns the new version. */
   def deleteFromDeltaTableDv(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
@@ -3040,7 +2887,8 @@ object DeltaExport {
       protocol = snap.protocol)
     val live = snap.live.toSeq
     require(live.nonEmpty, "no live files to delete from")
-    val target = liveTargetWithFile(spark, dir, snap, withPos = true)
+    val target = scanFiles(spark, dir, snap.meta, live, None,
+      snap.pvals.toMap, tags = Seq("__file", "__pos"))
     requireDeterministicPredicate(target.filter(predicate), "DELETE")
     val matched = target.filter(predicate)
       .select(col("__file"), col("__pos"))
@@ -3155,7 +3003,8 @@ object DeltaExport {
         "an update that moves rows between partitions is a MERGE")
     val live = snap.live.toSeq
     require(live.nonEmpty, "no live files to update")
-    val target = liveTargetWithFile(spark, dir, snap, withPos = true)
+    val target = scanFiles(spark, dir, snap.meta, live, None,
+      snap.pvals.toMap, tags = Seq("__file", "__pos"))
       .localCheckpoint(eager = false)
     requireDeterministicPredicate(target.filter(predicate), "UPDATE")
     val matchedPos = target.filter(predicate)
@@ -4176,19 +4025,34 @@ object DeltaExport {
     }.select(schema.fieldNames.map(col): _*)
   }
 
-  /** Scan exactly `files` with the logged schema. For a PARTITIONED
-    * table the data files do not contain the partition columns — the
-    * protocol obliges the reader to re-attach them from each add's
-    * partitionValues: files group by their partition tuple (bounded
-    * driver metadata — one group per live partition, the same planning
-    * state every Delta reader holds), each group scans with the
-    * data-only schema plus literal partition columns cast to their
-    * logged types, and the groups union back in logged column order. */
+  /** Scan exactly `files` with the logged schema — the one scan every
+    * read and every DML target shares. Files group by their partition
+    * tuple (bounded driver metadata — one group per live partition, the
+    * same planning state every Delta reader holds; a flat table is one
+    * group with no partition columns). For a PARTITIONED table the data
+    * files do not contain the partition columns — the protocol obliges
+    * the reader to re-attach them from each add's partitionValues: each
+    * group scans with the data-only schema plus literal partition
+    * columns cast to their logged types, and the groups union back in
+    * logged column order.
+    *
+    * A file in `dvs` scans ALONE with the parquet row index attached,
+    * anti-joined against its deletion vector's positions — per the
+    * protocol, the DV indexes rows by their position within that one
+    * file; the other files of a group scan in bulk. `tags` (`__file` =
+    * the scan URI, `__pos` = the parquet row index) attach at the scan,
+    * before the DV mask, and trail the logged columns: the DML target
+    * relation. MERGE passes the snapshot's vectors, so matches and
+    * rewrites see only live rows and a rewrite MATERIALIZES the
+    * deletes; the DV writers pass none and scan files RAW — they merge
+    * prior DV positions themselves, and a DV-deleted row re-matching a
+    * predicate is a harmless superset there. */
   private def scanFiles(spark: SparkSession, dir: String, meta: String,
       files: Seq[String], versionAsOf: Option[Long],
       pvals: Map[String, Map[String, String]] = Map.empty,
-      dvs: Map[String, DeletionVectors.Descriptor] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+      dvs: Map[String, DeletionVectors.Descriptor] = Map.empty,
+      tags: Seq[String] = Nil): DataFrame = {
+    import org.apache.spark.sql.functions.{col, input_file_name, lit}
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(schemaStringOf(meta))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -4211,7 +4075,8 @@ object DeltaExport {
     val pcols = partitionColumnsOf(meta)
     // column mapping: in 'name' mode parquet stores columns under the
     // schemaString's per-field physical names — read physically,
-    // rename to logical right after the scan. In 'id' mode (the
+    // rename to logical LAST (after tagging and masking, which both
+    // need the scan's own _metadata column). In 'id' mode (the
     // Databricks default for evolved tables) resolution is by PARQUET
     // FIELD ID: the requested schema keeps its logical names but
     // carries each field's delta.columnMapping.id as parquet.field.id
@@ -4223,226 +4088,70 @@ object DeltaExport {
     // relation's session, so the caller's session conf is never
     // mutated behind its back.
     val ctx = mappingCtx(spark, meta, schema)
-    val phys = ctx.phys
-    val scanSession = ctx.session
-    def physSchema(s: org.apache.spark.sql.types.StructType) =
-      ctx.physSchema(s)
-    def toLogical(df: DataFrame,
-        s: org.apache.spark.sql.types.StructType): DataFrame =
-      ctx.toLogical(df, s)
-    // a file with a deletion vector scans ALONE with the parquet row
-    // index attached, anti-joined against its DV's deleted positions —
-    // per the protocol, the DV indexes rows by their position within
-    // that one file. The positions decode once on the driver (bounded
-    // by one file's row count) and distribute as a join side; DV-free
-    // files scan in bulk exactly as before.
-    def dvFilter(base: DataFrame, f: String,
-        outCols: Seq[String]): DataFrame =
-      dvAntiJoin(spark, dir, base, dvs(f), outCols)
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.fields.filterNot(f => pcols.contains(f.name)))
+    val rs = ctx.physSchema(dataSchema)
+    def scan(fs: Seq[String]): DataFrame =
+      tags.foldLeft(ctx.session.read.schema(rs)
+          .parquet(fs.map(f => resolveDataPath(dir, f)): _*)) { (d, t) =>
+        d.withColumn(t,
+          if (t == "__pos") col("_metadata.row_index") else input_file_name())
+      }
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (pcols.isEmpty) {
-      val (dvFiles, plain) = files.partition(dvs.contains)
-      val rs = physSchema(schema)
-      val parts =
-        (if (plain.nonEmpty)
-          Seq(scanSession.read.schema(rs)
-            .parquet(plain.map(f => resolveDataPath(dir, f)): _*))
-        else Nil) ++
-        dvFiles.sorted.map(f => dvFilter(
-          scanSession.read.schema(rs).parquet(resolveDataPath(dir, f)), f,
-          rs.fieldNames.toSeq))
-      toLogical(parts.reduce(_.unionByName(_)), schema)
-    } else {
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(f => pcols.contains(f.name)))
-      val rs = physSchema(dataSchema)
-      val groups = files.groupBy { f =>
-        val pv = logicalPvals(
-          pvals.getOrElse(f, hivePartitionValues(f)), phys)
+    else files
+      .groupBy { f =>
+        lazy val pv = logicalPvals(
+          pvals.getOrElse(f, hivePartitionValues(f)), ctx.phys)
         pcols.map(c => pv.getOrElse(c, null))
       }
-      groups.toSeq
-        .sortBy(_._1.mkString("/"))
-        .map { case (vals, fs) =>
-          val (dvFiles, plain) = fs.partition(dvs.contains)
-          val parts =
-            (if (plain.nonEmpty)
-              Seq(scanSession.read.schema(rs)
-                .parquet(plain.sorted.map(f => resolveDataPath(dir, f)): _*))
-            else Nil) ++
-            dvFiles.sorted.map(f => dvFilter(
-              scanSession.read.schema(rs).parquet(resolveDataPath(dir, f)),
-              f, rs.fieldNames.toSeq))
-          val base = toLogical(parts.reduce(_.unionByName(_)), dataSchema)
-          pcols.zip(vals).foldLeft(base) { case (d, (c, v)) =>
-            d.withColumn(c, lit(v).cast(schema(c).dataType))
-          }
+      .toSeq.sortBy(_._1.mkString("/"))
+      .map { case (vals, fs) =>
+        val (dvFiles, plain) = fs.sorted.partition(dvs.contains)
+        val parts = (if (plain.nonEmpty) Seq(scan(plain)) else Nil) ++
+          dvFiles.map(f => dvAntiJoin(spark, dir, scan(Seq(f)), dvs(f),
+            rs.fieldNames.toSeq ++ tags))
+        val base =
+          ctx.toLogical(parts.reduce(_.unionByName(_)), dataSchema, tags)
+        pcols.zip(vals).foldLeft(base) { case (d, (c, v)) =>
+          d.withColumn(c, lit(v).cast(schema(c).dataType))
         }
-        .reduce(_.unionByName(_))
-        .select(schema.fieldNames.map(col): _*)
-    }
+      }
+      .reduce(_.unionByName(_))
+      .select((schema.fieldNames.toSeq ++ tags).map(col): _*)
   }
 
   /** PARTITION-pruned read — the log-only prune every partitioned Delta
     * table exists for: live files whose partitionValues satisfy the
-    * equality `filters` are selected from the replayed add actions
-    * BEFORE any file is opened; no directory listing, no footer reads
-    * for pruned partitions. Filter keys must be logged partition
-    * columns (a data-column filter here would silently prune nothing —
-    * refused loudly; use [[readDeltaTablePruned]]'s stats bands for
-    * data columns). A null filter value matches null partitions.
-    * Returns (result, candidateFiles, liveFiles). */
+    * equality `filters` are selected from the log's add actions BEFORE
+    * any file is opened; no directory listing, no footer reads for
+    * pruned partitions. Filter keys must be logged partition columns (a
+    * data-column filter here would silently prune nothing — refused
+    * loudly; use [[readDeltaTablePruned]]'s stats bands for data
+    * columns). A file's partition value is the one the scan attaches:
+    * its add's value, null when the add's partitionValues lack the
+    * column — so a null filter value matches null partitions and those
+    * files alike. Candidates come from [[prunedScan]], checkpointed or
+    * not. Returns (result, candidateFiles, liveFiles). */
   def readDeltaTablePartitionPruned(spark: SparkSession, dir: String,
       filters: Map[String, String],
-      versionAsOf: Option[Long] = None): (DataFrame, Int, Int) =
-    lastCheckpoint(dir) match {
-      // checkpointed tables prune DISTRIBUTED (the stats-band rule
-      // applied to partitionValues): the equality filters run as a
-      // Spark job over the checkpoint parquet and only matching rows
-      // reach the driver
-      case Some(cp) if versionAsOf.forall(_ >= cp.version) =>
-        readDeltaTablePartitionPrunedCheckpointed(spark, dir, cp,
-          filters, versionAsOf)
-      case _ =>
-        readDeltaTablePartitionPrunedReplayed(spark, dir, filters,
-          versionAsOf)
-    }
-
-  private def readDeltaTablePartitionPrunedReplayed(spark: SparkSession,
-      dir: String, filters: Map[String, String],
-      versionAsOf: Option[Long]): (DataFrame, Int, Int) = {
+      versionAsOf: Option[Long] = None): (DataFrame, Int, Int) = {
+    import org.apache.spark.sql.functions.{col, lit}
     require(filters.nonEmpty, "no partition filters — use readDeltaTable")
-    val st = snapshotState(spark, dir, versionAsOf, keepStats = false)
-    val pcols = partitionColumnsOf(st.meta)
-    val bad = filters.keys.filterNot(pcols.contains)
-    require(bad.isEmpty,
-      s"filter column(s) ${bad.mkString(", ")} are not partition columns " +
-        s"(${pcols.mkString(", ")}) — a partition prune on a data column " +
-        "would scan nothing it should")
-    val cmPhys = physicalNames(
-      org.apache.spark.sql.types.DataType.fromJson(schemaStringOf(st.meta))
-        .asInstanceOf[org.apache.spark.sql.types.StructType],
-      columnMappingMode(st.meta))
-    val files = st.live.toSeq
-    val keep = files.filter { f =>
-      val pv = logicalPvals(
-        st.pvals.getOrElse(f, hivePartitionValues(f)), cmPhys)
-      filters.forall { case (k, v) => pv.contains(k) && pv(k) == v }
+    prunedScan(spark, dir, versionAsOf, keepStats = false) { meta =>
+      val pcols = partitionColumnsOf(meta)
+      val bad = filters.keys.filterNot(pcols.contains)
+      require(bad.isEmpty,
+        s"filter column(s) ${bad.mkString(", ")} are not partition " +
+          s"columns (${pcols.mkString(", ")}) — a partition prune on a " +
+          "data column would scan nothing it should")
+      // the null-safe <=> lets a null filter value match a null or
+      // missing partition value
+      filters.map { case (k, v) =>
+        col("pv").getItem(physicalKey(meta, k)) <=> lit(v)
+      }.reduce(_ && _)
     }
-    (scanFiles(spark, dir, st.meta, keep, versionAsOf, st.pvals.toMap,
-      st.dvs.toMap),
-      keep.size, files.size)
-  }
-
-  /** Partition prune via the CHECKPOINT — the readDeltaTablePruned
-    * shape applied to partitionValues: checkpoint add rows filter
-    * distributed on the (physical-keyed) partition map, only matches
-    * collect, the JSON tail replays driver-side and supersedes touched
-    * paths. */
-  private def readDeltaTablePartitionPrunedCheckpointed(
-      spark: SparkSession, dir: String, cp: CheckpointPointer,
-      filters: Map[String, String],
-      versionAsOf: Option[Long]): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    require(filters.nonEmpty, "no partition filters — use readDeltaTable")
-    val cpV = cp.version
-    val versions = logVersions(dir)
-    val cut = versionAsOf.getOrElse((cpV +: versions).max)
-    val missing = ((cpV + 1) to cut).filterNot(versions.contains)
-    require(missing.isEmpty,
-      s"commits after checkpoint v$cpV are missing: ${missing.mkString(",")}")
-    val tail = new ReplayState
-    tail.keepStats = false
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    ((cpV + 1) to cut).foreach { v =>
-      val lines = new String(
-        Files.readAllBytes(Paths.get(dir, "_delta_log", commitFile(v))),
-        StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty)
-      lines.foreach { l =>
-        if (l.startsWith("""{"add"""")) touched += pathOf(l, "add")
-        else if (l.startsWith("""{"remove""""))
-          touched += pathOf(l, "remove")
-      }
-      applyCommit(dir, v, tail)
-    }
-    val paths = checkpointPaths(dir, cp.version, cp.parts)
-    val gone = paths.filterNot(Files.isRegularFile(_))
-    require(gone.isEmpty,
-      s"_last_checkpoint names v$cpV but checkpoint file(s) " +
-        s"${gone.map(_.getFileName).mkString(", ")} are missing")
-    val cpBase = spark.read.option("mergeSchema", "true")
-      .parquet(paths.map(_.toString): _*)
-    var cpMeta: String = null
-    cpBase.filter(col("protocol").isNotNull || col("metaData").isNotNull)
-      .collect().foreach { r =>
-        structField(r, "protocol").foreach { pr =>
-          checkReaderProtocol(protocolLineOfRow(pr), s"in checkpoint v$cpV")
-        }
-        structField(r, "metaData").foreach(m => cpMeta = metaLineOfRow(m))
-      }
-    val meta = Option(tail.meta).getOrElse(cpMeta)
-    require(meta != null, s"checkpoint v$cpV carries no metaData")
-    val pcols = partitionColumnsOf(meta)
-    val bad = filters.keys.filterNot(pcols.contains)
-    require(bad.isEmpty,
-      s"filter column(s) ${bad.mkString(", ")} are not partition columns " +
-        s"(${pcols.mkString(", ")}) — a partition prune on a data column " +
-        "would scan nothing it should")
-    val cmPhys = physicalNames(
-      org.apache.spark.sql.types.DataType.fromJson(schemaStringOf(meta))
-        .asInstanceOf[org.apache.spark.sql.types.StructType],
-      columnMappingMode(meta))
-    val addT = cpBase.schema.fields.find(_.name == "add")
-      .map(_.dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(new org.apache.spark.sql.types.StructType())
-    def addCol(name: String, tpe: String) =
-      if (addT.fieldNames.contains(name)) col(s"add.$name")
-      else lit(null).cast(tpe)
-    val touchedDf = touched.toSeq.toDF("path")
-    val cpAdds = cpBase.filter(col("add").isNotNull)
-      .select(col("add.path").as("path"),
-        addCol("partitionValues", "map<string,string>").as("pv"),
-        addCol("deletionVector",
-          "struct<storageType:string,pathOrInlineDv:string," +
-            "offset:bigint,sizeInBytes:bigint,cardinality:bigint>")
-          .as("dv"))
-      .join(broadcast(touchedDf), Seq("path"), "left_anti")
-    // the match expression binds PHYSICAL keys (the logged spelling);
-    // null filter values match null partitions via the null-safe <=>
-    val matchExpr = filters.map { case (k, v) =>
-      val pk = cmPhys.getOrElse(k, k)
-      element_at(col("pv"), pk) <=> lit(v)
-    }.reduce(_ && _)
-    val cpAgg = cpAdds
-      .agg(count(lit(1)).as("n"),
-        collect_list(when(matchExpr,
-          struct(col("path"), col("pv"), col("dv")))).as("cands"))
-      .collect().head
-    val liveCp = cpAgg.getLong(0)
-    val cpCands = cpAgg.getSeq[org.apache.spark.sql.Row](1)
-    val tailKeep = tail.live.toSeq.filter { f =>
-      val pv = logicalPvals(
-        tail.pvals.getOrElse(f, hivePartitionValues(f)), cmPhys)
-      filters.forall { case (k, v) => pv.contains(k) && pv(k) == v }
-    }
-    val candidates = (cpCands.map(_.getString(0)).toSeq ++ tailKeep).sorted
-    val pvals: Map[String, Map[String, String]] =
-      cpCands.flatMap { r =>
-        val i = r.schema.fieldNames.indexOf("pv")
-        if (r.isNullAt(i)) None
-        else Some(r.getString(0) -> r.getMap[String, String](i).toMap)
-      }.toMap ++ tail.pvals
-    val dvs: Map[String, DeletionVectors.Descriptor] =
-      cpCands.flatMap { r =>
-        val i = r.schema.fieldNames.indexOf("dv")
-        if (r.isNullAt(i)) None
-        else Some(r.getString(0) -> dvDescriptorOfRow(r.getStruct(i)))
-      }.toMap ++ tail.dvs
-    (scanFiles(spark, dir, meta, candidates, versionAsOf, pvals, dvs),
-      candidates.size, (liveCp + tail.live.size).toInt)
   }
 
   /** Stats-pruned band read — the planning move that makes Delta fast
@@ -4459,29 +4168,26 @@ object DeltaExport {
     * pruning is an optimization, never a correctness dependency.
     * Existence is checked for candidate files only — a pruned read
     * touches exactly the files it scans, the same O(candidates)
-    * posture a real Delta reader has. Returns
+    * posture a real Delta reader has. Candidates come from
+    * [[prunedScan]], checkpointed or not. Returns
     * (result, candidateFiles, liveFiles). */
   def readDeltaTablePruned(spark: SparkSession, dir: String,
       bandCol: String, lo: Double, hi: Double,
-      versionAsOf: Option[Long] = None): (DataFrame, Int, Int) =
-    lastCheckpoint(dir) match {
-      // checkpointed tables prune DISTRIBUTED: the checkpoint is
-      // already parquet, so the stats filter runs as a Spark job over
-      // it and the driver holds only the CANDIDATE set — never the
-      // O(live-files) stats strings (~1 GB at a 10⁶-file table)
-      case Some(cp) if versionAsOf.forall(_ >= cp.version) =>
-        readDeltaTablePrunedCheckpointed(spark, dir, cp, bandCol, lo, hi,
-          versionAsOf)
-      case _ =>
-        readDeltaTablePrunedReplayed(spark, dir, bandCol, lo, hi,
-          versionAsOf)
-    }
+      versionAsOf: Option[Long] = None): (DataFrame, Int, Int) = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val (out, cands, live) =
+      prunedScan(spark, dir, versionAsOf, keepStats = true) { meta =>
+        pruneKeepExpr(physicalKey(meta, bandCol), lo, hi)
+      }
+    require(live > 0,
+      s"no live files at version ${versionAsOf.getOrElse("latest")}")
+    (out.filter(col(bandCol).between(lit(lo), lit(hi))), cands, live)
+  }
 
   /** `s` parsed + keep decision over (stats, s) columns — the ONE
-    * prune policy both the replayed and the checkpointed form apply: a
-    * file is skipped only on positive evidence (parseable stats whose
-    * [min,max] misses the band, or a provably all-NULL column);
-    * anything malformed or absent stays must-read. */
+    * stats prune policy: a file is skipped only on positive evidence
+    * (parseable stats whose [min,max] misses the band, or a provably
+    * all-NULL column); anything malformed or absent stays must-read. */
   private def statsParsedSchema: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.DataType.fromDDL(
       "numRecords BIGINT, minValues MAP<STRING,STRING>, " +
@@ -4501,152 +4207,118 @@ object DeltaExport {
     when(allNull, lit(false)).otherwise(mustRead || bandHit)
   }
 
-  /** The band column's stats key: under column mapping the stats maps
-    * are keyed by PHYSICAL names (the protocol rule) — look it up by
-    * physical name or the prune silently degrades to must-read. */
-  private def pruneStatsKey(meta: String, bandCol: String): String =
+  /** A column's key in the log's stats maps and partitionValues: under
+    * column mapping both are keyed by PHYSICAL names (the protocol
+    * rule) — look it up by physical name or a prune silently degrades
+    * (stats to must-read, partitions to no match). */
+  private def physicalKey(meta: String, column: String): String =
     physicalNames(
       org.apache.spark.sql.types.DataType.fromJson(schemaStringOf(meta))
         .asInstanceOf[org.apache.spark.sql.types.StructType],
-      columnMappingMode(meta)).getOrElse(bandCol, bandCol)
+      columnMappingMode(meta)).getOrElse(column, column)
 
-  /** Pruned read via full JSON replay — the non-checkpointed fallback
-    * (young tables, or time travel to before the checkpoint). */
-  private def readDeltaTablePrunedReplayed(spark: SparkSession,
-      dir: String, bandCol: String, lo: Double, hi: Double,
-      versionAsOf: Option[Long]): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions._
-    val st = snapshotState(spark, dir, versionAsOf)
-    val files = st.live.toSeq
-    require(files.nonEmpty,
-      s"no live files at version ${versionAsOf.getOrElse("latest")}")
-    import spark.implicits._
-    val parsed = files.map(f => (f, st.stats.get(f).orNull))
-      .toDF("path", "stats")
-      .withColumn("s", from_json(col("stats"), statsParsedSchema))
-    val keep = pruneKeepExpr(pruneStatsKey(st.meta, bandCol), lo, hi)
-    // bounded collect: one file NAME per candidate — log-scale metadata
-    val candidates = parsed.filter(keep).select(col("path"))
-      .collect().map(_.getString(0)).toSeq.sorted
-    val out = scanFiles(spark, dir, st.meta, candidates, versionAsOf,
-        st.pvals.toMap,
-      st.dvs.toMap)
-      .filter(col(bandCol).between(lit(lo), lit(hi)))
-    (out, candidates.size, files.size)
-  }
-
-  /** Pruned read via the CHECKPOINT — the 100 TB shape: the snapshot
-    * base state is NEVER materialized on the driver. The checkpoint
-    * parquet filters distributed (one Spark job applies the stats
-    * band), only candidate rows (path + partitionValues + DV
-    * descriptor) collect, and the JSON tail after the checkpoint —
-    * bounded by the checkpoint cadence — replays driver-side as
-    * usual. Files the tail touched (re-added with a DV, removed,
-    * compacted) defer to the tail's word over the checkpoint's. */
-  private def readDeltaTablePrunedCheckpointed(spark: SparkSession,
-      dir: String, cp: CheckpointPointer, bandCol: String, lo: Double,
-      hi: Double, versionAsOf: Option[Long]): (DataFrame, Int, Int) = {
+  /** The ONE candidate-file path of the pruned reads: the live
+    * snapshot's add rows `(path, stats, pv, dv)` — `s` the parsed
+    * stats, `pv` the physical-keyed partitionValues, Hive-path parsed
+    * where an add carries none (the [[scanFiles]] rule) — are kept by
+    * `keepOf(meta)` and the candidates scanned.
+    *
+    * Where `_last_checkpoint` covers `versionAsOf`, the rows are the
+    * checkpoint's adds, filtered DISTRIBUTED — the 100 TB shape: the
+    * base state is NEVER materialized on the driver, only candidate
+    * rows (path + partitionValues + DV descriptor) collect — plus the
+    * JSON tail after it (bounded by the checkpoint cadence) replayed
+    * driver-side. Files the tail touched (re-added with a DV, removed,
+    * compacted) defer to the tail's word over the checkpoint's.
+    * Otherwise the replayed JSON log is the row source (young tables,
+    * or time travel to before the checkpoint, which [[snapshotState]]
+    * refuses once the commits it needs are expired). Returns (result,
+    * candidateFiles, liveFiles). */
+  private def prunedScan(spark: SparkSession, dir: String,
+      versionAsOf: Option[Long], keepStats: Boolean)(
+      keepOf: String => org.apache.spark.sql.Column)
+      : (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val cpV = cp.version
-    val versions = logVersions(dir)
-    val cut = versionAsOf.getOrElse((cpV +: versions).max)
-    val missing = ((cpV + 1) to cut).filterNot(versions.contains)
-    require(missing.isEmpty,
-      s"commits after checkpoint v$cpV are missing: ${missing.mkString(",")}")
-    // the tail window: driver-side, O(commits since checkpoint)
-    val tail = new ReplayState
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    ((cpV + 1) to cut).foreach { v =>
-      val lines = new String(
-        Files.readAllBytes(Paths.get(dir, "_delta_log", commitFile(v))),
-        StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty)
-      lines.foreach { l =>
-        if (l.startsWith("""{"add"""")) touched += pathOf(l, "add")
-        else if (l.startsWith("""{"remove""""))
-          touched += pathOf(l, "remove")
+    val (st, cpAdds) =
+      lastCheckpoint(dir).filter(cp => versionAsOf.forall(_ >= cp.version))
+      match {
+        case None =>
+          (snapshotState(spark, dir, versionAsOf, keepStats), None)
+        case Some(cp) =>
+          // the tail window: driver-side, O(commits since checkpoint)
+          val tail = new ReplayState
+          tail.keepStats = keepStats
+          val touched = scala.collection.mutable.LinkedHashSet.empty[String]
+          checkpointTail(dir, cp.version, versionAsOf).foreach { v =>
+            new String(
+              Files.readAllBytes(Paths.get(dir, "_delta_log", commitFile(v))),
+              StandardCharsets.UTF_8).split("\n").foreach { l =>
+              if (l.startsWith("""{"add"""")) touched += pathOf(l, "add")
+              else if (l.startsWith("""{"remove""""))
+                touched += pathOf(l, "remove")
+            }
+            applyCommit(dir, v, tail)
+          }
+          val cpBase = checkpointFrame(spark, dir, cp)
+          // protocol + metaData: an O(1) filtered collect — the only
+          // head rows a reader needs from the whole checkpoint
+          val head = cpBase
+            .filter(col("protocol").isNotNull || col("metaData").isNotNull)
+            .collect()
+          head.flatMap(structField(_, "protocol")).foreach { pr =>
+            checkReaderProtocol(protocolLineOfRow(pr),
+              s"in checkpoint v${cp.version}")
+          }
+          if (tail.meta == null) tail.meta = head
+            .flatMap(structField(_, "metaData")).lastOption
+            .map(metaLineOfRow).orNull
+          require(tail.meta != null,
+            s"checkpoint v${cp.version} carries no metaData")
+          val addT = cpBase.schema.fields.find(_.name == "add")
+            .map(_.dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
+            .getOrElse(new org.apache.spark.sql.types.StructType())
+          def addCol(name: String, tpe: String) =
+            if (addT.fieldNames.contains(name)) col(s"add.$name")
+            else lit(null).cast(tpe)
+          (tail, Some(cpBase.filter(col("add").isNotNull)
+            .select(col("add.path").as("path"),
+              addCol("stats", "string").as("stats"),
+              addCol("partitionValues", "map<string,string>").as("pv"),
+              addCol("deletionVector",
+                "struct<storageType:string,pathOrInlineDv:string," +
+                  "offset:bigint,sizeInBytes:bigint,cardinality:bigint>")
+                .as("dv"))
+            .join(broadcast(touched.toSeq.toDF("path")), Seq("path"),
+              "left_anti")))
       }
-      applyCommit(dir, v, tail)
-    }
-    val paths = checkpointPaths(dir, cp.version, cp.parts)
-    val gone = paths.filterNot(Files.isRegularFile(_))
-    require(gone.isEmpty,
-      s"_last_checkpoint names v$cpV but checkpoint file(s) " +
-        s"${gone.map(_.getFileName).mkString(", ")} are missing")
-    val cpBase = spark.read.option("mergeSchema", "true")
-      .parquet(paths.map(_.toString): _*)
-    // protocol + metaData: an O(1) filtered collect — the only head
-    // rows a reader needs from the whole checkpoint
-    var cpMeta: String = null
-    cpBase.filter(col("protocol").isNotNull || col("metaData").isNotNull)
-      .collect().foreach { r =>
-        structField(r, "protocol").foreach { pr =>
-          checkReaderProtocol(protocolLineOfRow(pr), s"in checkpoint v$cpV")
-        }
-        structField(r, "metaData").foreach(m => cpMeta = metaLineOfRow(m))
-      }
-    val meta = Option(tail.meta).getOrElse(cpMeta)
-    require(meta != null, s"checkpoint v$cpV carries no metaData")
-    val statsKey = pruneStatsKey(meta, bandCol)
-    val keep = pruneKeepExpr(statsKey, lo, hi)
-    val addT = cpBase.schema.fields.find(_.name == "add")
-      .map(_.dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(new org.apache.spark.sql.types.StructType())
-    def addCol(name: String, tpe: String) =
-      if (addT.fieldNames.contains(name)) col(s"add.$name")
-      else lit(null).cast(tpe)
-    val touchedDf = touched.toSeq.toDF("path")
-    val cpAdds = cpBase.filter(col("add").isNotNull)
-      .select(col("add.path").as("path"),
-        addCol("stats", "string").as("stats"),
-        addCol("partitionValues", "map<string,string>").as("pv"),
-        addCol("deletionVector",
-          "struct<storageType:string,pathOrInlineDv:string," +
-            "offset:bigint,sizeInBytes:bigint,cardinality:bigint>")
-          .as("dv"))
-      // tail supersedes checkpoint: a path the tail added (DV re-add,
-      // rewrite) or removed defers to the tail's state
-      .join(broadcast(touchedDf), Seq("path"), "left_anti")
-    // ONE job over the checkpoint: the live total aggregates beside
-    // the candidate rows (collect_list skips the null non-candidates),
-    // so the checkpoint parquet is scanned once, not twice
-    val cpAgg = cpAdds
+    val keep = keepOf(st.meta)
+    // the replayed adds — the whole snapshot, or the checkpoint's tail —
+    // join as a local frame; their vectors are `st.dvs`
+    val replayed = st.live.toSeq
+      .map(f => (f, st.stats.get(f).orNull, st.pvals.get(f).orNull))
+      .toDF("path", "stats", "pv")
+      .withColumn("dv", lit(null).cast(cpAdds.fold[DataType](
+        org.apache.spark.sql.types.NullType)(_.schema("dv").dataType)))
+    val hivePv = udf((p: String) => hivePartitionValues(p))
+    // ONE job: the live total aggregates beside the candidate rows
+    // (collect_list skips the null non-candidates), so the checkpoint
+    // parquet is scanned once, not twice
+    val agg = cpAdds.fold(replayed)(_.unionByName(replayed))
+      .withColumn("pv", coalesce(col("pv"), hivePv(col("path"))))
       .withColumn("s", from_json(col("stats"), statsParsedSchema))
-      .agg(count(lit(1)).as("n"),
-        collect_list(when(keep,
-          struct(col("path"), col("pv"), col("dv")))).as("cands"))
+      .agg(count(lit(1)),
+        collect_list(when(keep, struct(col("path"), col("pv"), col("dv")))))
       .collect().head
-    val liveCp = cpAgg.getLong(0)
-    val cpCands = cpAgg.getSeq[org.apache.spark.sql.Row](1)
-    // tail candidates: the small recent window, pruned driver-side
-    val tailFiles = tail.live.toSeq
-    val tailCands =
-      if (tailFiles.isEmpty) Seq.empty[String]
-      else tailFiles.map(f => (f, tail.stats.get(f).orNull))
-        .toDF("path", "stats")
-        .withColumn("s", from_json(col("stats"), statsParsedSchema))
-        .filter(keep).select(col("path"))
-        .collect().map(_.getString(0)).toSeq
-    val candidates =
-      (cpCands.map(_.getString(0)).toSeq ++ tailCands).sorted
-    require(liveCp + tailFiles.size > 0,
-      s"no live files at version ${versionAsOf.getOrElse("latest")}")
-    val pvals: Map[String, Map[String, String]] =
-      cpCands.flatMap { r =>
-        val i = r.schema.fieldNames.indexOf("pv")
-        if (r.isNullAt(i)) None
-        else Some(r.getString(0) -> r.getMap[String, String](i).toMap)
-      }.toMap ++ tail.pvals
-    val dvs: Map[String, DeletionVectors.Descriptor] =
-      cpCands.flatMap { r =>
-        val i = r.schema.fieldNames.indexOf("dv")
-        if (r.isNullAt(i)) None
-        else Some(r.getString(0) -> dvDescriptorOfRow(r.getStruct(i)))
-      }.toMap ++ tail.dvs
-    val out = scanFiles(spark, dir, meta, candidates, versionAsOf,
-        pvals, dvs)
-      .filter(col(bandCol).between(lit(lo), lit(hi)))
-    (out, candidates.size, (liveCp + tailFiles.size).toInt)
+    val cands = agg.getSeq[org.apache.spark.sql.Row](1)
+    val candidates = cands.map(_.getString(0)).sorted
+    val pvals = cands.map(r => r.getString(0) -> r.getMap[String, String](1)
+      .toMap).toMap
+    val dvs = cands.filterNot(_.isNullAt(2))
+      .map(r => r.getString(0) -> dvDescriptorOfRow(r.getStruct(2)))
+      .toMap ++ st.dvs
+    (scanFiles(spark, dir, st.meta, candidates, versionAsOf, pvals, dvs),
+      candidates.size, agg.getLong(0).toInt)
   }
 
   /** Checkpoint-aware snapshot reconstruction — the real consumer entry
@@ -4667,15 +4339,10 @@ object DeltaExport {
       versionAsOf: Option[Long], keepStats: Boolean = true): ReplayState =
     lastCheckpoint(dir) match {
       case Some(cp) if versionAsOf.forall(_ >= cp.version) =>
-        val cpV = cp.version
-        val versions = logVersions(dir)
-        val cut = versionAsOf.getOrElse((cpV +: versions).max)
-        val missing = ((cpV + 1) to cut).filterNot(versions.contains)
-        require(missing.isEmpty,
-          s"commits after checkpoint v$cpV are missing: ${missing.mkString(",")}")
+        val tail = checkpointTail(dir, cp.version, versionAsOf)
         val st = loadCheckpoint(spark, dir, cp, keepStats)
-        ((cpV + 1) to cut).foreach(v => applyCommit(dir, v, st))
-        require(st.meta != null, s"checkpoint v$cpV carries no metaData")
+        tail.foreach(v => applyCommit(dir, v, st))
+        require(st.meta != null, s"checkpoint v${cp.version} carries no metaData")
         st
       case Some(CheckpointPointer(cpV, _, _)) =>
         val versions = logVersions(dir)
@@ -4897,26 +4564,45 @@ object DeltaExport {
     }
   }
 
-  /** Load a checkpoint (classic single-file or all parts of a
-    * multi-part one) into replay state. Every named part must exist —
-    * loading a subset would silently reconstruct a partial snapshot, so
-    * missing parts fail loudly by name. The collect is bounded: a
+  /** The JSON commits after checkpoint `cpV` up to `versionAsOf`
+    * (latest when None) — the tail a checkpointed snapshot replays on
+    * top of its base. Every one must exist. */
+  private def checkpointTail(dir: String, cpV: Long,
+      versionAsOf: Option[Long]): Seq[Long] = {
+    val versions = logVersions(dir)
+    val tail = (cpV + 1) to versionAsOf.getOrElse((cpV +: versions).max)
+    val missing = tail.filterNot(versions.contains)
+    require(missing.isEmpty,
+      s"commits after checkpoint v$cpV are missing: ${missing.mkString(",")}")
+    tail
+  }
+
+  /** A checkpoint's parquet (classic single-file or all parts of a
+    * multi-part one) as a frame. Every named part must exist — loading
+    * a subset would silently reconstruct a partial snapshot, so missing
+    * parts fail loudly by name. mergeSchema: a foreign MULTI-PART
+    * checkpoint may split action kinds across parts with heterogeneous
+    * file schemas. */
+  private def checkpointFrame(spark: SparkSession, dir: String,
+      cp: CheckpointPointer): DataFrame = {
+    val cls = checkpointPaths(dir, cp.version, cp.parts)
+    val gone = cls.filterNot(Files.isRegularFile(_))
+    require(gone.isEmpty,
+      s"_last_checkpoint names v${cp.version}" +
+        s"${cp.parts.map(n => s" ($n parts)").getOrElse("")} but " +
+        s"checkpoint file(s) ${gone.map(_.getFileName).mkString(", ")} " +
+        "are missing")
+    spark.read.option("mergeSchema", "true").parquet(cls.map(_.toString): _*)
+  }
+
+  /** Load a checkpoint into replay state. The collect is bounded: a
     * checkpoint holds O(live files) metadata rows — the same
     * driver-side cost every Delta reader pays to load a snapshot. */
   private def loadCheckpoint(spark: SparkSession, dir: String,
       cp: CheckpointPointer, keepStats: Boolean = true): ReplayState = {
     import org.apache.spark.sql.functions.{col, lit}
     val v = cp.version
-    val parts = cp.parts
-    val cls = checkpointPaths(dir, v, parts)
-    val gone = cls.filterNot(Files.isRegularFile(_))
-    require(gone.isEmpty,
-      s"_last_checkpoint names v$v${parts.map(n => s" ($n parts)").getOrElse("")} " +
-        s"but checkpoint file(s) ${gone.map(_.getFileName).mkString(", ")} are missing")
-    // mergeSchema: a foreign MULTI-PART checkpoint may split
-    // action kinds across parts with heterogeneous file schemas
-    val cpDf = spark.read.option("mergeSchema", "true")
-      .parquet(cls.map(_.toString): _*)
+    val cpDf = checkpointFrame(spark, dir, cp)
     // the executor-side stats NULLing a no-prune consumer wants — the
     // driver then holds only paths/partitionValues/DV descriptors
     // instead of ~1 KB of stats string per live file (the 10⁶-file

@@ -135,11 +135,6 @@ object Similarity {
   private def planeWeight(p: Column, i: Column): Column =
     pmod(xxhash64(p, i), lit(2000)).cast("double") / 1000.0 - 1.0
 
-  /** Sign-LSH signature: `planes` random-hyperplane sign bits packed into
-    * a long. Nearby vectors (cosine) collide with high probability. */
-  def signBits(v: Column, planes: Int): Column =
-    signBitsTable(v, planes, lit(0))
-
   /** Sign-LSH signature for hash table `table` (a column, so one explode
     * can fan a row out over L independent tables): plane indices are
     * offset by table·planes, giving every table its own hyperplane set.

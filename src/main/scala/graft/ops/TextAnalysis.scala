@@ -37,10 +37,6 @@ object TextAnalysis {
     length(regexp_replace(text, "[^0-9]", "")) / greatest(length(text), lit(1))
   def punctRatio(text: Column): Column =
     length(regexp_replace(text, "[^\\p{Punct}]", "")) / greatest(length(text), lit(1))
-  def upperRatio(text: Column): Column =
-    length(regexp_replace(text, "[^A-Z]", "")) / greatest(length(text), lit(1))
-  def whitespaceRatio(text: Column): Column =
-    length(regexp_replace(text, "[^\\s]", "")) / greatest(length(text), lit(1))
 
   /** Interpreted-HOF let binding: evaluate `v` ONCE per row and hand the
     * bound value to `body` as a lambda variable (a slot read). A Column

@@ -265,7 +265,7 @@ object CdfStream {
   def runIncrementalDedup(
       spark: SparkSession, sourceDir: String, checkpointDir: String,
       keptDir: String, vecCol: String, idCol: String, threshold: Double,
-      centroidRel: DataFrame, probes: Int = 2,
+      centroidRel: DataFrame, probes: Int,
       startingVersion: Long = 0L,
       maxVersionsPerBatch: Int = Int.MaxValue): Seq[CdfBatch] =
     processAllAvailable(spark, sourceDir, checkpointDir, startingVersion,

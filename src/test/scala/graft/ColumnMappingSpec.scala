@@ -839,8 +839,10 @@ class ColumnMappingSpec extends SparkTestBase {
     assert(DeltaExport.readDeltaTable(spark, dir)
       .orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (3L, "C"), (4L, "d")))
-    // COW DELETE takes the same physical path
-    DeltaExport.deleteFromDeltaTable(spark, dir, col("id") === 4L)
+    // a MERGE delete rewrites through the same physical path
+    DeltaExport.mergeDeltaTable(spark,
+      Seq((4L, "d", true)).toDF("id", "s", "del"), dir, Seq("id"),
+      Some("del"))
     assert(DeltaExport.readDeltaTable(spark, dir)
       .orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (3L, "C")))

@@ -133,33 +133,6 @@ class DeletionVectorSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("COW delete rewrites only the files containing matches; time travel intact; no-op refused") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_del_cow").toString
-    val d = (1L to 100L).map(i => (i, s"row $i")).toDF("id", "s")
-    DeltaExport.writeDeltaTable(spark,
-      d.repartitionByRange(4, col("id")), dir)
-    // matches confined to the lowest quarter → exactly one file touched
-    DeltaExport.deleteFromDeltaTable(spark, dir,
-      col("id") <= 25L && col("id") % 5L === 0L)
-    val back = DeltaExport.readDeltaTable(spark, dir)
-    assert(back.count() === 95L)
-    assert(back.filter(col("id") % 5 === 0 && col("id") <= 25).count() === 0L)
-    val commit = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_delta_log",
-        "00000000000000000001.json")), "UTF-8")
-    assert(""""remove":\{""".r.findAllMatchIn(commit).length === 1, commit)
-    assert(DeltaExport.readDeltaTable(spark, dir, Some(0L)).count() === 100L)
-    // a predicate matching nothing is refused, not silently committed
-    val e = intercept[IllegalArgumentException](
-      DeltaExport.deleteFromDeltaTable(spark, dir, col("id") > 1000L))
-    assert(e.getMessage.contains("matched no rows"))
-    // deleting EVERY row of a file leaves a remove with no add — legal
-    DeltaExport.deleteFromDeltaTable(spark, dir, col("id") > 75L)
-    assert(DeltaExport.readDeltaTable(spark, dir).count() === 70L)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("DV delete moves no data, compounds across commits, survives vacuum, spills big vectors to files") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_del_dv").toString
@@ -298,25 +271,7 @@ class DeletionVectorSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("COW delete keeps NULL-predicate rows; DV update SET expressions all see the OLD row; protocol features merge") {
-    // SQL DELETE deletes only where the predicate is TRUE — a row
-    // where it evaluates NULL must be REWRITTEN, not silently dropped
-    val cowDir = java.nio.file.Files
-      .createTempDirectory("graft_del_null").toString
-    Seq((1L, Some("x")), (2L, None), (3L, Some("y")))
-      .toDF("id", "s").repartition(1)
-      .write.mode("overwrite").parquet(cowDir) // placeholder layout
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cowDir))
-    val dir1 = java.nio.file.Files
-      .createTempDirectory("graft_del_null2").toString
-    DeltaExport.writeDeltaTable(spark,
-      Seq((1L, Some("x")), (2L, None), (3L, Some("x"))).toDF("id", "s")
-        .repartition(1), dir1)
-    DeltaExport.deleteFromDeltaTable(spark, dir1, col("s") === "x")
-    val kept = DeltaExport.readDeltaTable(spark, dir1)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(kept === Seq(2L), s"the NULL-predicate row must survive: $kept")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir1))
+  test("DV update SET expressions all see the OLD row; protocol features merge") {
     // UPDATE is simultaneous-assignment: a swap must actually swap
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft_upd_swap").toString
@@ -505,19 +460,23 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(afterMerge.count() === 98L)
     assert(afterMerge.filter(col("id").isin(10L, 60L)).count() === 0L)
     assert(afterMerge.filter(col("s") === "updated").count() === 1L)
-    // file B still carries its vector (only A was rewritten): a DV
-    // re-delete against B's remaining row set still works
-    // COW DELETE touching file B: same materialization rule for id 60
-    DeltaExport.deleteFromDeltaTable(spark, dir, col("id") === 70L) // v3
+    // file B still carries its vector (only A was rewritten). A
+    // copy-on-write delete (MERGE's delete flag) touching file B: same
+    // materialization rule for id 60
+    DeltaExport.mergeDeltaTable(spark,
+      Seq((70L, "row 70", true)).toDF("id", "s", "del"), dir, Seq("id"),
+      Some("del"))                                            // v3
     val afterDel = DeltaExport.readDeltaTable(spark, dir)
     assert(afterDel.count() === 97L)
     assert(afterDel.filter(col("id").isin(10L, 60L, 70L)).count() === 0L)
-    // a COW delete matching ONLY a masked row is a refused no-op —
-    // the vector already deleted it
+    // a copy-on-write delete matching ONLY a masked row is a refused
+    // no-op — the vector already deleted it
     DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 30L) // v4
     val e = intercept[IllegalArgumentException](
-      DeltaExport.deleteFromDeltaTable(spark, dir, col("id") === 30L))
-    assert(e.getMessage.contains("matched no rows"), e.getMessage)
+      DeltaExport.mergeDeltaTable(spark,
+        Seq((30L, "row 30", true)).toDF("id", "s", "del"), dir, Seq("id"),
+        Some("del")))
+    assert(e.getMessage.contains("no-op"), e.getMessage)
     // time travel before the merge still applies the original vectors
     assert(DeltaExport.readDeltaTable(spark, dir, Some(1L)).count() === 98L)
     assert(DeltaExport.readDeltaTable(spark, dir, Some(0L)).count() === 100L)

@@ -74,7 +74,7 @@ class DeltaCdfSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("copy-on-write delete and MERGE on a CDF table match the CDC derivation; appends synthesize inserts") {
+  test("MERGE on a CDF table matches the CDC derivation; appends synthesize inserts") {
     val dir = newCdfTable(10)
     // append-shaped commit: no cdc actions, inserts synthesized
     val vA = DeltaExport.appendDeltaTable(spark,
@@ -82,12 +82,6 @@ class DeltaCdfSpec extends SparkTestBase {
     val cdfA = DeltaExport.readDeltaCdf(spark, dir, vA - 1, Some(vA))
     assert(changeSet(cdfA) ===
       Map((100L, 1000L, "insert") -> 1L, (101L, 1010L, "insert") -> 1L))
-    // COW delete
-    val vD = DeltaExport.deleteFromDeltaTable(spark, dir, col("id") >= 100L)
-    val cdfD = DeltaExport.readDeltaCdf(spark, dir, vD - 1, Some(vD))
-    assert(changeSet(cdfD) === changeSet(
-      DeltaExport.deltaChangesBetween(spark, dir, vD - 1, vD, Seq("id"))))
-    assert(changeSet(cdfD).keys.map(_._3).toSet === Set("delete"))
     // MERGE: one update (id 1), one delete-flag (id 2), one insert
     // (id 50); unmatched carry-over rows of touched files must NOT
     // appear in the feed (they did not change)
@@ -103,10 +97,10 @@ class DeltaCdfSpec extends SparkTestBase {
       (1L, 999L, "update_postimage") -> 1L,
       (2L, 20L, "delete") -> 1L,
       (50L, 500L, "insert") -> 1L))
-    // the WHOLE range in one read spans all three commits, tagged by
-    // commit version
+    // the WHOLE range in one read spans both commits, tagged by commit
+    // version
     val all = DeltaExport.readDeltaCdf(spark, dir, vA - 1, Some(vM))
-    assert(all.select("_commit_version").distinct().count() === 3L)
+    assert(all.select("_commit_version").distinct().count() === 2L)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
@@ -197,11 +191,9 @@ class DeltaCdfSpec extends SparkTestBase {
   test("non-deterministic DML predicates refuse by name; a non-deterministic batch pins so feed == table") {
     val dir = newCdfTable(10)
     // rand() predicates select different rows in every job — refused
-    // (Delta's rule) for both DELETE shapes and UPDATE
+    // (Delta's rule) for DELETE and UPDATE
     for ((nm, op) <- Seq[(String, () => Any)](
         ("dv delete", () => DeltaExport.deleteFromDeltaTableDv(spark, dir,
-          rand() < 0.5)),
-        ("cow delete", () => DeltaExport.deleteFromDeltaTable(spark, dir,
           rand() < 0.5)),
         ("dv update", () => DeltaExport.updateDeltaTableDv(spark, dir,
           rand() < 0.5, Map("bal" -> lit(0L)))))) {

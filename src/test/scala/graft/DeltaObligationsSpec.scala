@@ -36,8 +36,9 @@ class DeltaObligationsSpec extends SparkTestBase {
       Seq((3L, 30.0)).toDF("id", "bal"), dir)
     assert(DeltaExport.readDeltaTable(spark, dir).count() === 3L)
     for ((name, op) <- Seq[(String, () => Any)](
-        ("delete", () => DeltaExport.deleteFromDeltaTable(spark, dir,
-          col("id") === 1L)),
+        ("merge-delete", () => DeltaExport.mergeDeltaTable(spark,
+          Seq((1L, 10.0, true)).toDF("id", "bal", "del"), dir, Seq("id"),
+          Some("del"))),
         ("deleteDv", () => DeltaExport.deleteFromDeltaTableDv(spark, dir,
           col("id") === 1L)),
         ("updateDv", () => DeltaExport.updateDeltaTableDv(spark, dir,
@@ -68,7 +69,7 @@ class DeltaObligationsSpec extends SparkTestBase {
     // since r18 the obligation is HONORED, not refused: the DML triad
     // writes _change_data + cdc actions (contract ≡ CDC derivation,
     // DeltaCdfSpec); only non-emitting writers still refuse
-    val vDel = DeltaExport.deleteFromDeltaTable(spark, dir,
+    val vDel = DeltaExport.deleteFromDeltaTableDv(spark, dir,
       col("id") === 1L)
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(dir, "_change_data")))

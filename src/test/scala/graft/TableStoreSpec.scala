@@ -2029,6 +2029,31 @@ class TableStoreSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  /** (sorted rows, candidates, live) of a pruned read — what a pruned
+    * read must return identically whichever row source it plans from. */
+  private def prunedSnapshot(r: (org.apache.spark.sql.DataFrame, Int, Int))
+      : (Seq[String], Int, Int) =
+    (r._1.collect().map(_.toString).sorted.toSeq, r._2, r._3)
+
+  /** Commit `adds` (paths under `extra/`) as the next version of the
+    * Delta table at `dir`, each path a copy of the table's first data
+    * file under the `from` subdirectory. */
+  private def addForeignCopies(dir: String, adds: Seq[String],
+      from: String = ""): Unit = {
+    val src = new java.io.File(dir, from).listFiles()
+      .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "extra"))
+    adds.foreach { l =>
+      val path = """"path":"([^"]+)"""".r.findFirstMatchIn(l).get.group(1)
+      java.nio.file.Files.copy(src.toPath, java.nio.file.Paths.get(dir, path))
+    }
+    val v = graft.core.DeltaExport.logVersions(dir).max + 1
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(dir, "_delta_log", f"$v%020d.json"),
+      ("""{"commitInfo":{"timestamp":1,"operation":"WRITE"}}""" +: adds)
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
   test("checkpointed pruned read: distributed checkpoint prune matches the replayed prune, tail supersedes") {
     import graft.core.DeltaExport
     val dir = java.nio.file.Files
@@ -2037,7 +2062,17 @@ class TableStoreSpec extends SparkTestBase {
     DeltaExport.writeDeltaTable(spark,
       spark.range(1000).select(col("id"), (col("id") % 7).as("x"))
         .repartitionByRange(4, col("id")), dir)
+    // a foreign add with NO partitionValues and NO stats: must-read in
+    // both row sources (the JSON log before the checkpoint, the
+    // checkpoint parquet after it)
+    addForeignCopies(dir, Seq(
+      """{"add":{"path":"extra/nostats.parquet","size":1,"modificationTime":1,"dataChange":true}}"""))
+    val before = prunedSnapshot(DeltaExport.readDeltaTablePruned(
+      spark, dir, "id", 0.0, 300.0))
+    assert(before._2 < before._3, s"cand=${before._2} live=${before._3}")
     DeltaExport.checkpointDeltaTable(spark, dir)
+    assert(prunedSnapshot(DeltaExport.readDeltaTablePruned(
+      spark, dir, "id", 0.0, 300.0)) === before)
     // TAIL commits after the checkpoint: an append inside the band and
     // a DV delete that re-adds one checkpoint file with a vector (the
     // tail's word must supersede the checkpoint row for that file)
@@ -2047,7 +2082,8 @@ class TableStoreSpec extends SparkTestBase {
     DeltaExport.deleteFromDeltaTableDv(spark, dir, col("id") === 100L)
     val (out, cand, live) = DeltaExport.readDeltaTablePruned(
       spark, dir, "id", 0.0, 300.0)
-    // band 0-300 hits ~2 of the 4 clustered files, not the 2000s append
+    // band 0-300 hits ~2 of the 4 clustered files and the stats-less
+    // copy, not the 2000s append
     assert(cand < live, s"cand=$cand live=$live")
     val expected = DeltaExport.readDeltaTable(spark, dir)
       .filter(col("id").between(0L, 300L))
@@ -2068,14 +2104,28 @@ class TableStoreSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_delta_cpppr").toString
     DeltaExport.writeDeltaTablePartitioned(spark,
-      Seq((1L, "en"), (2L, "en"), (3L, "fr"), (4L, "de"))
+      Seq((1L, "en"), (2L, "en"), (3L, "fr"), (4L, "de"), (6L, null))
         .toDF("id", "lang").repartition(1), dir, Seq("lang"))
-    // the REPLAYED prune result is the contract the checkpointed one
-    // must match
-    val (r0, c0, l0) = DeltaExport.readDeltaTablePartitionPruned(
-      spark, dir, Map("lang" -> "en"))
-    val expect = r0.orderBy("id").collect().toSeq
+    // two foreign adds of a copy of the fr file: one whose
+    // partitionValues lack the column, one with none at all. The scan
+    // attaches a NULL lang to both, so the prune must treat them as
+    // null partitions — before the checkpoint and after it alike
+    addForeignCopies(dir, Seq(
+      """{"add":{"path":"extra/nokey.parquet","partitionValues":{"other":"x"},"size":1,"modificationTime":1,"dataChange":true}}""",
+      """{"add":{"path":"extra/nopv.parquet","size":1,"modificationTime":1,"dataChange":true}}"""),
+      from = "lang=fr")
+    val filters = Seq(Map("lang" -> "en"), Map("lang" -> (null: String)))
+    def prunes = filters.map(f => prunedSnapshot(
+      DeltaExport.readDeltaTablePartitionPruned(spark, dir, f)))
+    val before = prunes
+    val nullRows = DeltaExport.readDeltaTable(spark, dir)
+      .filter(col("lang").isNull).collect().map(_.toString).sorted.toSeq
+    assert(before(1)._1 === nullRows && before(1)._2 === 3,
+      s"null filter: ${before(1)}")
     DeltaExport.checkpointDeltaTable(spark, dir)
+    assert(prunes === before)
+    assert(before.head._1 === Seq("[1,en]", "[2,en]") &&
+      before.head._2 < before.head._3, s"en filter: ${before.head}")
     // tail: one more en row + a DV delete inside en
     DeltaExport.appendDeltaTablePartitioned(spark,
       Seq((5L, "en")).toDF("id", "lang"), dir)
@@ -2089,7 +2139,6 @@ class TableStoreSpec extends SparkTestBase {
       DeltaExport.readDeltaTablePartitionPruned(spark, dir,
         Map("id" -> "1")))
     assert(e.getMessage.contains("not partition columns"), e.getMessage)
-    assert(expect.map(_.getLong(0)).toSeq === Seq(1L, 2L) && c0 <= l0)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
